@@ -30,8 +30,8 @@ so for each copy length L in 4..24:
     decompositions across the probe words.
 
 Output: ``yark_spark/operators/brotli_dict.py`` — a GENERATED module
-embedding the dictionary (zlib+base85, self-contained stdlib loader so
-the module ships to executors by value) plus NDBITS offsets and the
+embedding the dictionary (zlib+base85, self-contained stdlib loader)
+plus NDBITS offsets and the
 transform table. Re-run this script to regenerate; nothing in the
 output is hand-transcribed.
 

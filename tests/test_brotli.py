@@ -177,12 +177,10 @@ def test_typed_errors():
 
 def test_http_br_content_coding():
     from yark_spark.operators.containers import (
-        bind_brotli,
         http_message_build,
         http_message_decode,
     )
 
-    bind_brotli()
     body = ("the quick brown fox jumps over the lazy dog " * 50).encode()
     for chunked in (False, True):
         msg = http_message_build(

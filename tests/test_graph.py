@@ -315,6 +315,7 @@ def test_edge_materialization_is_aqe_sized_columnar(spark, monkeypatch):
     from yark_spark.operators.release import release_tracked
 
     KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    before = spark.conf.get(KEY)
     persist_confs, ckpt_levels = [], []
     real_persist = DataFrame.persist
     real_ckpt = DataFrame.localCheckpoint
@@ -347,8 +348,8 @@ def test_edge_materialization_is_aqe_sized_columnar(spark, monkeypatch):
     release_tracked()
     assert persist_confs and persist_confs[0] == "true", persist_confs
 
-    # the scope restored the session default
-    assert spark.conf.get(KEY, "false") == "false"
+    # the scope restored the value the session had before
+    assert spark.conf.get(KEY) == before
     # any surviving localCheckpoint with an explicit level is serialized
     for lvl in ckpt_levels:
         if lvl is not None:

@@ -15,7 +15,6 @@ import zlib as _zlib
 import pytest
 
 from yark_spark.operators.containers import (
-    bind_zstd,
     http_dechunk,
     http_message_build,
     http_message_decode,
@@ -49,8 +48,6 @@ def test_dechunk_rejects_bad_size_and_framing():
 def test_roundtrip_every_wire_shape():
     for chunked in (False, True):
         for enc in (None, "gzip", "deflate", "zstd"):
-            if enc == "zstd":
-                bind_zstd()
             blk = http_message_build(
                 BODY, transfer_chunked=chunked, content_encoding=enc
             )

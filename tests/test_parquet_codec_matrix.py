@@ -85,9 +85,6 @@ def test_lz4_hadoop_multiblock_and_raw_fallback():
         for p in parts
     )
     whole = b"".join(parts)
-    import yark_spark.operators.parquet_data as _pd
-
-    _pd.bind_codecs()
     assert _lz4_hadoop_decompress(framed, len(whole)) == whole
     # raw-block payload (old parquet-cpp): frame walk fails, falls back
     raw = lz4_block_compress(whole)

@@ -602,9 +602,8 @@ def test_ndarray_columns_write_identical_bytes():
     writer now hands numeric columns over as numpy arrays."""
     import numpy as np
 
-    from yark_spark.operators.parquet_write import bind_codecs, parquet_write
+    from yark_spark.operators.parquet_write import parquet_write
 
-    bind_codecs()
     n = 20_000
     cases = [
         # high-cardinality int64 (dictionary rejected)

@@ -14,7 +14,6 @@ from yark_spark.operators.zip_archive import (
     _BZIP2,
     _LZMA,
     _ZSTD,
-    bind_methods,
     zip_build,
     zip_members,
 )
@@ -44,7 +43,6 @@ def test_stdlib_written_members_decode(zf_method, our_method):
 
 @pytest.mark.parametrize("method", [_BZIP2, _LZMA, _ZSTD])
 def test_our_members_roundtrip(method):
-    bind_methods()
     blob = zip_build(MEMBERS, methods=[method] * len(MEMBERS))
     got = zip_members(blob)
     assert [(n, d) for n, _m, d in got] == MEMBERS
@@ -56,7 +54,6 @@ def test_our_members_roundtrip(method):
     [(zipfile.ZIP_BZIP2, _BZIP2), (zipfile.ZIP_LZMA, _LZMA)],
 )
 def test_stdlib_reads_our_members(zf_method, our_method):
-    bind_methods()
     blob = zip_build(MEMBERS, methods=[our_method] * len(MEMBERS))
     with zipfile.ZipFile(io.BytesIO(blob)) as z:
         for name, payload in MEMBERS:

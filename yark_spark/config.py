@@ -73,10 +73,3 @@ def save(path: str, cfg: JobConfig) -> None:
     with open(path, "w") as f:
         json.dump(asdict(cfg), f, indent=2, sort_keys=True)
 
-
-def apply_to_session(spark, cfg: JobConfig) -> None:
-    spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-    spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold",
-        str(cfg.broadcast_threshold_mb * 1024 * 1024),
-    )

@@ -65,17 +65,6 @@ def parse_upload_date(col: Column) -> Column:
     )
 
 
-def seconds_to_unit(col: Column) -> Column:
-    """X12 (`utils.py:27-39`): humanize a duration — value + unit struct,
-    truncated to one decimal (floor(t*10)/10)."""
-    trunc1 = lambda c: F.floor(c * 10) / 10  # noqa: E731
-    return (
-        F.when(col < 60, F.struct(trunc1(col).alias("t"), F.lit("sec").alias("unit")))
-        .when(col < 3600, F.struct(trunc1(col / 60).alias("t"), F.lit("min").alias("unit")))
-        .otherwise(F.struct(trunc1(col / 3600).alias("t"), F.lit("hr").alias("unit")))
-    )
-
-
 def pseudonymize(col: Column, salt: str = "yark") -> Column:
     """Stable pseudonymous key: first 16 hex chars of salted SHA-256 over
     the stringified value. Deterministic, so referential joins survive

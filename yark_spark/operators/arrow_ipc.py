@@ -92,14 +92,6 @@ def _i64(b, o):
     return struct.unpack_from("<q", b, o)[0]
 
 
-def _f32(b, o):
-    return struct.unpack_from("<f", b, o)[0]
-
-
-def _f64(b, o):
-    return struct.unpack_from("<d", b, o)[0]
-
-
 def _root(b: bytes, base: int = 0) -> int:
     """Root table position: uoffset at the buffer head."""
     return base + _u32(b, base)
@@ -265,20 +257,6 @@ def _parse_schema(b: bytes, table: int) -> list[dict]:
 # record-batch body decode
 # ---------------------------------------------------------------------------
 
-_LZ4 = None
-_ZSTD = None
-
-
-def bind_codecs():
-    """Driver-side codec binding (the containers.bind_zstd pattern)."""
-    global _LZ4, _ZSTD
-    if _LZ4 is None:
-        from yark_spark.operators import lz4 as _l
-        from yark_spark.operators import zstd as _z
-
-        _LZ4, _ZSTD = _l, _z
-
-
 def _buffer(body: bytes, off: int, length: int, codec: int | None) -> bytes:
     raw = body[off : off + length]
     if codec is None or length == 0:
@@ -286,11 +264,14 @@ def _buffer(body: bytes, off: int, length: int, codec: int | None) -> bytes:
     unc = _i64(raw, 0)
     if unc == -1:  # below compression threshold: stored as-is
         return raw[8:]
-    bind_codecs()
     if codec == 0:  # LZ4_FRAME
-        out = _LZ4.lz4_frame_decompress(raw[8:], max_output=max(unc, 1))
+        from yark_spark.operators.lz4 import lz4_frame_decompress
+
+        out = lz4_frame_decompress(raw[8:], max_output=max(unc, 1))
     elif codec == 1:  # ZSTD
-        out = b"".join(_ZSTD.zstd_frames(raw[8:], max_output=max(unc, 1)))
+        from yark_spark.operators.zstd import zstd_frames
+
+        out = b"".join(zstd_frames(raw[8:], max_output=max(unc, 1)))
     else:
         raise NotImplementedError(f"arrow-ipc: compression codec {codec}")
     if len(out) != unc:
@@ -1036,16 +1017,18 @@ def _batch_message(
     codec_id = {None: None, "lz4": 0, "zstd": 1}[compression]
     body = bytearray()
     bufmeta: list[tuple[int, int]] = []
-    bind_codecs()
+    from yark_spark.operators.lz4 import lz4_frame_compress
+    from yark_spark.operators.zstd import zstd_compress
+
     for raw in raw_buffers:
         if codec_id is None:
             payload = raw
         elif not raw:
             payload = b""
         elif codec_id == 0:
-            payload = struct.pack("<q", len(raw)) + _LZ4.lz4_frame_compress(raw)
+            payload = struct.pack("<q", len(raw)) + lz4_frame_compress(raw)
         else:
-            payload = struct.pack("<q", len(raw)) + _ZSTD.zstd_compress(
+            payload = struct.pack("<q", len(raw)) + zstd_compress(
                 raw, method="compressed"
             )
         bufmeta.append((len(body), len(payload)))

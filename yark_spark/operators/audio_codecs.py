@@ -9,8 +9,8 @@ entropy-coded psychoacoustic codecs (MP3/AAC need an audio library),
 but the three telephony/RIFF codecs above are fixed table/bit
 arithmetic from public specs (ITU-T G.711; IMA ADPCM as used by the
 ``WAVE_FORMAT_IMA_ADPCM`` block layout) and decode exactly like the
-image codecs beside them: pure numpy, shipped to executors **by value**
-(cloudpickle), typed ``ValueError`` on malformed payloads.
+image codecs beside them: pure numpy, typed ``ValueError`` on
+malformed payloads.
 
 Reference parity note: the reference archiver stores media bytes
 opaquely (/root/reference/cmds/archive.py:88-91); decoding them is

@@ -288,38 +288,19 @@ def _codec_compress(codec: str, raw: bytes) -> bytes:
         return zlib_compress(raw)[2:-4]
     if codec == "snappy":  # spec: big-endian CRC-32 of the UNCOMPRESSED data
         return snappy_compress(raw) + struct.pack(">I", crc32(raw))
+    # zstd/xz import lazily: avro's import must stay cheap for the many
+    # readers that never touch those codecs
     if codec == "zstd":
-        return _bind_zstd()[0](raw, method="compressed")
+        from yark_spark.operators.zstd import zstd_compress
+
+        return zstd_compress(raw, method="compressed")
     if codec == "bzip2":
         return bz2_compress(raw)
     if codec == "xz":
-        return _bind_xz()[0](raw)
+        from yark_spark.operators.xz import xz_compress
+
+        return xz_compress(raw)
     raise ValueError(f"avro: unknown codec {codec!r}")
-
-
-# zstd/xz bind lazily and ship with the module by value (the
-# containers.bind_zstd pattern) — avro's import must stay cheap for
-# the many readers that never touch those codecs
-_ZSTD_PAIR = None
-_XZ_PAIR = None
-
-
-def _bind_zstd():
-    global _ZSTD_PAIR
-    if _ZSTD_PAIR is None:
-        from yark_spark.operators.zstd import zstd_compress, zstd_frames
-
-        _ZSTD_PAIR = (zstd_compress, zstd_frames)
-    return _ZSTD_PAIR
-
-
-def _bind_xz():
-    global _XZ_PAIR
-    if _XZ_PAIR is None:
-        from yark_spark.operators.xz import xz_compress, xz_decompress
-
-        _XZ_PAIR = (xz_compress, xz_decompress)
-    return _XZ_PAIR
 
 
 def _codec_decompress(codec: str, data: bytes, max_output: int | None) -> bytes:
@@ -336,13 +317,15 @@ def _codec_decompress(codec: str, data: bytes, max_output: int | None) -> bytes:
             raise ValueError("avro: snappy block CRC mismatch")
         return raw
     if codec == "zstd":
-        return b"".join(
-            _bind_zstd()[1](data, max_output=max_output or (1 << 28))
-        )
+        from yark_spark.operators.zstd import zstd_frames
+
+        return b"".join(zstd_frames(data, max_output=max_output or (1 << 28)))
     if codec == "bzip2":
         return bz2_decompress(data, max_output=max_output or (1 << 28))
     if codec == "xz":
-        return _bind_xz()[1](data, max_output=max_output or (1 << 28))
+        from yark_spark.operators.xz import xz_decompress
+
+        return xz_decompress(data, max_output=max_output or (1 << 28))
     raise ValueError(f"avro: unknown codec {codec!r}")
 
 

@@ -51,38 +51,7 @@ from __future__ import annotations
 
 from yark_spark.operators.png import _limited_code_lengths
 
-__all__ = ["brotli_compress", "brotli_decompress", "bind_dict"]
-
-
-_DICT_DATA = None  # (DICT, NDBITS, OFFSETS, TRANSFORMS) — bound lazily
-
-
-def bind_dict():
-    """Resolve the extracted static-dictionary DATA into a module
-    global (plain bytes/dicts/lists so by-value pickling of this
-    module carries them — the containers.bind_zstd pattern). Call
-    driver-side before shipping this module to executors; decode
-    paths also call it lazily for driver-local use."""
-    global _DICT_DATA
-    if _DICT_DATA is None:
-        from yark_spark.operators import brotli_dict as _bd
-
-        _DICT_DATA = (_bd.DICT, _bd.NDBITS, _bd.OFFSETS, _bd.TRANSFORMS)
-    return _DICT_DATA
-
-
-_CTX_DATA = None  # (UTF8_LUT0, UTF8_LUT1, SIGNED_LUT) — bound lazily
-
-
-def bind_ctx():
-    """Resolve the extracted UTF8/SIGNED literal-context tables (see
-    scripts/extract_brotli_context.py) — same pattern as bind_dict."""
-    global _CTX_DATA
-    if _CTX_DATA is None:
-        from yark_spark.operators import brotli_dict as _bd
-
-        _CTX_DATA = (_bd.CTX_UTF8_LUT0, _bd.CTX_UTF8_LUT1, _bd.CTX_SIGNED_LUT)
-    return _CTX_DATA
+__all__ = ["brotli_compress", "brotli_decompress"]
 
 
 def _ferment(buf: bytearray, pos: int) -> int:
@@ -447,6 +416,18 @@ _LSB6, _MSB6, _UTF8, _SIGNED = 0, 1, 2, 3
 
 
 def brotli_decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
+    # function-local: scripts/extract_brotli_*.py import this module to
+    # generate brotli_dict
+    from yark_spark.operators.brotli_dict import (
+        CTX_SIGNED_LUT,
+        CTX_UTF8_LUT0,
+        CTX_UTF8_LUT1,
+        DICT,
+        NDBITS,
+        OFFSETS,
+        TRANSFORMS,
+    )
+
     r = _Reader(bytes(data))
     # window size (§9.1)
     if r.read(1) == 0:
@@ -551,11 +532,9 @@ def brotli_decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
                     elif mode == _MSB6:
                         ctx = p1 >> 2
                     elif mode == _UTF8:
-                        u0, u1, _sg = bind_ctx()
-                        ctx = u0[p1] | u1[p2]
+                        ctx = CTX_UTF8_LUT0[p1] | CTX_UTF8_LUT1[p2]
                     else:  # _SIGNED
-                        _u0, _u1, sg = bind_ctx()
-                        ctx = (sg[p1] << 3) | sg[p2]
+                        ctx = (CTX_SIGNED_LUT[p1] << 3) | CTX_SIGNED_LUT[p2]
                     tree = cmap_l[lit.btype * 64 + ctx]
                 out.append(lit_codes[tree].decode(r))
                 produced += 1
@@ -596,19 +575,18 @@ def brotli_decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
                 # all 121 transforms were EXTRACTED from the
                 # container's real C brotli by scripts/
                 # extract_brotli_dict.py — see operators/brotli_dict
-                dict_bytes, ndbits, offsets, transforms = bind_dict()
                 if not 4 <= cp_len <= 24:
                     raise ValueError(
                         f"brotli: no dictionary words of length {cp_len}"
                     )
                 address = distance - max_dist - 1
-                nd = ndbits[cp_len]
+                nd = NDBITS[cp_len]
                 transform_id = address >> nd
-                if transform_id >= len(transforms):
+                if transform_id >= len(TRANSFORMS):
                     raise ValueError("brotli: dictionary address out of range")
-                base = offsets[cp_len] + cp_len * (address & ((1 << nd) - 1))
-                word = dict_bytes[base : base + cp_len]
-                piece = _transform_word(word, transforms[transform_id])
+                base = OFFSETS[cp_len] + cp_len * (address & ((1 << nd) - 1))
+                word = DICT[base : base + cp_len]
+                piece = _transform_word(word, TRANSFORMS[transform_id])
                 if produced + len(piece) > mlen:
                     raise ValueError(
                         "brotli: dictionary word overruns meta-block length"

@@ -12,11 +12,6 @@ retries, repartitioning, and re-execution. A column-expression variant
 with an md5 window rule (`cdc_boundaries_expr`) pins the boundary algebra
 against the DuckDB oracle on a bounded slice (`q_cdc_boundaries`); the
 rolling-hash path is the production shape (`q_cdc_chunks`, rows-only).
-
-The numeric kernels are built by closure FACTORIES (not module-level
-functions referenced from the UDF): cloudpickle ships dynamic closures by
-value, so Python workers never need to import this package — required
-because the driver may run from any cwd.
 """
 
 from __future__ import annotations
@@ -35,7 +30,7 @@ _WORD = 1 << 64
 
 def _make_candidate_fn(window: int, mask_bits: int):
     """Build the vectorized boundary-candidate kernel as a self-contained
-    closure (safe to ship to Python workers by value)."""
+    closure."""
     base, word = _BASE, _WORD
     binv = pow(_BASE, -1, _WORD)
     bw = pow(_BASE, window, _WORD)
@@ -83,11 +78,6 @@ def _make_candidate_fn(window: int, mask_bits: int):
         return (np.nonzero((wh & mask) == 0)[0] + (window - 1)).astype(np.int64)
 
     return boundary_candidates
-
-
-def _boundary_candidates(data, window: int, mask_bits: int):
-    """Driver-side convenience wrapper over the kernel (tests/bench)."""
-    return _make_candidate_fn(window, mask_bits)(data)
 
 
 def cdc_chunks(

@@ -9,8 +9,8 @@ framing around the DEFLATE stream ``operators/png`` already implements
 from scratch (round 11's LZ77 + length-limited dynamic Huffman
 encoder), and ustar is 512-byte headers with octal fields — so the
 engine reads real-world shard bytes with no external library, same
-design rules as the codecs (ship by value, typed ``ValueError`` on
-malformed payloads, bomb guard via ``max_output``).
+design rules as the codecs (typed ``ValueError`` on malformed
+payloads, bomb guard via ``max_output``).
 
 Reference parity note: the reference stores fetched bytes opaquely
 (/root/reference/cmds/archive.py:88-91); shard ingest is mandate-side
@@ -129,9 +129,7 @@ def gzip_decompress(payload: bytes, max_output: int | None = None) -> bytes:
 def surt_key(uri: str) -> str:
     """SURT canonicalization (the CDX urlkey convention, round 13):
     scheme dropped, host lower-cased and dot-reversed with commas,
-    default ports stripped, ``)`` before the path. Lives here (not in
-    multimodal) so it ships by value with the container module to
-    vanilla-session workers."""
+    default ports stripped, ``)`` before the path."""
     rest = uri.split("://", 1)[-1]
     host, _, path = rest.partition("/")
     host = host.lower()
@@ -349,94 +347,19 @@ def warc_records(payload: bytes, max_output: int | None = None) -> list[dict]:
 # ---------------------------------------------------------------------------
 
 
-_ZSTD = None  # bound by bind_zstd(); ships by value with this module
-
-
-def bind_zstd():
-    """Resolve the zstd codec module into a module global (imported
-    lazily to keep containers importable standalone), so executors that
-    receive THIS module by value carry the codec along instead of
-    attempting a worker-side package import — the operators/zstd
-    bind_encoder() pattern."""
-    global _ZSTD
-    if _ZSTD is None:
-        from yark_spark.operators import zstd as _z
-
-        _z.bind_encoder()
-        _ZSTD = _z
-    return _ZSTD
-
-
 def zstd_compress_member(raw: bytes, method: str = "compressed") -> bytes:
     """One zstd frame for ``raw`` — the .jsonl.zst wire shape (see
     operators/zstd for the codec; content checksum always on)."""
-    return bind_zstd().zstd_compress(raw, method=method)
+    from yark_spark.operators.zstd import zstd_compress
+
+    return zstd_compress(raw, method=method)
 
 
 def zstd_decompress_member(payload: bytes, max_output: int | None = None) -> bytes:
     """Single zstd frame → raw bytes (checksums verified; bomb guard)."""
-    return bind_zstd().zstd_decompress(payload, max_output=max_output)
+    from yark_spark.operators.zstd import zstd_decompress
 
-
-_BZ2 = None  # bound by bind_bzip2(); ships by value with this module
-
-
-_BROTLI = None  # bound by bind_brotli(); ships by value with this module
-
-
-def bind_brotli():
-    """Also binds the extracted static dictionary + context tables so
-    by-value shipping carries complete decode. Resolve the brotli
-    codec module into a module global (the
-    bind_zstd pattern) — the HTTP ``br`` content-coding (round 14)."""
-    global _BROTLI
-    if _BROTLI is None:
-        from yark_spark.operators import brotli as _b
-
-        _b.bind_dict()
-        _b.bind_ctx()
-        _BROTLI = _b
-    return _BROTLI
-
-
-def bind_bzip2():
-    """Resolve the bzip2 codec module into a module global (the
-    bind_zstd pattern)."""
-    global _BZ2
-    if _BZ2 is None:
-        from yark_spark.operators import bzip2 as _b
-
-        _BZ2 = _b
-    return _BZ2
-
-
-_XZ = None  # bound by bind_xz(); ships by value with this module
-
-
-def bind_xz():
-    """Resolve the xz/LZMA codec module into a module global (the
-    bind_zstd pattern)."""
-    global _XZ
-    if _XZ is None:
-        from yark_spark.operators import xz as _x
-
-        _XZ = _x
-    return _XZ
-
-
-_LZ4 = None  # bound by bind_lz4(); ships by value with this module
-
-
-def bind_lz4():
-    """Resolve the LZ4 codec module into a module global (the bind_zstd
-    pattern — lazy so containers stays importable standalone, bound so
-    executors that receive THIS module by value carry the codec)."""
-    global _LZ4
-    if _LZ4 is None:
-        from yark_spark.operators import lz4 as _l
-
-        _LZ4 = _l
-    return _LZ4
+    return zstd_decompress(payload, max_output=max_output)
 
 
 def decompress_auto(payload: bytes, max_output: int | None = None) -> bytes:
@@ -452,18 +375,26 @@ def decompress_auto(payload: bytes, max_output: int | None = None) -> bytes:
     if p[:2] == b"\x1f\x8b":
         return gzip_decompress(p, max_output=max_output)
     if p[:3] == b"BZh":
+        from yark_spark.operators.bzip2 import bz2_decompress
+
         kw = {} if max_output is None else {"max_output": max_output}
-        return bind_bzip2().bz2_decompress(p, **kw)
+        return bz2_decompress(p, **kw)
     if p[:6] == b"\xfd7zXZ\x00":
+        from yark_spark.operators.xz import xz_decompress
+
         kw = {} if max_output is None else {"max_output": max_output}
-        return bind_xz().xz_decompress(p, **kw)
+        return xz_decompress(p, **kw)
     if len(p) >= 4:
         magic = struct.unpack_from("<I", p)[0]
         if magic == 0xFD2FB528 or 0x184D2A50 <= magic <= 0x184D2A5F:
-            return b"".join(bind_zstd().zstd_frames(p, max_output=max_output))
+            from yark_spark.operators.zstd import zstd_frames
+
+            return b"".join(zstd_frames(p, max_output=max_output))
         if magic == 0x184D2204:
+            from yark_spark.operators.lz4 import lz4_frame_decompress
+
             kw = {} if max_output is None else {"max_output": max_output}
-            return bind_lz4().lz4_frame_decompress(p, **kw)
+            return lz4_frame_decompress(p, **kw)
     return p
 
 
@@ -539,7 +470,9 @@ def _content_decode(coding: str, data: bytes, max_output: int | None) -> bytes:
         # from-scratch RFC 7932 (round 14); streams referencing the
         # static dictionary or the UTF8/SIGNED context tables raise
         # typed NotImplementedError inside → quarantine, never mojibake
-        out = bind_brotli().brotli_decompress(
+        from yark_spark.operators.brotli import brotli_decompress
+
+        out = brotli_decompress(
             data, max_output=max_output if max_output else 1 << 28
         )
         if max_output is not None and len(out) > max_output:
@@ -619,7 +552,9 @@ def http_message_build(
         elif enc == "zstd":
             payload = zstd_compress_member(payload)
         elif enc == "br":
-            payload = bind_brotli().brotli_compress(payload)
+            from yark_spark.operators.brotli import brotli_compress
+
+            payload = brotli_compress(payload)
         else:
             raise ValueError(f"http-build: content-coding {enc!r}")
         headers.append(f"Content-Encoding: {content_encoding}")

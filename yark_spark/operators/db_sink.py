@@ -30,6 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from yark_spark.schemas import ALL_TABLES, WRITE_ORDER
+from yark_spark.session import ship_package
 
 #: Primary keys per table (reference parity: `schema.sql` PK columns).
 PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
@@ -175,6 +176,7 @@ def write_partitioned(
         finally:
             conn.close()
 
+    ship_package(df.sparkSession)  # _write calls _coerce_row on workers
     df.select(*names).foreachPartition(_write)
 
 

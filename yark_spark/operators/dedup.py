@@ -230,21 +230,6 @@ def minhash_lsh_candidates(
     return out
 
 
-def minhash_jaccard_estimate(
-    sig: DataFrame, pairs: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """Estimated Jaccard for candidate pairs = fraction of matching
-    signature components (zip_with equality count over the two signature
-    arrays). Two joins against the (small, cached) signature table."""
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("mhs").alias("mha"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("mhs").alias("mhb"))
-    j = pairs.join(sa, "id_a").join(sb, "id_b")
-    matches = F.size(
-        F.filter(F.zip_with("mha", "mhb", lambda x, y: x == y), lambda v: v)
-    )
-    return j.select("id_a", "id_b", (matches / F.lit(num_hashes)).alias("est_jaccard"))
-
-
 def fuzzy_dedup_pairs(
     df: DataFrame,
     id_col: str,

@@ -23,9 +23,9 @@ Oracle recipe (the constructed-exact pattern from operators/
 audio_codecs): FLAC is lossless, so ANY fixture decodes bit-exactly —
 the md5-ascii-sample fixture used for PCM WAV works unchanged, and the
 same analytic SQL truth (peak/RMS over ascii codes) pins the whole
-sync→subframe→Rice→decorrelate wire. Everything ships to executors by
-value (cloudpickle); malformed payloads raise typed ValueError so the
-decode quarantine (operators/multimodal) can keep corrupt rows as rows.
+sync→subframe→Rice→decorrelate wire. Malformed payloads raise typed
+ValueError so the decode quarantine (operators/multimodal) can keep
+corrupt rows as rows.
 """
 
 from __future__ import annotations

@@ -8,9 +8,7 @@ GIF is the fourth real-world container beside the JPEG
 codecs this engine already decodes from scratch. Same design rules as
 those three:
 
-* pure Python/numpy, self-contained module shipped to executors **by
-  value** (cloudpickle ``register_pickle_by_value``) so workers never
-  import the package;
+* pure Python/numpy, self-contained module;
 * the encoder exists to build **constructed-exact oracle fixtures** and
   pin the decoder by roundtrip — GIF's LZW is lossless, so decoded
   pixels equal encoded pixels bit-for-bit and an analytic (no image

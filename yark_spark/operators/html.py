@@ -24,7 +24,7 @@ parser: tags are delimiters, never semantics. Rules:
   stray ``<`` that cannot open a tag is literal text (the HTML5
   less-than-sign-in-data rule).
 
-Ships to executors by value; pure stdlib.
+Pure stdlib.
 """
 
 from __future__ import annotations
@@ -155,8 +155,7 @@ def html_page_fixture(did: int, text: str) -> str:
     """The deterministic page skeleton the HTML fixture keys share (see
     multimodal.with_html_payload for the trap inventory — RAWTEXT
     script, comment, indentation, inline <em>, numeric reference);
-    :func:`html_to_text` recovers ``text`` byte-exactly. Lives here so
-    closures over it ship by value with the codec module."""
+    :func:`html_to_text` recovers ``text`` byte-exactly."""
     esc = _htmlmod.escape(text)
     head, sep, tail = esc.partition(" ")
     body = f"{head}&#32;<em>{tail}</em>" if sep else esc

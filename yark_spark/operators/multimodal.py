@@ -59,9 +59,7 @@ FEATURE_SCHEMA = StructType(
 
 
 def _make_decoder():
-    """Build the pure-numpy image decoder as a self-contained closure
-    (cloudpickle ships it BY VALUE, so Python workers never import this
-    package — same pattern as chunking's kernels).
+    """Build the pure-numpy image decoder closure.
 
     Supports PGM (P5) / PPM (P6) binary netpbm (8- and 16-bit), BMP
     with BI_RGB at 8/24/32 bpp, BI_RLE8/BI_RLE4 runs, and BI_BITFIELDS
@@ -254,77 +252,32 @@ def _make_decoder():
         px = rows[:, : width * nch].reshape(height, width, nch)
         return px[:, :, 2::-1].copy()  # BGR(A) -> RGB (alpha dropped)
 
-    # baseline JPEG (r8): the pure-numpy T.81 codec in operators/jpeg —
-    # registered by value so workers get it inside the closure without
-    # importing this package (stateful.py's cloudpickle pattern)
-    try:
-        from pyspark import cloudpickle as _cp
+    # baseline JPEG (r8): the pure-numpy T.81 codec in operators/jpeg
+    from yark_spark.operators.jpeg import decode_jpeg as _decode_jpeg
 
-        from yark_spark.operators import jpeg as _jpeg_mod
+    # lossless WebP (r10): the pure-Python VP8L codec in operators/webp
+    # (lossy VP8 stays NotImplementedError inside decode_webp — the
+    # documented DCT-codec boundary)
+    from yark_spark.operators.webp import decode_webp as _decode_webp
 
-        _cp.register_pickle_by_value(_jpeg_mod)
-        _decode_jpeg = _jpeg_mod.decode_jpeg
-    except Exception:  # pragma: no cover — pyspark-less import contexts
-        _decode_jpeg = None
-    # lossless WebP (r10): the pure-Python VP8L codec in operators/webp,
-    # shipped by value the same way (lossy VP8 stays NotImplementedError
-    # inside decode_webp — the documented DCT-codec boundary)
-    try:
-        from pyspark import cloudpickle as _cp2
-
-        from yark_spark.operators import webp as _webp_mod
-
-        _cp2.register_pickle_by_value(_webp_mod)
-        _decode_webp = _webp_mod.decode_webp
-    except Exception:  # pragma: no cover
-        _decode_webp = None
     # PNG (r11): the from-scratch DEFLATE + filter decoder in
-    # operators/png, shipped by value the same way (both interlace
-    # methods decode; FDICT/zlib-bomb payloads raise typed errors)
-    try:
-        from pyspark import cloudpickle as _cp3
+    # operators/png (both interlace methods decode; FDICT/zlib-bomb
+    # payloads raise typed errors)
+    from yark_spark.operators.png import decode_png as _decode_png
 
-        from yark_spark.operators import png as _png_mod
+    # GIF (r11): the from-scratch LZW codec in operators/gif (multi-frame
+    # files decode to the poster frame; full disposal compositing =
+    # gif.compose_gif_frames, round 12)
+    from yark_spark.operators.gif import decode_gif as _decode_gif
 
-        _cp3.register_pickle_by_value(_png_mod)
-        _decode_png = _png_mod.decode_png
-    except Exception:  # pragma: no cover
-        _decode_png = None
-    # GIF (r11): the from-scratch LZW codec in operators/gif, shipped by
-    # value the same way (multi-frame files decode to the poster frame;
-    # full disposal compositing = gif.compose_gif_frames, round 12)
-    try:
-        from pyspark import cloudpickle as _cp4
-
-        from yark_spark.operators import gif as _gif_mod
-
-        _cp4.register_pickle_by_value(_gif_mod)
-        _decode_gif = _gif_mod.decode_gif
-    except Exception:  # pragma: no cover
-        _decode_gif = None
     # TIFF (r12): the baseline TIFF 6.0 reader in operators/tiff —
     # MSB-first early-change LZW / PackBits / uncompressed strips,
-    # horizontal predictor, both byte orders — shipped by value too
-    try:
-        from pyspark import cloudpickle as _cp5
+    # horizontal predictor, both byte orders
+    from yark_spark.operators.tiff import decode_tiff as _decode_tiff
 
-        from yark_spark.operators import tiff as _tiff_mod
-
-        _cp5.register_pickle_by_value(_tiff_mod)
-        _decode_tiff = _tiff_mod.decode_tiff
-    except Exception:  # pragma: no cover
-        _decode_tiff = None
     # QOI (r12): the from-scratch six-op codec in operators/qoi — the
     # entropy-coder-free lossless interchange format
-    try:
-        from pyspark import cloudpickle as _cp6
-
-        from yark_spark.operators import qoi as _qoi_mod
-
-        _cp6.register_pickle_by_value(_qoi_mod)
-        _decode_qoi = _qoi_mod.decode_qoi
-    except Exception:  # pragma: no cover
-        _decode_qoi = None
+    from yark_spark.operators.qoi import decode_qoi as _decode_qoi
 
     def decode(payload: bytes):
         payload = bytes(payload)
@@ -332,21 +285,17 @@ def _make_decoder():
             return _decode_pnm(payload)
         if payload[:2] == b"BM":
             return _decode_bmp(payload)
-        if payload[:2] == b"\xff\xd8" and _decode_jpeg is not None:
+        if payload[:2] == b"\xff\xd8":
             return _decode_jpeg(payload)
-        if (
-            payload[:4] == b"RIFF"
-            and payload[8:12] == b"WEBP"
-            and _decode_webp is not None
-        ):
+        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
             return _decode_webp(payload)
-        if payload[:8] == b"\x89PNG\r\n\x1a\n" and _decode_png is not None:
+        if payload[:8] == b"\x89PNG\r\n\x1a\n":
             return _decode_png(payload)
-        if payload[:4] == b"GIF8" and _decode_gif is not None:
+        if payload[:4] == b"GIF8":
             return _decode_gif(payload)
-        if payload[:4] in (b"II*\x00", b"MM\x00*") and _decode_tiff is not None:
+        if payload[:4] in (b"II*\x00", b"MM\x00*"):
             return _decode_tiff(payload)
-        if payload[:4] == b"qoif" and _decode_qoi is not None:
+        if payload[:4] == b"qoif":
             return _decode_qoi(payload)
         raise NotImplementedError(
             "decodable without an image library: uncompressed PGM/PPM/BMP, "
@@ -380,8 +329,7 @@ def decode_image_features(
     """REAL pixel statistics over a binary image column: decode each
     payload with the pure-numpy decoder (uncompressed PGM/PPM/BMP) and
     emit (width, height, channels, mean pixel value). Map-only
-    ``mapInPandas``; the decoder closure ships by value so workers never
-    import this package. Payloads the decoder rejects would raise — at
+    ``mapInPandas``. Payloads the decoder rejects would raise — at
     scale, route unknown formats to a quarantine first (the
     archive.quarantine pattern)."""
     decode = _make_decoder()
@@ -463,7 +411,7 @@ def decode_image_features_quarantine(
     inside header parsers (BMP/JPEG/WAV) before any explicit validation
     can run — exactly the corrupt-crawled-bytes case the quarantine
     exists for. Map-only mapInPandas."""
-    decode = _make_decoder()  # ships by value; workers never import the package
+    decode = _make_decoder()
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct as _struct
@@ -548,11 +496,8 @@ def image_phash_features(
     wire shape ``dedup.image_neardup_pairs`` wants, where band slicing
     (``shiftrightunsigned``) and the Hamming verify (``bit_count(xor)``)
     stay whole-stage-codegen'd JVM expressions."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import phash as _phash_mod
 
-    _cp.register_pickle_by_value(_phash_mod)
     _ph = _phash_mod.phash64
     decode = _make_decoder()
 
@@ -673,10 +618,6 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "
     mapInPandas: map-only (no shuffle), one pandas batch per Arrow chunk."""
 
     def _features(payload: bytes) -> tuple[int, int, str]:
-        # local twin of fake_image_features: nested so cloudpickle ships it
-        # BY VALUE — a module-level reference would make every Python
-        # worker import yark_spark, which only works when the driver's
-        # sys.path/cwd happens to reach the repo
         h = hashlib.sha1(payload).digest()
         return 64 + h[0] % 192, 64 + h[1] % 192, "RGB" if h[2] % 2 == 0 else "L"
 
@@ -712,8 +653,7 @@ AUDIO_FEATURE_SCHEMA = StructType(
 
 
 def _make_wav_codec():
-    """Closure-factory (ships by value — workers never import this
-    package) for a pure-numpy canonical-WAV codec: 16-bit PCM RIFF/WAVE,
+    """Closure-factory for a pure-numpy canonical-WAV codec: 16-bit PCM RIFF/WAVE,
     generic chunk walk on decode (tolerates extra chunks, odd-size
     padding). Compressed codecs (MP3/AAC/IEEE-float) raise
     NotImplementedError — entropy coding needs an audio library this
@@ -774,11 +714,7 @@ def with_wav_payload(
     PCM16 WAV via the production codec (operators/audio_codecs;
     byte-identical to the closure codec kept in tests as the
     independent differential). Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import audio_codecs as _ac
-
-    _cp.register_pickle_by_value(_ac)
 
     def encode(samples, rate):
         return _ac.encode_wav(samples, rate=rate, codec="pcm16")
@@ -820,11 +756,8 @@ def with_flac_payload(
     sync→Rice→predictor wire unchanged. ``block_size=64`` forces four
     frames per stream (frame numbering, per-frame CRCs, frame-boundary
     handling all on the hot path). Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import flac as _flac_mod
 
-    _cp.register_pickle_by_value(_flac_mod)
     _encode = _flac_mod.encode_flac
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -881,13 +814,9 @@ def decode_audio_spectrum(
     never shuffle. Constructed tones at integer bins make the argmax
     analytic (quantization noise is ~5 orders of magnitude below the
     tone peak), so a SQL oracle checks the whole decode→FFT path."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import audio_codecs as _ac
     from yark_spark.operators import flac as _flac_mod
 
-    _cp.register_pickle_by_value(_ac)
-    _cp.register_pickle_by_value(_flac_mod)
     _decode_wav = _ac.decode_wav
     _decode_flac = _flac_mod.decode_flac
 
@@ -939,11 +868,7 @@ def with_tone_wav_payload(
     has zero spectral leakage, so after quantization the dominant rfft
     bin is exactly ``k`` and the oracle reduces to modular arithmetic
     on the md5 code — no FFT in SQL. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import audio_codecs as _ac
-
-    _cp.register_pickle_by_value(_ac)
 
     def encode(samples, rate):
         return _ac.encode_wav(samples, rate=rate, codec="pcm16")
@@ -996,12 +921,9 @@ def with_compressed_wav_payload(
       sample verbatim and zero deltas are exact at step index 0, so
       decode returns the constants and the stats are analytic.
 
-    Map-only mapInPandas; audio_codecs ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    Map-only mapInPandas."""
     from yark_spark.operators import audio_codecs as _ac
 
-    _cp.register_pickle_by_value(_ac)
     if codec not in ("mulaw", "alaw", "ima_adpcm"):
         raise ValueError(f"unknown compressed codec {codec!r}")
 
@@ -1057,15 +979,10 @@ def decode_audio_features(
     (operators/flac) — lossless compressed audio is real; only
     psychoacoustic codecs (MP3/AAC/Opus) remain the documented
     NotImplementedError boundary."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import aiff as _aiff_mod
     from yark_spark.operators import audio_codecs as _ac
     from yark_spark.operators import flac as _flac_mod
 
-    _cp.register_pickle_by_value(_ac)
-    _cp.register_pickle_by_value(_flac_mod)
-    _cp.register_pickle_by_value(_aiff_mod)
     _decode_wav = _ac.decode_wav
     _decode_flac = _flac_mod.decode_flac
     _decode_aiff = _aiff_mod.decode_aiff
@@ -1142,13 +1059,9 @@ def with_jpeg_payload(
     frames instead, with the H.1 predictor varying per doc
     (doc_id % 7 + 1) — pixels identical under every predictor, so ALL
     SEVEN are pinned by one analytic oracle
-    (q_image_decode_jpeg_lossless). Map-only mapInPandas; the jpeg
-    module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    (q_image_decode_jpeg_lossless). Map-only mapInPandas."""
     from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
     _q = quality
     if lossless:
         _ll = _jpeg_mod.encode_jpeg_lossless
@@ -1208,12 +1121,9 @@ def with_webp_payload(
     back RGBA, so the mean folds in the constant 255 alpha plane).
     ``encode_opts`` pass through to ``encode_webp_vp8l`` (transforms,
     color cache, meta prefix) for plan-shape-identical variants. Map-only
-    mapInPandas; the webp module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import webp as _webp_mod
 
-    _cp.register_pickle_by_value(_webp_mod)
     _enc = _webp_mod.encode_webp_vp8l
     _opts = dict(encode_opts)
 
@@ -1313,13 +1223,9 @@ def with_png_payload(
     interlacing on odd doc_ids — pixels are identical either way, so
     the analytic oracle pins BOTH interlace decode paths without
     changing; ``encode_opts`` override (filter_type / deflate /
-    idat_chunk / interlace). Map-only mapInPandas; the png module ships
-    by value."""
-    from pyspark import cloudpickle as _cp
-
+    idat_chunk / interlace). Map-only mapInPandas."""
     from yark_spark.operators import png as _png_mod
 
-    _cp.register_pickle_by_value(_png_mod)
     _enc = _png_mod.encode_png
     _opts = {"filter_type": "mixed", "deflate": "dynamic", "idat_chunk": 64}
     _opts.update(encode_opts)
@@ -1369,12 +1275,9 @@ def with_tiff_payload(
     decode is lossless under all of them, so ONE analytic oracle pins
     the whole matrix: MSB-first early-change LZW, PackBits runs, both
     endians, horizontal differencing, strip reassembly. Map-only
-    mapInPandas; the tiff module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import tiff as _tiff_mod
 
-    _cp.register_pickle_by_value(_tiff_mod)
     _enc = _tiff_mod.encode_tiff
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1427,16 +1330,13 @@ def with_gif_payload(
     palette). GIF is lossless, so the decoded mean is EXACTLY
     (a+b+c+d)/4 and channels stay 3. Interlace on odd doc_ids pins both
     row orders under one analytic oracle, exactly like the PNG fixture.
-    Map-only mapInPandas; the gif module ships by value.
+    Map-only mapInPandas.
 
     ``corrupt_every`` (round 11): truncate every N-th doc's payload
     mid-stream — a deterministic decode ValueError, the quarantine
     fixture for decode_image_features_quarantine."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import gif as _gif_mod
 
-    _cp.register_pickle_by_value(_gif_mod)
     _enc = _gif_mod.encode_gif
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1498,11 +1398,8 @@ def decode_video_features(
     power-of-two plane sizes both reduce to exact integer sums, so an
     analytic oracle hash-matches them. Map-only mapInPandas; frames
     never shuffle; entropy-coded video stays the documented boundary."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import video as _video_mod
 
-    _cp.register_pickle_by_value(_video_mod)
     _decode = _video_mod.decode_y4m
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1560,12 +1457,9 @@ def with_y4m_payload(
     exactly (|b-a|+|c-b|+|d-c|)/3 — both computable by DuckDB from the
     md5 codes alone. Odd doc_ids encode C444, even C420: the chroma
     layouts walk different plane sizes under the same oracle. Map-only
-    mapInPandas; the video module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import video as _video_mod
 
-    _cp.register_pickle_by_value(_video_mod)
     _enc = _video_mod.encode_y4m
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1594,37 +1488,6 @@ def with_y4m_payload(
     )
 
 
-def _register_container_modules():
-    """Ship containers + its png (DEFLATE) and zstd dependencies by
-    value, with the lazy codec hooks pre-bound so no worker-side package
-    import ever runs (decompress_auto dispatches into zstd)."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import brotli as _brotli
-    from yark_spark.operators import bzip2 as _bz2
-    from yark_spark.operators import containers as _cont
-    from yark_spark.operators import lz4 as _lz4
-    from yark_spark.operators import png as _png
-    from yark_spark.operators import xz as _xz
-    from yark_spark.operators import zstd as _zstd
-    from yark_spark.operators import zstd_encode as _zenc
-
-    _cont.bind_zstd()
-    _cont.bind_lz4()
-    _cont.bind_bzip2()
-    _cont.bind_xz()
-    _cont.bind_brotli()
-    _cp.register_pickle_by_value(_png)
-    _cp.register_pickle_by_value(_zstd)
-    _cp.register_pickle_by_value(_zenc)
-    _cp.register_pickle_by_value(_lz4)
-    _cp.register_pickle_by_value(_bz2)
-    _cp.register_pickle_by_value(_xz)
-    _cp.register_pickle_by_value(_brotli)
-    _cp.register_pickle_by_value(_cont)
-    return _cont
-
-
 def with_gzip_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -1632,7 +1495,8 @@ def with_gzip_payload(
     over REAL dynamic-Huffman DEFLATE (operators/containers over
     operators/png) — the wire shape of crawled-web text (WARC/WET).
     Map-only mapInPandas."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _gz = _cont.gzip_compress
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1672,7 +1536,8 @@ def gunzip_text_features(
     digest lets a SQL oracle certify the ENTIRE compress→decompress
     path equals the original text without moving the text itself.
     Map-only mapInPandas; the decompressed bytes never shuffle."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _gunzip = _cont.gzip_decompress
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1710,7 +1575,8 @@ def with_tar_shards(
     zero-padded to 8, ``docs_per_shard`` docs per archive. One
     applyInPandas per shard group — the grouping shuffle IS the shard
     assignment, exactly how a 100 TB export writes shards."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _build_tar = _cont.tar_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1744,8 +1610,7 @@ def xz_compress_payload(
     """Wrap an existing binary payload column in the .xz container
     (round 13) — e.g. tar shards → ``.tar.xz``, the software-
     distribution / Software-Heritage wire. Map-only mapInPandas."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_xz().xz_compress
+    from yark_spark.operators.xz import xz_compress as _enc
 
     def _wrap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1764,7 +1629,8 @@ def tar_text_digest_listing(
     .tar.xz / …), then the ustar walk digests each ``.txt`` member —
     certifying container + codec + member bytes under one SQL hash.
     Map-only mapInPandas."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _members = _cont.tar_members
     _auto = _cont.decompress_auto
     _member_id = _cont.member_doc_id
@@ -1816,7 +1682,8 @@ def tar_member_listing(
     from the WebDataset name convention). Map-only mapInPandas: one
     task reads one shard sequentially — the access pattern tar was
     designed for, and the reason WebDataset scales to object stores."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _members = _cont.tar_members
     _member_id = _cont.member_doc_id
 
@@ -1863,9 +1730,9 @@ def with_tar_shards_sized(
     ``with_tar_shards``. The assignment metric is the text's UTF-8 byte
     length (tar header overhead excluded — it is constant per member
     and irrelevant to balance)."""
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators.packing import shard_assignment
 
-    _cont = _register_container_modules()
     _build_tar = _cont.tar_build
 
     sized = df.select(
@@ -1914,7 +1781,8 @@ def with_warc_shards(
     head and a leading ``warcinfo`` record per shard — the full CC-MAIN
     record shape the WET extractor strips. One applyInPandas per shard
     group, same shape as with_tar_shards."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _build_warc = _cont.warc_build
     _build_http = _cont.http_message_build
     _head = b"HTTP/1.1 200 OK\r\nContent-Type: text/plain; charset=utf-8\r\n\r\n"
@@ -2023,7 +1891,8 @@ def warc_record_listing(
     one task inflates one shard's members sequentially (1 MB/record
     bomb guard), which is exactly how CC-MAIN segment files are read
     at 100 TB."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _records = _cont.warc_records
     _member_id = _cont.member_doc_id
 
@@ -2094,11 +1963,8 @@ def mp3_stereo_features(
     Fixture and decode both in operators/mp3; the oracle re-derives
     every field (including which bands reused and their granule-0
     values) arithmetically. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mp3 as _mp3_mod
 
-    _cp.register_pickle_by_value(_mp3_mod)
     _build = _mp3_mod.mp3_build_deep
     _parse = _mp3_mod.mp3_parse_deep
 
@@ -2154,12 +2020,9 @@ def with_mp3_deep_payload(
     scalefactor and bit-reservoir pointer derived arithmetically from
     the doc's first four md5 codes (operators/mp3.mp3_build_deep), so
     the oracle re-derives the whole stream in SQL. Map-only
-    mapInPandas; the mp3 module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import mp3 as _mp3_mod
 
-    _cp.register_pickle_by_value(_mp3_mod)
     _build = _mp3_mod.mp3_build_deep
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2193,11 +2056,8 @@ def mp3_deep_features(
     SQL-checkable sums (granule count, short-block count, global-gain
     sum, scalefactor sum, reservoir-pointer sum). Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mp3 as _mp3_mod
 
-    _cp.register_pickle_by_value(_mp3_mod)
     _parse = _mp3_mod.mp3_parse_deep
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2242,22 +2102,9 @@ def parquet_write_modern_features(
     BYTE_STREAM_SPLIT derived double — then read back by the
     from-scratch reader; pyarrow AND DuckDB read the same files in
     tests/test_parquet_write.py. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _pw.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
     _write = _pw.parquet_write
     _read = _pdata.parquet_read_columns
 
@@ -2336,22 +2183,9 @@ def parquet_write_roundtrip_features(
     agreement) is pinned in tests/test_parquet_write.py. Map-only
     mapInPandas; at 100 TB this is the shard-materialization kernel
     (one file per task, footer last, no cross-task state)."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _pw.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
     _write = _pw.parquet_write
     _read = _pdata.parquet_read_columns
     _codecs = tuple(codec_cycle)
@@ -2462,20 +2296,8 @@ def orc_scan_listing(
     DICTIONARY_V2/DIRECT_V2 strings) and digest each row. Map-only
     mapInPandas; one task decodes one shard's stripes — the (file,
     stripe) unit a 100 TB warehouse scan uses."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()  # png/snappy? (zlib, zstd, lz4 by value)
-    _orc_mod._bind_codecs()  # driver-side module binding
-    from yark_spark.operators import snappy as _snappy
-
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _read = _orc_mod.orc_read_columns
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2596,19 +2418,8 @@ def orc_vector_listing(df: DataFrame, payload_col: str = "payload") -> DataFrame
     mapInPandas; one task decodes one shard."""
     import math as _math
 
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _read = _orc_mod.orc_read_columns
     _floor = _math.floor
 
@@ -2679,19 +2490,8 @@ def orc_vector_write_roundtrip(
     mapInPandas."""
     import math as _math
 
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _write = _orc_mod.orc_write
     _read = _orc_mod.orc_read_columns
     _floor = _math.floor
@@ -2782,24 +2582,10 @@ def with_delta_table_payload(
     delta.columnMapping.mode=name with per-field physicalName
     annotations in the metaData schema — the shape every renamed
     modern Delta table has. One applyInPandas per table group."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pw.bind_codecs()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
     _write = _pw.parquet_write
-    _cont = _register_container_modules()
     _tar = _cont.tar_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2908,36 +2694,6 @@ def with_delta_table_payload(
     )
 
 
-def _register_delta_modules():
-    """Ship the Delta resolver and its full substrate by value —
-    deltalog imports parquet_data AND (since round 14) parquet_write,
-    png (CRC32) and roaring, so every one of those must itself be
-    by-value or vanilla-session workers die importing yark_spark."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import deltalog as _dl
-    from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import roaring as _roar
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import variant as _variant
-    from yark_spark.operators import varint as _varint
-
-    _register_container_modules()  # png (DEFLATE/crc32), zstd, containers
-    _pw.bind_codecs()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
-    _cp.register_pickle_by_value(_roar)
-    _cp.register_pickle_by_value(_variant)  # round 17: variantType
-    _cp.register_pickle_by_value(_dl)
-    return _dl
-
-
 def delta_snapshot_features(
     df: DataFrame, table_col: str = "table_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -2946,7 +2702,8 @@ def delta_snapshot_features(
     docs must vanish, resurrected/compacted files carry the rewrite
     version, and every live parquet file decodes through the
     from-scratch reader. Map-only mapInPandas."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+
     _rows = _dl.delta_snapshot_rows
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3004,10 +2761,11 @@ def delta_checkpoint_write_features(
     version_added = 1 (the finest attribution the log retains); the
     v2 remove must still drop p1 and the v2 add attribute at 2. The
     deleted-commit count rides in the output. Map-only mapInPandas."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators.containers import tar_members as _tm
+
     _ckpt = _dl.delta_checkpoint_table
     _rows = _dl.delta_snapshot_rows
-    _tm = _register_container_modules().tar_members  # bound driver-side
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _h
@@ -3072,15 +2830,14 @@ def delta_dv_features(
     p1 those ==3; survivors carry the re-add version. A reader that
     ignores DVs returns phantom rows and fails the digest. One
     applyInPandas per table, map-only resolve."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
-    # bind every helper driver-side: the modules ship by value, so the
-    # closure carries them without a worker-side yark_spark import
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
     from yark_spark.operators import png as _png_mod
     from yark_spark.operators import roaring as _roar_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _write = _pw_mod.parquet_write
     _crc32 = _png_mod.crc32
     _rser = _roar_mod.roaring64_array_serialize
@@ -3208,19 +2965,8 @@ def orc_write_roundtrip_features(
     multi-stripe) and read back by orc_read_columns; digest oracle
     certifies the loop, tests pin ORC_CPP reading our files. Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _write = _orc_mod.orc_write
     _read = _orc_mod.orc_read_columns
 
@@ -3276,19 +3022,8 @@ def parquet_vectors_scan(df: DataFrame, payload_col: str = "content") -> DataFra
     (Σ floor(x·10⁶), reproducible bit-for-bit in SQL). Vector columns
     ARE the embedding substrate at 100 TB; a reader that stops at
     flat columns can't open an ANN corpus. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
     _read = _pdata.parquet_read_columns
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3344,7 +3079,8 @@ def warc_cdx_seek_extract(
     bytes no SQL can re-derive). At 100 TB this is how one record is
     fetched from a multi-GB WARC object: CDX lookup → ranged GET →
     one-member inflate. Map-only mapInPandas."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _spans = _cont.gzip_member_spans
     _records = _cont.warc_records
     _member_id = _cont.member_doc_id
@@ -3419,7 +3155,8 @@ def warc_wet_extract(
     through gzip members + record grammar + HTTP framing without moving
     the text. Map-only mapInPandas; non-response records are skipped
     exactly like the real WET generator."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _records = _cont.warc_records
     _member_id = _cont.member_doc_id
 
@@ -3461,7 +3198,7 @@ def _make_dims_parser():
     the cheap first pass over a binary column (route/filter/bucket by
     dimensions before any real decode); it also covers container
     variants whose PIXELS the full decoder rejects (lossy VP8).
-    Self-contained closure (ships by value)."""
+    Self-contained closure."""
 
     def dims(payload: bytes) -> tuple[str, int, int]:
         import struct
@@ -3578,13 +3315,9 @@ def with_header_payload(
     chars' ascii codes) — so a SQL oracle can compute the expected
     (format, width, height) analytically while the Spark side builds and
     parses REAL container headers."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import gif as _gif_mod
     from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
-    _cp.register_pickle_by_value(_gif_mod)
     encode = _jpeg_mod.encode_jpeg
     encode_gif = _gif_mod.encode_gif
 
@@ -3654,23 +3387,6 @@ def with_header_payload(
     )
 
 
-def _register_zstd_modules():
-    """Ship the zstd codec (+ its encoder and the png LZ dependency) by
-    value, with the encoder pre-bound into the decoder module so no
-    worker-side package import happens (round 12)."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import png as _png
-    from yark_spark.operators import zstd as _zstd
-    from yark_spark.operators import zstd_encode as _zenc
-
-    _zstd.bind_encoder()
-    _cp.register_pickle_by_value(_png)
-    _cp.register_pickle_by_value(_zstd)
-    _cp.register_pickle_by_value(_zenc)
-    return _zstd
-
-
 def with_zstd_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -3678,7 +3394,8 @@ def with_zstd_payload(
     encoder (real huff0 literals + predefined-FSE sequences + repeat
     offsets, XXH64 content checksum) — the wire shape of modern crawled
     corpora (.jsonl.zst). Map-only mapInPandas."""
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import zstd as _zstd
+
     _enc = _zstd.zstd_compress
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3709,7 +3426,8 @@ def unzstd_text_features(
     n_chars, md5 digest) — the gzip-ingest oracle recipe applied to the
     modern codec: one digest certifies FSE, huff0, sequence execution
     and framing end to end. Map-only mapInPandas."""
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import zstd as _zstd
+
     _dec = _zstd.zstd_decompress
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3743,8 +3461,7 @@ def with_lz4_payload(
     codec (operators/lz4: greedy hash matcher, XXH32 header/content
     checksums) — the third modern wire codec beside .gz and .zst.
     Map-only mapInPandas."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_lz4().lz4_frame_compress
+    from yark_spark.operators.lz4 import lz4_frame_compress as _enc
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3771,8 +3488,7 @@ def unlz4_text_features(
     64 MB bomb guard) and emit (id, n_chars, md5 digest) — the
     gzip/zstd ingest oracle recipe on the third codec. Map-only
     mapInPandas."""
-    _cont = _register_container_modules()
-    _dec = _cont.bind_lz4().lz4_frame_decompress
+    from yark_spark.operators.lz4 import lz4_frame_decompress as _dec
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -3810,8 +3526,7 @@ def with_jsonl_lz4_shards(
     ``decompress_auto`` dispatch already speaks the LZ4 frame magic.
     One applyInPandas per shard group — the grouping shuffle IS the
     shard assignment."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_lz4().lz4_frame_compress
+    from yark_spark.operators.lz4 import lz4_frame_compress as _enc
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         import json as _json
@@ -3847,8 +3562,7 @@ def with_bz2_payload(
     (operators/bzip2: RLE1 → rank-doubling BWT → MTF/RUNA-RUNB →
     canonical Huffman, both CRC layers) — the `.bz2` wrapper Wikipedia
     dumps ship in. Map-only mapInPandas."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_bzip2().bz2_compress
+    from yark_spark.operators.bzip2 import bz2_compress as _enc
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3874,8 +3588,7 @@ def unbz2_text_features(
     stream CRC verified in-path, 64 MB bomb guard) and emit (id,
     n_chars, md5 digest) — the gzip/zstd/LZ4 ingest oracle recipe on
     the fourth wire codec. Map-only mapInPandas."""
-    _cont = _register_container_modules()
-    _dec = _cont.bind_bzip2().bz2_decompress
+    from yark_spark.operators.bzip2 import bz2_decompress as _dec
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -3916,8 +3629,7 @@ def with_jsonl_bz2_multistream_shards(
     walks concatenated 'BZh' streams the way it walks multi-member
     gzip. One applyInPandas per shard group — the grouping shuffle IS
     the shard assignment."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_bzip2().bz2_compress
+    from yark_spark.operators.bzip2 import bz2_compress as _enc
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         import json as _json
@@ -3960,8 +3672,7 @@ def with_xz_payload(
     and the chunk mode cycles compressed/mixed per doc, so one digest
     pins every check verifier and both chunk grammars. Map-only
     mapInPandas."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_xz().xz_compress
+    from yark_spark.operators.xz import xz_compress as _enc
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         checks = ["none", "crc32", "crc64", "sha256"]
@@ -3996,8 +3707,7 @@ def unxz_text_features(
     all verified in-path; 64 MB bomb guard) and emit (id, n_chars, md5
     digest) — the gzip/zstd/LZ4/bz2 ingest oracle recipe on the fifth
     wire codec. Map-only mapInPandas."""
-    _cont = _register_container_modules()
-    _dec = _cont.bind_xz().xz_decompress
+    from yark_spark.operators.xz import xz_decompress as _dec
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -4034,8 +3744,7 @@ def with_jsonl_xz_shards(
     ``jsonl_zst_listing`` unchanged, because ``decompress_auto`` now
     speaks the xz magic. Check id cycles per shard. One applyInPandas
     per shard group — the grouping shuffle IS the shard assignment."""
-    _cont = _register_container_modules()
-    _enc = _cont.bind_xz().xz_compress
+    from yark_spark.operators.xz import xz_compress as _enc
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         import json as _json
@@ -4101,12 +3810,9 @@ def with_gif_anim_payload(
     1/2 — full repaint makes both compose identically, pinning that
     disposal bookkeeping never corrupts whole-frame animation (the
     cross-container agreement fixture). Delays are 10 cs per frame.
-    Map-only mapInPandas; the gif module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    Map-only mapInPandas."""
     from yark_spark.operators import gif as _gif_mod
 
-    _cp.register_pickle_by_value(_gif_mod)
     _enc = _gif_mod.encode_gif_anim
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4158,11 +3864,8 @@ def gif_anim_video_features(
     over consecutive canvas pairs of mean |Δluma| (0.0 single-frame),
     ``duration_cs`` the summed GCE delays. Map-only mapInPandas; frames
     never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import gif as _gif_mod
 
-    _cp.register_pickle_by_value(_gif_mod)
     _compose = _gif_mod.compose_gif_frames
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4255,7 +3958,8 @@ def with_jsonl_zst_shards(
     assignment, same scale shape as the tar/WARC packers.
     ``dictionary`` (round 13): structured-dictionary bytes — frames
     carry its Dictionary_ID and may copy from its content."""
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import zstd as _zstd
+
     _enc = _zstd.zstd_compress
     _dict_bytes = bytes(dictionary) if dictionary is not None else None
 
@@ -4309,8 +4013,9 @@ def jsonl_zst_listing(
     ``dictionary`` (round 13): structured-dictionary bytes for
     dictionary-compressed shards (the dict ships in the task closure;
     parsed ONCE per task, not per shard)."""
-    _cont = _register_container_modules()
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import containers as _cont
+    from yark_spark.operators import zstd as _zstd
+
     _auto = _cont.decompress_auto
     _unzstd = _zstd.zstd_decompress
     _parse_dict = _zstd.parse_zstd_dictionary
@@ -4366,12 +4071,9 @@ def with_html_payload(
     entity — constructed so ``html_to_text`` recovers the text
     BYTE-EXACTLY (entities decode, inline tags vanish without breaking
     the flow, whitespace-only indentation nodes drop). Map-only
-    mapInPandas; the html module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
     _page = _html_mod.html_page_fixture
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4402,11 +4104,8 @@ def html_extract_features(
     extracted text — the gzip/zstd-ingest oracle recipe, certifying the
     whole tag state machine against SQL md5(text). Map-only
     mapInPandas; pages never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
     _extract_text = _html_mod.html_to_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4438,11 +4137,8 @@ def with_html_text(
 ) -> DataFrame:
     """(id, page) — the HTML fixture as a STRING column, the shape
     with_warc_shards consumes to build full crawled-page records."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
     _page = _html_mod.html_page_fixture
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4475,12 +4171,9 @@ def warc_wet_html_extract(
     generator actually does to a CC-MAIN segment. Emits (doc key,
     n_chars, md5 digest) of the RECOVERED TEXT so one SQL hash certifies
     four protocol layers at once. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
-    _cont = _register_container_modules()
     _records = _cont.warc_records
     _member_id = _cont.member_doc_id
     _to_text = _html_mod.html_to_text
@@ -4578,12 +4271,9 @@ def audio_pcm_depth_features(
     operators/audio_codecs, and emit the per-depth sample mean — all
     four depths must land on the SAME analytic value
     (64·(a+b+c+d) − 26112), certified by one SQL oracle. Map-only
-    mapInPandas; the audio module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import audio_codecs as _ac
 
-    _cp.register_pickle_by_value(_ac)
     _enc, _dec = _ac.encode_wav, _ac.decode_wav
     codecs = ("pcm8", "pcm24", "pcm32", "float32")
 
@@ -4642,7 +4332,8 @@ def with_seekable_zst_shards(
     public zstd seekable-format spec). One applyInPandas per shard
     group. The point at 100 TB: a multi-GB .zst object stops being one
     task — the seek table makes it SPLITTABLE."""
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import zstd as _zstd
+
     _enc = _zstd.zstd_seekable_compress_chunks
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -4696,7 +4387,8 @@ def seekable_zst_frame_listing(
     reader would stitch the cut line across neighboring frames (same
     pattern as the tar prefix rejoin). Emits (doc_id, shard_id,
     n_chars, digest) like jsonl_zst_listing."""
-    _zstd = _register_zstd_modules()
+    from yark_spark.operators import zstd as _zstd
+
     _table = _zstd.zstd_seek_table
     _dec = _zstd.zstd_decompress
 
@@ -4759,20 +4451,6 @@ def seekable_zst_frame_listing(
     return frames.mapInPandas(_docs, JSONL_ZST_SCHEMA)
 
 
-def _register_tfrecord_modules():
-    """Ship the from-scratch TFRecord/tf.Example codec (plus the
-    container stack its gzip variant dispatches into) by value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import tfrecord as _tfr
-    from yark_spark.operators import varint as _varint
-
-    _register_container_modules()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tfr)
-    return _tfr
-
-
 def with_tfrecord_shards(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -4790,8 +4468,9 @@ def with_tfrecord_shards(
     (tf.data dispatches the same way via compression_type). One
     applyInPandas per shard group — the grouping shuffle IS the shard
     assignment, same scale shape as the tar/WARC/jsonl.zst packers."""
-    _tfr = _register_tfrecord_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import tfrecord as _tfr
+    from yark_spark.operators import containers as _cont
+
     _enc, _build_stream = _tfr.encode_example, _tfr.tfrecord_build
     _gz = _cont.gzip_compress
 
@@ -4850,8 +4529,9 @@ def tfrecord_listing(
     hash certifies framing + CRC + protobuf end to end. Map-only
     mapInPandas; one task inflates one shard sequentially, the
     object-store access pattern."""
-    _tfr = _register_tfrecord_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import tfrecord as _tfr
+    from yark_spark.operators import containers as _cont
+
     _records, _decode = _tfr.tfrecord_records, _tfr.decode_example
     _gunzip = _cont.gzip_decompress
 
@@ -4902,22 +4582,6 @@ AVRO_LISTING_SCHEMA = StructType(
 )
 
 
-def _register_avro_modules():
-    """Ship the from-scratch Avro OCF codec and its snappy + DEFLATE
-    dependencies by value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import avro_ocf as _avro
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
-
-    _register_container_modules()  # registers png (DEFLATE) too
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_avro)
-    return _avro
-
-
 _AVRO_DOC_SCHEMA = {
     "type": "record",
     "name": "doc",
@@ -4943,7 +4607,8 @@ def with_avro_shards(
     shard_id % 3 so one fixture exercises all three block wires. One
     applyInPandas per shard group — the grouping shuffle IS the shard
     assignment, same scale shape as the tar/WARC/TFRecord packers."""
-    _avro = _register_avro_modules()
+    from yark_spark.operators import avro_ocf as _avro
+
     _build_file = _avro.avro_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -4991,7 +4656,8 @@ def avro_listing(
     end. Emits the codec column so the oracle pins WHICH wire each
     shard took. Map-only mapInPandas; one task inflates one shard
     sequentially, the object-store access pattern."""
-    _avro = _register_avro_modules()
+    from yark_spark.operators import avro_ocf as _avro
+
     _scan = _avro.avro_scan
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5098,7 +4764,8 @@ def with_avro_evolved_shards(
     enum, and a writer-only rev field) — the live-pipeline reality
     that producers upgrade before consumers. Codec still cycles
     null/deflate/snappy by shard."""
-    _avro = _register_avro_modules()
+    from yark_spark.operators import avro_ocf as _avro
+
     _build_file = _avro.avro_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -5178,7 +4845,8 @@ def avro_evolve_listing(
     lists, v2's nullable-union text read as plain string, v2's
     writer-only rev field skipped, reader-only quality defaulting to
     3). Map-only mapInPandas."""
-    _avro = _register_avro_modules()
+    from yark_spark.operators import avro_ocf as _avro
+
     _scan = _avro.avro_scan
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5255,12 +4923,9 @@ def with_main_content_payload(
     document's words as 12-word paragraphs inside a page carrying a
     link-dense nav/sidebar/footer, a short heading and a stopword-free
     cookie banner (operators/html.main_content_page_fixture). Map-only
-    mapInPandas; the html module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
     _page = _html_mod.main_content_page_fixture
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5294,11 +4959,8 @@ def main_content_features(
     text). Docs whose every block is boilerplate are omitted (the SQL
     twin's GROUP BY over good blocks drops them too). Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import html as _html_mod
 
-    _cp.register_pickle_by_value(_html_mod)
     _blocks = _html_mod.html_blocks
     _classify = _html_mod.classify_blocks
     _stop = frozenset(stopwords)
@@ -5344,13 +5006,9 @@ def with_qoi_payload(
     with opaque alpha on odd ones, so ONE oracle key pins both channel
     modes (the RGBA mean folds the 255 alpha plane in, the WebP
     recipe). The quadrant steps exercise RUN, LUMA/RGB literals and the
-    hash index in every payload. Map-only mapInPandas; the qoi module
-    ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    hash index in every payload. Map-only mapInPandas."""
     from yark_spark.operators import qoi as _qoi_mod
 
-    _cp.register_pickle_by_value(_qoi_mod)
     _enc = _qoi_mod.encode_qoi
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5415,13 +5073,8 @@ def with_avi_payload(
     analytic through a REAL entropy-coded video wire. Map-only
     mapInPandas; the avi module (and its jpeg dependency) ships by
     value."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import avi as _avi_mod
-    from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
-    _cp.register_pickle_by_value(_avi_mod)
     _enc = _avi_mod.encode_avi_mjpeg
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5457,13 +5110,8 @@ def avi_video_features(
     honestly (MJPEG is intra-only; inter-frame DCT codecs remain the
     documented boundary, typed at decode_avi_frames). Map-only
     mapInPandas; frames never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import avi as _avi_mod
-    from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
-    _cp.register_pickle_by_value(_avi_mod)
     _decode = _avi_mod.decode_avi_frames
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5510,20 +5158,6 @@ def avi_video_features(
     )
 
 
-def _register_msgpack_modules():
-    """Ship the from-scratch MessagePack codec (plus the container
-    stack whose decompress_auto the listing dispatches through) by
-    value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import msgpack as _mp
-
-    _cont = _register_container_modules()
-    _register_zstd_modules()
-    _cp.register_pickle_by_value(_mp)
-    return _mp, _cont
-
-
 def with_msgpack_shards(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -5539,7 +5173,9 @@ def with_msgpack_shards(
     byte (0x8x) cannot collide with the zstd or gzip magics. One
     applyInPandas per shard group — the grouping shuffle IS the shard
     assignment."""
-    _mp, _cont = _register_msgpack_modules()
+    from yark_spark.operators import msgpack as _mp
+    from yark_spark.operators import containers as _cont
+
     _enc = _mp.msgpack_encode
     _zst = _cont.zstd_compress_member
 
@@ -5579,7 +5215,9 @@ def msgpack_listing(
     certifies codec + stream framing end to end. Map-only mapInPandas;
     one task walks one shard sequentially, the object-store access
     pattern."""
-    _mp, _cont = _register_msgpack_modules()
+    from yark_spark.operators import msgpack as _mp
+    from yark_spark.operators import containers as _cont
+
     _stream = _mp.msgpack_stream_decode
     _auto = _cont.decompress_auto
 
@@ -5622,11 +5260,8 @@ def with_aiff_payload(
     sample rate — lossless, so the analytic WAV oracle pins the whole
     big-endian container + extended-float parse unchanged. Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import aiff as _aiff_mod
 
-    _cp.register_pickle_by_value(_aiff_mod)
     _encode = _aiff_mod.encode_aiff
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5652,19 +5287,6 @@ def with_aiff_payload(
     )
 
 
-def _register_zip_modules():
-    """Ship the from-scratch ZIP codec (and its png/DEFLATE dependency)
-    by value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import zip_archive as _zipmod
-
-    _register_container_modules()  # registers png (DEFLATE) + xz/bz2/zstd
-    _zipmod.bind_methods()  # bzip2/lzma/zstd member codecs (round 14 s3)
-    _cp.register_pickle_by_value(_zipmod)
-    return _zipmod
-
-
 def with_zip_shards(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -5682,7 +5304,8 @@ def with_zip_shards(
     (APPNOTE 12/14 + PKWARE 93) through the in-repo codecs. One
     applyInPandas per shard group — the grouping shuffle IS the shard
     assignment."""
-    _zipmod = _register_zip_modules()
+    from yark_spark.operators import zip_archive as _zipmod
+
     _build_zip = _zipmod.zip_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -5726,9 +5349,10 @@ def zip_listing(
     archive, and the central directory means a cluster reader could
     range-request single members — the random-access property tar
     lacks."""
-    _zipmod = _register_zip_modules()
-    _parse = _zipmod.zip_members
     from yark_spark.operators import containers as _cont_mod
+    from yark_spark.operators import zip_archive as _zipmod
+
+    _parse = _zipmod.zip_members
 
     _member_id = _cont_mod.member_doc_id
 
@@ -5798,13 +5422,9 @@ def with_exif_jpeg_payload(
     parity; doc_id % 3 == 0 images carry Exif WITHOUT GPS, so the
     extraction's null path and the redaction's no-op path are both on
     the fixture. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import exif as _exif_mod
     from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
-    _cp.register_pickle_by_value(_exif_mod)
     _enc, _build, _insert = (
         _jpeg_mod.encode_jpeg,
         _exif_mod.exif_build,
@@ -5854,13 +5474,9 @@ def exif_gps_redaction_features(
     pixels — one row certifies extraction, redaction completeness and
     pixel preservation together (the image-side twin of the text PII
     pass). Map-only mapInPandas; bytes never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import exif as _exif_mod
     from yark_spark.operators import jpeg as _jpeg_mod
 
-    _cp.register_pickle_by_value(_jpeg_mod)
-    _cp.register_pickle_by_value(_exif_mod)
     _parse, _strip = _exif_mod.exif_parse, _exif_mod.exif_strip
     _decode = _jpeg_mod.decode_jpeg
 
@@ -5926,12 +5542,9 @@ def with_subtitle_payload(
     gap — serialized as SubRip (``fmt='srt'``, comma milliseconds) or
     WebVTT (``fmt='vtt'``, period milliseconds, cue ids, a NOTE block
     and cue settings on the wire to exercise the grammar). Map-only
-    mapInPandas; the subtitles module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import subtitles as _sub_mod
 
-    _cp.register_pickle_by_value(_sub_mod)
     _srt, _vtt = _sub_mod.srt_build, _sub_mod.vtt_build
     if fmt not in ("srt", "vtt"):
         raise ValueError(f"subtitle fixture: unknown format {fmt!r}")
@@ -5981,11 +5594,8 @@ def subtitle_features(
     the space-joined recovered transcript — the digest certifies cue
     order, payload recovery and the timestamp grammar at once.
     Map-only mapInPandas; transcripts never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import subtitles as _sub_mod
 
-    _cp.register_pickle_by_value(_sub_mod)
     _parse = _sub_mod.srt_parse if source == "srt" else _sub_mod.vtt_parse
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6030,11 +5640,8 @@ def with_mbox_shards(
     cycled 7bit / quoted-printable / base64 by doc_id % 3, concatenated
     with mboxrd From-quoting — the Enron-corpus / mailing-list-archive
     wire. One applyInPandas per shard group."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mime as _mime_mod
 
-    _cp.register_pickle_by_value(_mime_mod)
     _build_msg, _build_box = _mime_mod.message_build, _mime_mod.mbox_build
     _encodings = ("7bit", "quoted-printable", "base64")
 
@@ -6081,11 +5688,8 @@ def mbox_listing(
     Content-Transfer-Encoding header, as mail requires), and the md5
     digest of the decoded body so one SQL hash certifies the container
     + header grammar + all three encodings. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mime as _mime_mod
 
-    _cp.register_pickle_by_value(_mime_mod)
     _split, _parse = _mime_mod.mbox_messages, _mime_mod.message_parse
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6153,11 +5757,8 @@ def robots_url_filter(
     per task and is broadcast-sized — at 100 TB the per-host policy
     table is the broadcast side of the URL join. Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import robots as _robots_mod
 
-    _cp.register_pickle_by_value(_robots_mod)
     _parse, _select, _decide = (
         _robots_mod.parse_robots,
         _robots_mod.rules_for_agent,
@@ -6212,12 +5813,9 @@ def with_ipynb_payload(
     cells use the list-of-lines source form, odd the single-string
     form — both legal on real disks), with noisy stream outputs and
     execution counts on every code cell that extraction MUST strip.
-    Map-only mapInPandas; the notebook module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    Map-only mapInPandas."""
     from yark_spark.operators import notebook as _nb_mod
 
-    _cp.register_pickle_by_value(_nb_mod)
     _build = _nb_mod.ipynb_build
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6251,11 +5849,8 @@ def ipynb_source_features(
     counts plus the md5 of the space-joined recovered source — one
     hash pins cell order, form normalization and output stripping.
     Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import notebook as _nb_mod
 
-    _cp.register_pickle_by_value(_nb_mod)
     _parse = _nb_mod.ipynb_cells
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6296,12 +5891,9 @@ def with_markdown_payload(
     items, blockquotes, fenced code blocks with info strings, plus
     droppable noise (HTML comment, autolink, thematic break) — built
     so md_to_text recovers the exact word stream. Map-only
-    mapInPandas; the markdown module ships by value."""
-    from pyspark import cloudpickle as _cp
-
+    mapInPandas."""
     from yark_spark.operators import markdown as _md_mod
 
-    _cp.register_pickle_by_value(_md_mod)
     _fixture = _md_mod.md_page_fixture
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6327,11 +5919,8 @@ def markdown_extract_features(
     beside the HTML extractor's crawled-web half) and emit (n_chars,
     md5 digest) of the recovered text — the GUNZIP_SCHEMA digest
     recipe on the markup axis. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import markdown as _md_mod
 
-    _cp.register_pickle_by_value(_md_mod)
     _strip = _md_mod.md_to_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6358,22 +5947,6 @@ def markdown_extract_features(
     )
 
 
-def _register_docx_modules():
-    """Ship the docx extractor and its zip/DEFLATE dependency chain by
-    value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import docx as _docx_mod
-    from yark_spark.operators import xml_util as _xml_util_mod
-    from yark_spark.operators import zip_archive as _zipmod
-
-    _register_container_modules()  # png (DEFLATE)
-    _cp.register_pickle_by_value(_zipmod)
-    _cp.register_pickle_by_value(_xml_util_mod)
-    _cp.register_pickle_by_value(_docx_mod)
-    return _docx_mod
-
-
 def with_docx_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -6382,7 +5955,8 @@ def with_docx_payload(
     second carrying xml:space='preserve' + run properties that must
     not leak), XML entities live when the text contains specials.
     Map-only mapInPandas."""
-    _docx_mod = _register_docx_modules()
+    from yark_spark.operators import docx as _docx_mod
+
     _build = _docx_mod.docx_build
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6417,7 +5991,8 @@ def docx_extract_features(
     one hash certifying the EOCD/central-directory/DEFLATE layer AND
     the XML run/paragraph/entity layer together (the E98' composition
     recipe on the office wire). Map-only mapInPandas."""
-    _docx_mod = _register_docx_modules()
+    from yark_spark.operators import docx as _docx_mod
+
     _extract_text = _docx_mod.docx_to_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6444,21 +6019,6 @@ def docx_extract_features(
     )
 
 
-def _register_pdf_modules():
-    """Ship the pdf module and its dependency chain by value: png
-    (zlib/DEFLATE) via the container set, and tiff (the shared LZW
-    wire — pdf's LZWDecode delegates to it since round 13)."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import pdf as _pdf_mod
-    from yark_spark.operators import tiff as _tiff_mod
-
-    _register_container_modules()
-    _cp.register_pickle_by_value(_tiff_mod)
-    _cp.register_pickle_by_value(_pdf_mod)
-    return _pdf_mod
-
-
 def with_pdf_payload(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -6474,8 +6034,7 @@ def with_pdf_payload(
     Tj / kerned-TJ / ' show forms. ``layout='cycle'`` (round 13)
     alternates per doc between the classic xref TABLE and the PDF 1.5
     xref-STREAM + /ObjStm layout, so one oracle digest pins both
-    cross-reference grammars. Map-only mapInPandas; the pdf module
-    (and its png/zlib + tiff/LZW dependencies) ships by value.
+    cross-reference grammars. Map-only mapInPandas.
     ``filters='cycle'`` (round 13) rotates the CLASSIC layout's
     content-stream /Filter through the full §7.4 family per page —
     none / Flate / LZW / RunLength / ASCIIHex / [A85→Flate chain] /
@@ -6487,6 +6046,8 @@ def with_pdf_payload(
     /Differences remap over /BaseEncoding /WinAnsiEncoding (AGL and
     uniXXXX names alternating) / an /Identity-H Type0 CID font with
     2-byte codes — so the digest pins every glyph-to-Unicode path."""
+    from yark_spark.operators import pdf as _pdf_mod
+
     if layout not in ("classic", "cycle"):
         raise ValueError(f"pdf fixture: unknown layout {layout!r}")
     if filters not in ("flate_odd", "cycle"):
@@ -6497,7 +6058,6 @@ def with_pdf_payload(
         raise ValueError(f"pdf fixture: unknown font mode {fonts!r}")
     if fonts == "cycle" and (layout != "classic" or filters != "flate_odd"):
         raise ValueError("pdf fixture: font cycling is classic flate-odd only")
-    _pdf_mod = _register_pdf_modules()
     _build = _pdf_mod.pdf_build
     _cycle = layout == "cycle"
     _filters = filters
@@ -6544,7 +6104,7 @@ def pdf_extract_features(
     (n_chars, md5 digest) of the recovered text — the largest
     "documents" vertical of web crawls under the extraction family's
     one-hash certificate. Map-only mapInPandas."""
-    _extract_text = _register_pdf_modules().pdf_text
+    from yark_spark.operators.pdf import pdf_text as _extract_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -6570,15 +6130,6 @@ def pdf_extract_features(
     )
 
 
-def _register_latex_modules():
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import latex as _latex_mod
-
-    _cp.register_pickle_by_value(_latex_mod)
-    return _latex_mod
-
-
 def with_latex_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -6588,7 +6139,8 @@ def with_latex_payload(
     comments / math noise cycling, an itemize block, a verbatim block
     — so the digest pins the whole detex pass. Map-only
     mapInPandas."""
-    _latex_mod = _register_latex_modules()
+    from yark_spark.operators import latex as _latex_mod
+
     _build = _latex_mod.latex_build
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6619,7 +6171,7 @@ def latex_extract_features(
     stripping → command unwrapping → escape resolution
     (operators/latex), emitting (n_chars, md5 digest) of the
     recovered text. Map-only mapInPandas."""
-    _extract_text = _register_latex_modules().latex_text
+    from yark_spark.operators.latex import latex_text as _extract_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -6645,22 +6197,6 @@ def latex_extract_features(
     )
 
 
-def _register_epub_modules():
-    """Ship the epub extractor and its zip + html dependency chain by
-    value."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import epub as _epub_mod
-    from yark_spark.operators import html as _html_mod
-    from yark_spark.operators import zip_archive as _zipmod
-
-    _register_container_modules()  # png (DEFLATE)
-    _cp.register_pickle_by_value(_zipmod)
-    _cp.register_pickle_by_value(_html_mod)
-    _cp.register_pickle_by_value(_epub_mod)
-    return _epub_mod
-
-
 def with_epub_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -6669,7 +6205,8 @@ def with_epub_payload(
     chapter FILES written in reversed zip order while the OPF spine
     lists reading order — a reader that walks the zip instead of the
     spine fails the digest. Map-only mapInPandas."""
-    _epub_mod = _register_epub_modules()
+    from yark_spark.operators import epub as _epub_mod
+
     _build = _epub_mod.epub_build
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6702,7 +6239,8 @@ def epub_extract_features(
     layers (ZIP grammar, OPF XML, HTML RAWTEXT machine) under one
     digest, the deepest composition in the extraction family.
     Map-only mapInPandas."""
-    _epub_mod = _register_epub_modules()
+    from yark_spark.operators import epub as _epub_mod
+
     _extract_text = _epub_mod.epub_to_text
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6754,11 +6292,8 @@ def parquet_footer_listing(df: DataFrame, payload_col: str = "content") -> DataF
     map-only over binaryFile rows, and at scale only the FOOTER bytes
     need fetching (a range request per object). Map-only
     mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_meta as _pm
 
-    _cp.register_pickle_by_value(_pm)
     _rows = _pm.footer_rows
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6807,19 +6342,8 @@ def parquet_documents_scan(df: DataFrame, payload_col: str = "content") -> DataF
     index must agree row-for-row with an unrelated implementation.
     At 100 TB the unit of work is (file, row group) with ranged
     fetches; per-file map-only here, bytes never shuffle."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()  # gzip + zstd for codec dispatch
-    _pdata.bind_codecs()  # driver-side: workers have no repo on path
-    _cp.register_pickle_by_value(_varint)  # snappy's length prefixes
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
     _read = _pdata.parquet_read_columns
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -6918,19 +6442,9 @@ def parquet_codec_listing(
     PARSED (so a hash match proves the declared codec was really
     dispatched and really reversed). Map-only mapInPandas; one task
     decodes one shard — the (file, row group) unit of a 100 TB scan."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
     from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()  # gzip/zstd/lz4/brotli dispatch
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
     _read = _pdata.parquet_read_columns
     _footer = _pm.parquet_footer
 
@@ -7039,13 +6553,8 @@ def arrow_ipc_listing(
     decompression) and digest each row; the wire label derives from
     the MAGIC we parsed, so a hash match proves both layouts really
     decoded. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import arrow_ipc as _aipc
 
-    _register_container_modules()  # lz4 + zstd ship by value
-    _aipc.bind_codecs()
-    _cp.register_pickle_by_value(_aipc)
     _file_read = _aipc.arrow_file_read
     _stream_read = _aipc.arrow_stream_read
 
@@ -7094,13 +6603,8 @@ def arrow_ipc_write_roundtrip_features(
     fixture by REAL pyarrow — the trusted reader — so the oracle hash
     pins our wire byte-semantics end to end. The reverse lane (our
     reader over pyarrow wire) is q_arrow_ipc_scan. Map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import arrow_ipc as _aipc
 
-    _register_container_modules()
-    _aipc.bind_codecs()
-    _cp.register_pickle_by_value(_aipc)
     _fwrite = _aipc.arrow_file_write
     _swrite = _aipc.arrow_stream_write
 
@@ -7166,13 +6670,8 @@ def arrow_ipc_vector_listing(df: DataFrame) -> DataFrame:
     buffer + child validity — and reduced to the integer-exact
     Σ floor(x·10⁶) checksum the ORC/parquet vector keys use. Zstd
     buffer compression on every shard. Map-only both stages."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import arrow_ipc as _aipc
 
-    _register_container_modules()
-    _aipc.bind_codecs()
-    _cp.register_pickle_by_value(_aipc)
     _read = _aipc.arrow_file_read
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -7269,13 +6768,8 @@ def with_feed_payload(
     feed as RSS 2.0 (``fmt='rss'`` — odd entries CDATA-wrapped, even
     entity-escaped) or Atom 1.0 (``fmt='atom'`` — link as attribute,
     RFC 3339 dates). One applyInPandas per feed group."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import feeds as _feeds_mod
-    from yark_spark.operators import xml_util as _xml_util_mod
 
-    _cp.register_pickle_by_value(_xml_util_mod)
-    _cp.register_pickle_by_value(_feeds_mod)
     _rss, _atom = _feeds_mod.rss_build, _feeds_mod.atom_build
     if fmt not in ("rss", "atom"):
         raise ValueError(f"feed fixture: unknown format {fmt!r}")
@@ -7321,13 +6815,8 @@ def feed_listing(
     RSS or Atom grammar (per ``source``), recover doc_id from the
     entry id, and digest the entry text — the crawl-discovery wire
     under the family's one-hash certificate. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import feeds as _feeds_mod
-    from yark_spark.operators import xml_util as _xml_util_mod
 
-    _cp.register_pickle_by_value(_xml_util_mod)
-    _cp.register_pickle_by_value(_feeds_mod)
     _parse = _feeds_mod.rss_parse if source == "rss" else _feeds_mod.atom_parse
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -7382,11 +6871,8 @@ def with_mp3_payload(
     kbps by doc_id % 4, 32 kHz (per-frame duration an exact 36 ms),
     ID3v2 junk prefix the scanner must skip, ID3v1 title carrying the
     doc id. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mp3 as _mp3_mod
 
-    _cp.register_pickle_by_value(_mp3_mod)
     _build = _mp3_mod.mp3_build
 
     def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -7424,11 +6910,8 @@ def mp3_scan_features(
     sizing), skip ID3v2, parse the ID3v1 title — duration/bitrate/tag
     triage WITHOUT psychoacoustic decode, the avi_scan stance on the
     dominant crawled-audio format. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import mp3 as _mp3_mod
 
-    _cp.register_pickle_by_value(_mp3_mod)
     _scan = _mp3_mod.mp3_scan
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -7479,13 +6962,8 @@ def with_sitemap_payload(
     loc carrying the doc id (with a query string so entity escaping is
     live), lastmod/priority derived from the id. One applyInPandas per
     sitemap group."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import feeds as _feeds_mod
-    from yark_spark.operators import xml_util as _xml_util_mod
 
-    _cp.register_pickle_by_value(_xml_util_mod)
-    _cp.register_pickle_by_value(_feeds_mod)
     _build = _feeds_mod.sitemap_build
 
     def _make(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -7521,13 +6999,8 @@ def sitemap_listing(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     third discovery wire beside robots (policy) and feeds (updates) —
     sitemaps enumerate what a site WANTS crawled; doc ids recover from
     the loc path. Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import feeds as _feeds_mod
-    from yark_spark.operators import xml_util as _xml_util_mod
 
-    _cp.register_pickle_by_value(_xml_util_mod)
-    _cp.register_pickle_by_value(_feeds_mod)
     _parse = _feeds_mod.sitemap_parse
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -7568,40 +7041,6 @@ ICEBERG_SNAPSHOT_SCHEMA = StructType(
 )
 
 
-def _register_iceberg_modules():
-    """Ship the Iceberg resolver and its avro + parquet substrate by
-    value (see by-value shipping discipline: every transitive in-repo
-    module must itself be registered)."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import avro_ocf as _avro
-    from yark_spark.operators import iceberg as _ice
-    from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
-
-    _register_container_modules()  # png (DEFLATE), zstd, containers
-    _pw.bind_codecs()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
-    _cp.register_pickle_by_value(_avro)
-    # v3 deletion vectors (round 16): iceberg resolves puffin blobs,
-    # which resolve roaring bitmaps — both must ship by value too
-    from yark_spark.operators import puffin as _puffin
-    from yark_spark.operators import roaring as _roar
-
-    _cp.register_pickle_by_value(_roar)
-    _cp.register_pickle_by_value(_puffin)
-    _cp.register_pickle_by_value(_ice)
-    return _ice
-
-
 def with_iceberg_table_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -7622,13 +7061,11 @@ def with_iceberg_table_payload(
     Every file is in-repo wire: parquet via operators/parquet_write,
     manifests via operators/avro_ocf (deflate blocks), the tree via
     operators/containers tar. One applyInPandas per table group."""
-    _ice = _register_iceberg_modules()
-    from pyspark.cloudpickle import register_pickle_by_value as _reg  # noqa: F401
-
     from yark_spark.operators import avro_ocf as _avro
+    from yark_spark.operators import containers as _cont
+    from yark_spark.operators import iceberg as _ice
     from yark_spark.operators import parquet_write as _pw
 
-    _cont = _register_container_modules()
     _tar = _cont.tar_build
     _write = _pw.parquet_write
     _abuild = _avro.avro_build
@@ -7831,8 +7268,8 @@ def iceberg_write_roundtrip_features(
     arithmetic (lineage, reuse, time travel at each snapshot,
     metadata-log) is pinned in tests/test_iceberg_write.py. One
     applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -7959,8 +7396,8 @@ def iceberg_write_prune_features(
     written tables must PRUNE exactly like read-side fixtures, or the
     write path isn't really Iceberg. Counters + rows pinned in the
     oracle. One applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -8066,8 +7503,8 @@ def iceberg_rename_features(
     nothing on renamed tables; id resolution is what the spec
     mandates and what makes rename O(metadata). One applyInPandas
     per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -8141,7 +7578,8 @@ def iceberg_snapshot_features(
     sequence number that added them. ``snapshot_id`` selects
     time-travel (q_iceberg_time_travel reads snapshot 1, before any
     delete file existed). Map-only mapInPandas."""
-    _ice = _register_iceberg_modules()
+    from yark_spark.operators import iceberg as _ice
+
     _rows = _ice.iceberg_snapshot_rows
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -8204,7 +7642,8 @@ def warc_http_decode_features(
     sizes and gzip bytes as 'text' for most of the web. Map-only
     mapInPandas; the gzip/zstd inflate runs where the record already
     is, nothing re-shuffles."""
-    _cont = _register_container_modules()
+    from yark_spark.operators import containers as _cont
+
     _records = _cont.warc_records
     _decode = _cont.http_message_decode
     _member_id = _cont.member_doc_id
@@ -8279,22 +7718,9 @@ def parquet_prune_scan_features(
     (pinned separately in tests/test_parquet_prune.py — bloom skips
     are deterministic but not SQL-derivable, false positives by
     design). One applyInPandas per shard group."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pw.bind_codecs()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
     _write = _pw.parquet_write
     _scan = _pdata.parquet_scan_filtered
 
@@ -8370,21 +7796,9 @@ def parquet_page_prune_features(
     (q_parquet_prune_scan) is useless INSIDE a huge row group; the
     page index is what keeps a point probe O(pages-hit) there, and
     this fixture proves our planner reads the index the real writer
-    emits. One applyInPandas per shard; pyarrow is an installed
-    package, importable on vanilla workers."""
-    from pyspark import cloudpickle as _cp
-
+    emits. One applyInPandas per shard."""
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
     _scan = _pdata.parquet_page_scan_filtered
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -8478,24 +7892,10 @@ def with_delta_checkpoint_payload(
     older than 30 days. Expected: docs 0-7 at checkpoint version 2,
     24-31 at 3, 8-15 at 4 (as part-4), 16-23 vanished. One
     applyInPandas per table group."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pw.bind_codecs()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
     _write = _pw.parquet_write
-    _cont = _register_container_modules()
     _tar = _cont.tar_build
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -8606,19 +8006,8 @@ def orc_stripe_prune_features(
     the output so the oracle pins the plan. Third-party-wire pruning
     (genuine pyarrow/ORC_CPP multi-stripe files) is pinned in
     tests/test_orc.py. One applyInPandas per shard; map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _write = _orc_mod.orc_write
     _scan = _orc_mod.orc_scan_filtered
 
@@ -8695,19 +8084,8 @@ def orc_rowindex_prune_features(
     parquet page-index pruning (E138') on the other columnar
     substrate — the finest skip grain a 100 TB ORC warehouse scan
     has. One applyInPandas per table; map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _scan = _orc_mod.orc_scan_rowgroups
     _write = _orc_mod.orc_write
 
@@ -8802,11 +8180,11 @@ def iceberg_partition_scan_features(
     files inside the other, and decode exactly two files. Counters
     ride in the output; the oracle pins the plan AND the rows. One
     applyInPandas per table group, map-only resolve."""
-    _ice = _register_iceberg_modules()
     from yark_spark.operators import avro_ocf as _avro
+    from yark_spark.operators import containers as _cont
+    from yark_spark.operators import iceberg as _ice
     from yark_spark.operators import parquet_write as _pw
 
-    _cont = _register_container_modules()
     _tar = _cont.tar_build
     _write = _pw.parquet_write
     _abuild = _avro.avro_build
@@ -8980,11 +8358,11 @@ def iceberg_transform_scan_features(
     for truncate — and two files via partition structs, decoding
     exactly two. One applyInPandas per table group, map-only
     resolve."""
-    _ice = _register_iceberg_modules()
     from yark_spark.operators import avro_ocf as _avro
+    from yark_spark.operators import containers as _cont
+    from yark_spark.operators import iceberg as _ice
     from yark_spark.operators import parquet_write as _pw
 
-    _cont = _register_container_modules()
     _tar = _cont.tar_build
     _write = _pw.parquet_write
     _abuild = _avro.avro_build
@@ -9236,19 +8614,8 @@ def parquet_int96_scan_features(
     both: INT96 → exact epoch microseconds, FLBA DECIMAL → unscaled
     integer, and the oracle re-derives each value arithmetically from
     the doc key. One applyInPandas per shard; map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
     _read = _pdata.parquet_read_columns
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -9326,19 +8693,8 @@ def orc_logical_scan_features(
     corpus carries — decoded by the from-scratch reader to exact
     integers and digests, oracle-re-derived arithmetically from the
     doc key. One applyInPandas per shard; map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _read = _orc_mod.orc_read_columns
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -9425,19 +8781,8 @@ def orc_struct_scan_features(
     crawl.lang two levels down, ~quarter of envelopes null) — read
     back through the dotted-path presence-chain weave. One
     applyInPandas per shard; map-only."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc_mod
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc_mod._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc_mod)
     _read = _orc_mod.orc_read_columns
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -9516,28 +8861,6 @@ NESTED_PARQUET_SCHEMA = StructType(
 )
 
 
-def _register_parquet_nested_modules():
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import parquet_data as _pdata
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import parquet_nested as _pn
-    from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
-
-    _register_container_modules()
-    _pdata.bind_codecs()
-    _pw.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pdata)
-    _cp.register_pickle_by_value(_pw)
-    _cp.register_pickle_by_value(_pn)
-    return _pdata, _pw, _pn
-
-
 def parquet_nested_foreign_scan(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -9554,7 +8877,9 @@ def parquet_nested_foreign_scan(
     Real lakes carry map metadata and list<struct> everywhere — this
     was the #1 foreign-file gap. Map-only mapInPandas; page version
     and row-group size cycle per batch."""
-    _pdata, _, _pn = _register_parquet_nested_modules()
+    from yark_spark.operators import parquet_data as _pdata
+    from yark_spark.operators import parquet_nested as _pn
+
     _read = _pdata.parquet_read_columns
     _fixture = _pn.nested_fixture_cols
     _decode = _pn.nested_decode_frame
@@ -9611,7 +8936,10 @@ def parquet_nested_write_features(
     Codec and page version cycle per batch. With E166 this closes
     write-side nested parity — the lake substrate reads what others
     write and writes what others read, maps included."""
-    _pdata, _pw, _pn = _register_parquet_nested_modules()
+    from yark_spark.operators import parquet_data as _pdata
+    from yark_spark.operators import parquet_write as _pw
+    from yark_spark.operators import parquet_nested as _pn
+
     _read = _pdata.parquet_read_columns
     _write = _pw.parquet_write
     _plist, _pmap = _pw.plist, _pw.pmap
@@ -9669,12 +8997,13 @@ def delta_dv_write_features(
     writer that mangles any framing byte breaks its own reader's
     CRC/cardinality cross-checks. Docs with doc_id%4==1 die. One
     applyInPandas per table, map-only resolve."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _rows = _dl.delta_snapshot_rows
     _dv_write = _dl.delta_add_deletion_vectors
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_resolve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -9765,12 +9094,13 @@ def delta_mapping_id_features(
     MAP column) and its version-0 commit deleted, so resolution must
     recover the mapping from the checkpoint (the r14 ADVICE gap).
     One applyInPandas per table, map-only resolve."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _rows = _dl.delta_snapshot_rows
     _ckpt = _dl.delta_checkpoint_table
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_resolve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -9870,19 +9200,8 @@ def orc_logical_roundtrip_features(
     tests/test_orc.py (incl. negative patched bases and the
     dictionary). Map-only mapInPandas; compression cycles per
     batch."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import orc as _orc
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import tfrecord as _tf
-    from yark_spark.operators import varint as _varint
 
-    _register_container_modules()
-    _orc._bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_tf)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_orc)
     _write = _orc.orc_write
     _read = _orc.orc_read_columns
 
@@ -9984,7 +9303,8 @@ def avro_logical_roundtrip_features(
     that surfaces decimal bytes raw instead of the unscaled int
     breaks every downstream comparison. Block codec cycles per batch.
     Map-only mapInPandas."""
-    _avro = _register_avro_modules()
+    from yark_spark.operators import avro_ocf as _avro
+
     _build_file = _avro.avro_build
     _records = _avro.avro_records
 
@@ -10076,13 +9396,8 @@ def arrow_ipc_temporal_features(
     unscaled), struct and map columns either way. pyarrow validates
     and reads our wire value-for-value in tests/test_arrow_ipc.py.
     Map-only mapInPandas."""
-    from pyspark import cloudpickle as _cp
-
     from yark_spark.operators import arrow_ipc as _aipc
 
-    _register_container_modules()
-    _aipc.bind_codecs()
-    _cp.register_pickle_by_value(_aipc)
     _read = _aipc.arrow_file_read
     _write = _aipc.arrow_file_write
 
@@ -10213,11 +9528,12 @@ def delta_partition_prune_features(
     holds the same partition-skip contract as Iceberg's E136'': a
     one-partition query on a 100 TB table reads O(partition). One
     applyInPandas per table; map-only resolve."""
-    _dl = _register_delta_modules()
-    _scan = _dl.delta_partition_scan
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _scan = _dl.delta_partition_scan
+
     _write = _pw_mod.parquet_write
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -10324,11 +9640,12 @@ def delta_time_travel_features(
     the rows that replaced them. A replay that ignores the version
     bound returns the union and fails the digest on both halves. One
     applyInPandas per table; map-only resolve."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _write = _pw_mod.parquet_write
 
     def _build_and_resolve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -10428,14 +9745,15 @@ def delta_v2_checkpoint_features(
     goes through _replay_from_v2_checkpoint: with the JSON log gone,
     a reader without v2 support has NOTHING to replay. One
     applyInPandas per table; map-only resolve."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+    from yark_spark.operators.containers import tar_members as _tm
+
     _rows = _dl.delta_snapshot_rows
     _v2 = _dl.delta_checkpoint_table_v2
     _dv_write = _dl.delta_add_deletion_vectors
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
-    _tm = _register_container_modules().tar_members
     _write = _pw_mod.parquet_write
 
     def _build_and_resolve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -10553,8 +9871,8 @@ def iceberg_eq_multi_features(
     deletes doc_id%8==2 too and fails the oracle). Resolution through
     iceberg_snapshot_rows with the strict delete.seq > data.seq rule.
     One applyInPandas per table; map-only resolve."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -10670,11 +9988,12 @@ def delta_timestamp_ntz_features(
     the instant column naive=False — a reader that cannot see
     isAdjustedToUTC cannot produce the flags. One applyInPandas per
     table; map-only resolve."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_meta as _pm_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _footer = _pm_mod.parquet_footer
     _ntz_flag = _pm_mod.timestamp_ntz_flag
 
@@ -10798,8 +10117,8 @@ def iceberg_v3_dv_features(
     the puffin blob region and applies the vector to exactly its
     referenced file under the >= sequence rule. One applyInPandas per
     table; map-only resolve."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
     from yark_spark.operators import puffin as _puffin_mod
 
@@ -10922,11 +10241,12 @@ def delta_multipart_checkpoint_features(
     only `<V>.checkpoint.parquet`, or only part 1, has nothing or half
     a table). Big tables' checkpoints actually arrive this way. One
     applyInPandas per table; map-only resolve."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _write = _pw_mod.parquet_write
     _pmap = _pw_mod.pmap
 
@@ -11045,11 +10365,12 @@ def delta_change_feed_features(
     the v0 adds ignores the range bound). File-granularity CDF is how
     incremental consumers tail a Delta table without rescanning the
     snapshot. One applyInPandas per table; map-only."""
-    _dl = _register_delta_modules()
-    _feed = _dl.delta_change_feed
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _feed = _dl.delta_change_feed
+
     _write = _pw_mod.parquet_write
 
     def _build_and_read(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -11149,8 +10470,8 @@ def iceberg_incremental_features(
     a parent-chain hop drops a file, and reused manifests (every
     later manifest-list carries the earlier manifests verbatim)
     contribute nothing. One applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_data as _pd_mod
     from yark_spark.operators import parquet_write as _pw
 
@@ -11249,15 +10570,16 @@ def delta_stats_skip_features(
     checkpoint and %4==3 into a V2 checkpoint first (stats must
     survive both as the string column). One applyInPandas per table;
     map-only."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _stats_fn = _dl.delta_stats
     _scan = _dl.delta_stats_scan
     _add_dv = _dl.delta_add_deletion_vectors
     _ckpt = _dl.delta_checkpoint_table
     _ckpt_v2 = _dl.delta_checkpoint_table_v2
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -11413,8 +10735,8 @@ def iceberg_bounds_prune_features(
     vanish from the survivors — a reader that prunes delete files by
     data bounds, or ignores bounds entirely, fails counters or hash.
     One applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -11582,12 +10904,13 @@ def delta_cdf_rows_features(
     double-counts the update), and the DV DIFF as 4 deletes@3 (was a
     typed reject). Postimage digests prove the cdc file's values flow
     through (text + '-v2'). One applyInPandas per table; map-only."""
-    _dl = _register_delta_modules()
-    _feed = _dl.delta_change_feed
-    _add_dv = _dl.delta_add_deletion_vectors
+    from yark_spark.operators import containers as _cont
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
 
-    _cont = _register_container_modules()
+    _feed = _dl.delta_change_feed
+    _add_dv = _dl.delta_add_deletion_vectors
+
     _tar = _cont.tar_build
     _write = _pw_mod.parquet_write
 
@@ -11715,8 +11038,8 @@ def iceberg_changelog_features(
     overwrite/delete snapshots, this is the CDC consumer's view
     (`operators/iceberg.py iceberg_changelog`). One applyInPandas per
     table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -11829,15 +11152,16 @@ def delta_optimize_features(
     emits NOTHING (a consumer re-emitting compacted rows
     double-counts every rewrite). One applyInPandas per table;
     map-only."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _stats_fn = _dl.delta_stats
     _optimize = _dl.delta_optimize
     _rows = _dl.delta_snapshot_rows
     _feed = _dl.delta_change_feed
     _add_dv = _dl.delta_add_deletion_vectors
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_optimize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -11935,8 +11259,8 @@ def iceberg_optimize_features(
     the compaction; changelog_events=0 pins that a replace snapshot
     emits nothing to CDC consumers. One applyInPandas per table;
     map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -12037,12 +11361,13 @@ def delta_time_travel_ts_features(
     `operators/deltalog.py delta_version_at_timestamp`. Rows come
     from the timestamp-resolved snapshot replay. One applyInPandas
     per table; map-only."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _rows = _dl.delta_snapshot_rows
     _at_ts = _dl.delta_version_at_timestamp
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_probe(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -12144,8 +11469,8 @@ def iceberg_time_travel_ts_features(
     (latest at-or-before on the CURRENT ancestry chain), probe ts=999
     the head — `operators/iceberg.py iceberg_snapshot_at_timestamp`.
     One applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -12243,8 +11568,8 @@ def iceberg_refs_features(
     `iceberg_commit(branch=...)`). A reader that conflates refs with
     the head, or lets a branch commit move main, fails the hash. One
     applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -12344,11 +11669,12 @@ def delta_type_widening_features(
     — so both halves agree with one doc_id-arithmetic oracle
     (`operators/deltalog.py` `_check_protocol` /
     `delta_snapshot_rows`). One applyInPandas per table; map-only."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _write = _pw_mod.parquet_write
 
     def _build_and_read(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -12475,12 +11801,13 @@ def delta_part_stats_features(
     partition-prune-then-data-skip pipeline every real planner runs
     (`operators/deltalog.py delta_partition_scan(predicate=...)`).
     One applyInPandas per table; map-only."""
-    _dl = _register_delta_modules()
+    from yark_spark.operators import deltalog as _dl
+    from yark_spark.operators import parquet_write as _pw_mod
+    from yark_spark.operators.containers import tar_build as _tar
+
     _stats_fn = _dl.delta_stats
     _scan = _dl.delta_partition_scan
-    from yark_spark.operators import parquet_write as _pw_mod
 
-    _tar = _register_container_modules().tar_build
     _write = _pw_mod.parquet_write
 
     def _build_and_scan(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -12598,8 +11925,8 @@ def iceberg_part_stats_features(
     6 files to the partition struct, 1 to bounds, 1 opens
     (`operators/iceberg.py iceberg_partition_scan(predicate=...)`).
     One applyInPandas per table; map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_write as _pw
 
     _tar = _cont.tar_build
@@ -12710,8 +12037,8 @@ def iceberg_v1_write_features(
     ('tt1'), and the incremental scan over (s1, s2] ('incr'). Delete
     files on v1 are a typed reject. One applyInPandas per table;
     map-only."""
-    _ice = _register_iceberg_modules()
-    _cont = _register_container_modules()
+    from yark_spark.operators import iceberg as _ice
+    from yark_spark.operators import containers as _cont
     from yark_spark.operators import parquet_data as _pd_mod
     from yark_spark.operators import parquet_write as _pw
 
@@ -12817,12 +12144,13 @@ def delta_variant_features(
     dictionary order, an offset width, or the long-string path fails
     the hash (`operators/variant.py`, `operators/deltalog.py`). One
     applyInPandas per table; map-only."""
-    _dl = _register_delta_modules()
-    _rows = _dl.delta_snapshot_rows
+    from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
     from yark_spark.operators import variant as _var_mod
+    from yark_spark.operators.containers import tar_build as _tar
 
-    _tar = _register_container_modules().tar_build
+    _rows = _dl.delta_snapshot_rows
+
     _write = _pw_mod.parquet_write
     _encode = _var_mod.variant_from_python
 

@@ -41,7 +41,11 @@ from __future__ import annotations
 
 import struct
 
+from yark_spark.operators.lz4 import lz4_block_decompress
+from yark_spark.operators.png import inflate, zlib_compress
+from yark_spark.operators.snappy import snappy_decompress
 from yark_spark.operators.tfrecord import _fields, _read_varint, _tag, _write_varint
+from yark_spark.operators.zstd import zstd_frames
 
 __all__ = ["orc_read_columns"]
 
@@ -76,28 +80,12 @@ _FBS = [
     17, 18, 19, 20, 21, 22, 23, 24, 26, 28, 30, 32, 40, 48, 56, 64,
 ]
 
-_BIND = {}
-
-
-def _bind_codecs() -> None:
-    if _BIND:
-        return
-    from yark_spark.operators import containers as _c
-    from yark_spark.operators import lz4 as _l
-    from yark_spark.operators import png as _p
-    from yark_spark.operators import snappy as _s
-    from yark_spark.operators import zstd as _z
-
-    _BIND.update(png=_p, snappy=_s, zstd=_z, lz4=_l, containers=_c)
-
-
 def _decompress_chunks(data: bytes, compression: str, max_output: int) -> bytes:
     """ORC stream framing: 3-byte little-endian header per chunk,
     ``(length << 1) | is_original``; original chunks pass through,
     others decode with the named codec (ZLIB = RAW deflate)."""
     if compression == "NONE":
         return data
-    _bind_codecs()
     out = bytearray()
     pos, n = 0, len(data)
     while pos < n:
@@ -113,17 +101,13 @@ def _decompress_chunks(data: bytes, compression: str, max_output: int) -> bytes:
         if header & 1:
             out += chunk
         elif compression == "ZLIB":
-            out += _BIND["png"].inflate(chunk, max_output=max_output)
+            out += inflate(chunk, max_output=max_output)
         elif compression == "SNAPPY":
-            out += _BIND["snappy"].snappy_decompress(chunk, max_output=max_output)
+            out += snappy_decompress(chunk, max_output=max_output)
         elif compression == "ZSTD":
-            out += b"".join(
-                _BIND["zstd"].zstd_frames(bytes(chunk), max_output=max_output)
-            )
+            out += b"".join(zstd_frames(bytes(chunk), max_output=max_output))
         elif compression == "LZ4":
-            out += _BIND["lz4"].lz4_block_decompress(
-                bytes(chunk), max_output=max_output
-            )
+            out += lz4_block_decompress(bytes(chunk), max_output=max_output)
         else:
             raise NotImplementedError(f"orc: compression {compression}")
         if len(out) > max_output:
@@ -679,7 +663,6 @@ def _chunks_from(
     never touched, which is the point of the index at 100 TB."""
     if compression == "NONE":
         return raw[byte_off : byte_off + need] if need else raw[byte_off:]
-    _bind_codecs()
     out = bytearray()
     pos, n = chunk_off, len(raw)
     target = byte_off + need
@@ -1373,12 +1356,11 @@ def _chunks_compress(data: bytes, compression: str) -> bytes:
         return data
     if compression != "ZLIB":
         raise NotImplementedError(f"orc-write: compression {compression}")
-    _bind_codecs()
     out = bytearray()
     block = 1 << 15
     for at in range(0, max(len(data), 1), block):
         chunk = data[at : at + block]
-        comp = _BIND["png"].zlib_compress(chunk)[2:-4]  # raw deflate
+        comp = zlib_compress(chunk)[2:-4]  # raw deflate
         if len(comp) < len(chunk):
             header = len(comp) << 1
             body = comp

@@ -200,38 +200,14 @@ def _bit_width(v: int) -> int:
     return v.bit_length()
 
 
-_SNAPPY = None  # bound by bind_codecs(); ships by value with this module
-_CONTAINERS = None
-_ZSTD = None
-_BROTLI = None
-_LZ4 = None
-
-
-def bind_codecs():
-    """Resolve the page-codec modules into module globals (the
-    containers.bind_zstd pattern): called DRIVER-side before pickling
-    so executors that receive this module by value carry the codecs —
-    a runtime ``import yark_spark...`` inside a worker has no repo on
-    its path."""
-    global _SNAPPY, _CONTAINERS, _ZSTD, _BROTLI, _LZ4
-    if _SNAPPY is None:
-        from yark_spark.operators import brotli as _b
-        from yark_spark.operators import containers as _c
-        from yark_spark.operators import lz4 as _l
-        from yark_spark.operators import snappy as _s
-        from yark_spark.operators import zstd as _z
-
-        _b.bind_dict()  # static dictionary ships with the module
-        _b.bind_ctx()
-        _SNAPPY, _CONTAINERS, _ZSTD, _BROTLI, _LZ4 = _s, _c, _z, _b, _l
-
-
 def _lz4_hadoop_decompress(data: bytes, uncompressed_size: int) -> bytes:
     """Legacy LZ4 codec (wire id 5): Hadoop's BlockCompressorStream
     framing — repeated [uncompressed_len BE4][compressed_len BE4]
     [raw lz4 block] — with arrow C++'s fallback: if the frame walk
     doesn't reproduce exactly ``uncompressed_size`` bytes, treat the
     whole payload as one raw block (old parquet-cpp wrote that)."""
+    from yark_spark.operators.lz4 import lz4_block_decompress
+
     try:
         pos, parts, total = 0, [], 0
         while pos < len(data):
@@ -242,7 +218,7 @@ def _lz4_hadoop_decompress(data: bytes, uncompressed_size: int) -> bytes:
             if comp > len(data) - pos:
                 raise ValueError("lz4-hadoop: block overruns payload")
             parts.append(
-                _LZ4.lz4_block_decompress(data[pos : pos + comp], max_output=unc)
+                lz4_block_decompress(data[pos : pos + comp], max_output=unc)
             )
             if len(parts[-1]) != unc:
                 raise ValueError("lz4-hadoop: block size mismatch")
@@ -252,23 +228,32 @@ def _lz4_hadoop_decompress(data: bytes, uncompressed_size: int) -> bytes:
             raise ValueError("lz4-hadoop: frame total mismatch")
         return b"".join(parts)
     except ValueError:
-        return _LZ4.lz4_block_decompress(data, max_output=uncompressed_size)
+        return lz4_block_decompress(data, max_output=uncompressed_size)
 
 
 def _decompress(codec: str, data: bytes, uncompressed_size: int) -> bytes:
-    bind_codecs()
     if codec == "UNCOMPRESSED" or codec == 0:
         out = data
     elif codec == "SNAPPY":
-        out = _SNAPPY.snappy_decompress(data, max_output=256 << 20)
+        from yark_spark.operators.snappy import snappy_decompress
+
+        out = snappy_decompress(data, max_output=256 << 20)
     elif codec == "GZIP":
-        out = _CONTAINERS.gzip_decompress(data, max_output=256 << 20)
+        from yark_spark.operators.containers import gzip_decompress
+
+        out = gzip_decompress(data, max_output=256 << 20)
     elif codec == "ZSTD":
-        out = b"".join(_ZSTD.zstd_frames(data, max_output=256 << 20))
+        from yark_spark.operators.zstd import zstd_frames
+
+        out = b"".join(zstd_frames(data, max_output=256 << 20))
     elif codec == "BROTLI":
-        out = _BROTLI.brotli_decompress(data, max_output=256 << 20)
+        from yark_spark.operators.brotli import brotli_decompress
+
+        out = brotli_decompress(data, max_output=256 << 20)
     elif codec == "LZ4_RAW":
-        out = _LZ4.lz4_block_decompress(data, max_output=uncompressed_size)
+        from yark_spark.operators.lz4 import lz4_block_decompress
+
+        out = lz4_block_decompress(data, max_output=uncompressed_size)
     elif codec == "LZ4":
         out = _lz4_hadoop_decompress(data, uncompressed_size)
     else:
@@ -1148,12 +1133,13 @@ def parquet_scan_filtered(
                 counters["skipped_stats"] += 1
                 continue
         if hi is None and col.get("bloom_filter_offset") is not None:
-            bind_codecs()
+            from yark_spark.operators.zstd import xxh64
+
             off = col["bloom_filter_offset"]
             ln = col.get("bloom_filter_length")
             end = off + ln if ln else len(payload)
             bitset = sbbf_parse(bytes(payload[off:end]))
-            if not sbbf_contains(bitset, _ZSTD.xxh64(_probe_encode(ptype, lo))):
+            if not sbbf_contains(bitset, xxh64(_probe_encode(ptype, lo))):
                 counters["skipped_bloom"] += 1
                 continue
         survivors.append(rg)

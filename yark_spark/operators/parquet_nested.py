@@ -1,9 +1,6 @@
 """Nested-parquet fixture + flatten glue for E166/E167 (round 15).
 
-Small on purpose: worker closures reference these helpers, so the
-module is cloudpickle-registered by value (multimodal itself is not
-— vanilla-session Python workers have no repo on their path). The
-fixture rules put every null/empty grammar position on a doc_id
+The fixture rules put every null/empty grammar position on a doc_id
 modulus so the DuckDB oracle recomputes the flattened nested values
 in pure SQL (yark_spark/queries/round15.py)."""
 

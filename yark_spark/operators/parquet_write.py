@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+
 from yark_spark.operators.parquet_meta import (
     sbbf_insert,
     sbbf_serialize,
@@ -165,17 +167,6 @@ def _t_binary_elem(v: bytes) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def _numpy():
-    """numpy, or None — resolved lazily so by-value shipping of this
-    module never forces the import at unpickle time."""
-    try:
-        import numpy
-
-        return numpy
-    except ImportError:  # pragma: no cover - numpy ships with pyspark
-        return None
-
-
 def _hybrid_encode_const(value: int, count: int, bit_width: int) -> bytes:
     """``_hybrid_encode([value] * count, bit_width)`` without building
     the list — byte-identical: a run of 8+ is one RLE run, a shorter
@@ -258,8 +249,7 @@ def _plain_encode(ptype: str, values: list) -> bytes:
         return bytes(out)
     if ptype in ("INT32", "INT64", "FLOAT", "DOUBLE"):
         code = {"INT32": "i", "INT64": "q", "FLOAT": "f", "DOUBLE": "d"}[ptype]
-        np = _numpy()
-        if np is not None and isinstance(values, np.ndarray):
+        if isinstance(values, np.ndarray):
             # one C buffer copy when the cast is lossless; anything
             # that could overflow/narrow falls through to struct.pack,
             # which keeps the per-value error semantics
@@ -355,47 +345,34 @@ def _delta_length_ba_encode(values: list) -> bytes:
     return _delta_binary_encode([len(b) for b in blobs]) + b"".join(blobs)
 
 
-_SNAPPY = None  # bound by bind_codecs(); ships by value with this module
-_CONTAINERS = None
-_ZSTD = None
-_BROTLI = None
-_LZ4 = None
-
-
-def bind_codecs():
-    """Resolve codec modules into module globals driver-side (the
-    parquet_data/containers pattern) — workers receiving this module
-    by value cannot ``import yark_spark`` at runtime."""
-    global _SNAPPY, _CONTAINERS, _ZSTD, _BROTLI, _LZ4
-    if _SNAPPY is None:
-        from yark_spark.operators import brotli as _b
-        from yark_spark.operators import containers as _c
-        from yark_spark.operators import lz4 as _l
-        from yark_spark.operators import snappy as _s
-        from yark_spark.operators import zstd as _z
-
-        _SNAPPY, _CONTAINERS, _ZSTD, _BROTLI, _LZ4 = _s, _c, _z, _b, _l
-
-
 def _compress(codec: str, data: bytes) -> bytes:
     if codec == "UNCOMPRESSED":
         return data
-    bind_codecs()
     if codec == "SNAPPY":
-        return _SNAPPY.snappy_compress(data)
+        from yark_spark.operators.snappy import snappy_compress
+
+        return snappy_compress(data)
     if codec == "GZIP":
-        return _CONTAINERS.gzip_compress(data)
+        from yark_spark.operators.containers import gzip_compress
+
+        return gzip_compress(data)
     if codec == "ZSTD":
-        return _ZSTD.zstd_compress(data, method="compressed")
+        from yark_spark.operators.zstd import zstd_compress
+
+        return zstd_compress(data, method="compressed")
     if codec == "BROTLI":
-        return _BROTLI.brotli_compress(data)
+        from yark_spark.operators.brotli import brotli_compress
+
+        return brotli_compress(data)
+    from yark_spark.operators.lz4 import lz4_block_compress
+
     if codec == "LZ4_RAW":
-        return _LZ4.lz4_block_compress(data)
+        return lz4_block_compress(data)
     if codec == "LZ4":
         # Legacy Hadoop framing (wire id 5): one
         # [uncompressed BE4][compressed BE4][raw block] frame —
         # the shape arrow C++'s Lz4HadoopCodec and parquet-mr emit.
-        block = _LZ4.lz4_block_compress(data)
+        block = lz4_block_compress(data)
         return struct.pack(">II", len(data), len(block)) + block
     raise NotImplementedError(f"parquet-write: codec {codec}")
 
@@ -442,8 +419,7 @@ def _minmax_encoded(ptype: str, present: list) -> "tuple[bytes, bytes] | None":
     encode succeeds."""
     if len(present) == 0:
         return None
-    np = _numpy()
-    if np is not None and isinstance(present, np.ndarray):
+    if isinstance(present, np.ndarray):
         # C-speed reduction; floats only when NaN-free (builtin min/max
         # skip NaN position-dependently, np.min propagates it)
         if present.dtype.kind in "iu" or (
@@ -473,8 +449,7 @@ def _statistics_struct(ptype: str, vals: list, present: list) -> bytes:
 
 
 def _infer_type(name: str, values: list) -> str:
-    np = _numpy()
-    if np is not None and isinstance(values, np.ndarray) and len(values):
+    if isinstance(values, np.ndarray) and len(values):
         # dtype decides directly (np scalars are not Python int/float)
         if values.dtype.kind == "b":
             return "BOOLEAN"
@@ -1023,9 +998,8 @@ def _write_chunk(
     ``page_version=2`` emits DataPageV2 (levels uncompressed outside
     the compressed region, the post-2.0 page shape)."""
     path = [name] if isinstance(name, str) else name
-    np = _numpy()
     np_vals = None
-    if np is not None and isinstance(vals, np.ndarray):
+    if isinstance(vals, np.ndarray):
         if (
             vals.dtype.kind in "iuf"
             and force_encoding is None
@@ -1226,10 +1200,11 @@ def _write_chunk(
         meta.i64(11, dict_offset)
     meta.struct(12, _statistics_struct(ptype, vals, present))
     if bloom and len(present):
-        bind_codecs()
+        from yark_spark.operators.zstd import xxh64
+
         bitset = bytearray(sbbf_size_bytes(len(distinct)))
         for v in distinct:
-            sbbf_insert(bitset, _ZSTD.xxh64(_stat_encode(ptype, v)))
+            sbbf_insert(bitset, xxh64(_stat_encode(ptype, v)))
         blob = sbbf_serialize(bytes(bitset))
         # bloom bytes live between chunks but do NOT count into
         # total_compressed_size (parquet-mr convention: pages only).

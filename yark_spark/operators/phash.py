@@ -11,7 +11,7 @@ keep the low-frequency 8x8 block, threshold against its median →
 64-bit signature whose Hamming distance tracks perceptual similarity
 and survives recompression.
 
-Pure numpy, self-contained (ships to executors by value); the DCT is
+Pure numpy, self-contained; the DCT is
 the same orthonormal construction as operators/jpeg's. No SQL oracle
 can reproduce a DCT median threshold, so the registry key is
 rows-only, governed by the invariance contracts in

@@ -99,9 +99,6 @@ def rules_for_agent(
     return combined
 
 
-# plain-dict memo, NOT functools.lru_cache: the wrapper type pickles by
-# REFERENCE even when this module is registered by value, which would
-# make vanilla-session workers import yark_spark (caught by driver sim)
 _REGEX_CACHE: dict[str, re.Pattern] = {}
 
 

@@ -238,26 +238,6 @@ def encode_example(features: dict[str, tuple[str, list]]) -> bytes:
     return _len_delim(1, bytes(body))
 
 
-def _skip_field(buf: memoryview, pos: int, wire: int) -> int:
-    if wire == _WIRE_VARINT:
-        _, pos = _read_varint(buf, pos)
-        return pos
-    if wire == _WIRE_I64:
-        if pos + 8 > len(buf):
-            raise ValueError("protobuf: truncated fixed64")
-        return pos + 8
-    if wire == _WIRE_LEN:
-        ln, pos = _read_varint(buf, pos)
-        if pos + ln > len(buf):
-            raise ValueError("protobuf: truncated length-delimited field")
-        return pos + ln
-    if wire == _WIRE_I32:
-        if pos + 4 > len(buf):
-            raise ValueError("protobuf: truncated fixed32")
-        return pos + 4
-    raise ValueError(f"protobuf: unsupported wire type {wire}")
-
-
 def _fields(buf: memoryview):
     """Yield (field_number, wire_type, value_or_span) over a message.
 

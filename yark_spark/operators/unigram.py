@@ -227,11 +227,6 @@ def unigram_train_distributed(
     the driver between sweeps. Seeding aggregates substring counts
     the same way. Pinned equal (1e-9 rel) to the sequential trainer
     in tests/test_unigram.py."""
-    from pyspark import cloudpickle as _cp
-
-    import yark_spark.operators.unigram as _self
-
-    _cp.register_pickle_by_value(_self)
     rows_df = df.select(
         F.col(word_col).alias("word"), F.col(freq_col).cast("long").alias("freq")
     ).cache()
@@ -368,11 +363,6 @@ def unigram_features(
     twin's inner join drops them too). Map-only mapInPandas with a
     per-batch distinct-word memo; token streams never shuffle — the
     WordPiece plan shape (E107)."""
-    from pyspark import cloudpickle as _cp
-
-    import yark_spark.operators.unigram as _self
-
-    _cp.register_pickle_by_value(_self)
     cost_map = dict(pieces)
     max_len = max((len(p) for p in cost_map), default=1)
 

@@ -12,7 +12,7 @@ video (H.264/VP9/AV1) remains the documented boundary, exactly like
 psychoacoustic audio.
 
 Same design rules as the image codecs beside it (operators/jpeg, png,
-webp, gif): self-contained module shipped to executors by value; a
+webp, gif): self-contained module; a
 fixture encoder so oracles are constructed-exact (planes are stored
 verbatim, so per-frame statistics are analytic); typed ``ValueError``
 on malformed payloads.

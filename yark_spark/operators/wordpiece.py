@@ -124,13 +124,6 @@ def wordpiece_features(
     and the ## presentation). Docs whose normalized text contains no
     words are omitted (the SQL twin's inner join drops them too).
     Map-only mapInPandas; token streams never shuffle."""
-    # ship this module by value: the closure references module-level
-    # helpers, and workers must not need to import yark_spark
-    from pyspark import cloudpickle as _cp
-
-    import yark_spark.operators.wordpiece as _self
-
-    _cp.register_pickle_by_value(_self)
     vocab_set = frozenset(vocab)
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -5,11 +5,6 @@ copies. The reference regex keeps hex and decimal refs DISJOINT —
 (decimal digits only) vs named entities — so ``&#X41;`` decodes and
 ``&#ab;`` (hex letters without the x) is rejected with a typed error
 instead of reaching ``int()`` with base 10.
-
-No dependencies: this module ships by value next to any operator
-module that uses it (cloudpickle by-value registration does not chase
-imports, so every ``_register_*_modules`` site registering feeds/docx
-registers this too).
 """
 
 from __future__ import annotations

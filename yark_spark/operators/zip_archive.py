@@ -58,23 +58,6 @@ _Z64_LOCATOR_SIG = b"PK\x06\x07"
 _STORED, _DEFLATE = 0, 8
 _BZIP2, _LZMA, _ZSTD = 12, 14, 93  # APPNOTE 4.4.5 / 5.8 / PKWARE zstd
 
-_XZ = None  # bound lazily; ships by value with this module
-_BZ2 = None
-_ZSTD_MOD = None
-
-
-def bind_methods():
-    """Resolve the bzip2/lzma/zstd member codecs into module globals
-    (the containers.bind_zstd pattern) — call driver-side before
-    shipping this module to executors."""
-    global _XZ, _BZ2, _ZSTD_MOD
-    if _XZ is None:
-        from yark_spark.operators import bzip2 as _b
-        from yark_spark.operators import xz as _x
-        from yark_spark.operators import zstd as _z
-
-        _XZ, _BZ2, _ZSTD_MOD = _x, _b, _z
-
 # fixed DOS timestamp (1980-01-01 00:00:00) — archives stay byte-
 # deterministic; real mtimes would break fixture reproducibility
 _DOS_TIME, _DOS_DATE = 0, 0x21
@@ -105,10 +88,12 @@ def zip_build(
         elif method == _STORED:
             comp = payload
         elif method == _BZIP2:
-            bind_methods()
-            comp = _BZ2.bz2_compress(payload)
+            from yark_spark.operators.bzip2 import bz2_compress
+
+            comp = bz2_compress(payload)
         elif method == _LZMA:
-            bind_methods()
+            from yark_spark.operators.xz import _props_byte, lzma1_compress
+
             # APPNOTE 5.8 member layout: version (we stamp 9.4, the
             # APPNOTE revision this layout is specified in), 2-byte
             # props length, then the 5 LZMA props bytes that MUST
@@ -120,17 +105,18 @@ def zip_build(
             # keying EOS off gp-bit 1 must use sizes-from-directory
             # here — the APPNOTE leaves that signal optional and we
             # choose the smaller no-EOS form.
-            props = bytes([_XZ._props_byte(3, 0, 2)]) + struct.pack(
+            props = bytes([_props_byte(3, 0, 2)]) + struct.pack(
                 "<I", 1 << 22
             )
             comp = (
                 struct.pack("<BBH", 9, 4, len(props))
                 + props
-                + _XZ.lzma1_compress(payload)
+                + lzma1_compress(payload)
             )
         elif method == _ZSTD:
-            bind_methods()
-            comp = _ZSTD_MOD.zstd_compress(payload, method="compressed")
+            from yark_spark.operators.zstd import zstd_compress
+
+            comp = zstd_compress(payload, method="compressed")
         else:
             raise ValueError(f"zip: unsupported method {method}")
         offset = len(out)
@@ -332,28 +318,29 @@ def zip_members(
             if len(data) != uncomp_size:
                 raise ValueError("zip: inflated size mismatch")
         elif method == _BZIP2:
-            bind_methods()
-            data = _BZ2.bz2_decompress(comp, max_output=uncomp_size)
+            from yark_spark.operators.bzip2 import bz2_decompress
+
+            data = bz2_decompress(comp, max_output=uncomp_size)
             if len(data) != uncomp_size:
                 raise ValueError("zip: bzip2 member size mismatch")
         elif method == _LZMA:
             # APPNOTE 5.8.8: [ver major u8][minor u8][props size u16]
             # [props byte + dict size u32] then one raw LZMA1 stream
-            bind_methods()
+            from yark_spark.operators.xz import lzma1_decompress
+
             if len(comp) < 4:
                 raise ValueError("zip: truncated LZMA member header")
             psize = struct.unpack_from("<H", comp, 2)[0]
             if psize < 5 or 4 + psize > len(comp):
                 raise ValueError("zip: bad LZMA properties size")
-            data = _XZ.lzma1_decompress(
+            data = lzma1_decompress(
                 comp[4 + psize :], comp[4], uncomp_size,
                 max_output=uncomp_size,
             )
         elif method == _ZSTD:
-            bind_methods()
-            data = b"".join(
-                _ZSTD_MOD.zstd_frames(comp, max_output=uncomp_size)
-            )
+            from yark_spark.operators.zstd import zstd_frames
+
+            data = b"".join(zstd_frames(comp, max_output=uncomp_size))
             if len(data) != uncomp_size:
                 raise ValueError("zip: zstd member size mismatch")
         else:

@@ -25,7 +25,7 @@ strategy the DEFLATE codec used minus the stdlib differential:
 
 Design rules match the other codecs (operators/png, operators/jpeg):
 pure stdlib + explicit ``ValueError`` on malformed input, ``max_output``
-bomb guard, module ships to executors by value.
+bomb guard.
 
 Reference parity note: the reference stores fetched bytes opaquely
 (/root/reference/cmds/archive.py:88-91); zstd ingest is mandate-side
@@ -964,31 +964,13 @@ def zstd_compress(
     return bytes(out)
 
 
-_COMPRESS_BLOCK = None  # bound by bind_encoder(); ships by value with it
-
-
-def bind_encoder() -> None:
-    """Resolve the entropy-coded block writer (operators/zstd_encode —
-    imported lazily to avoid the circular import) into a module global,
-    so executors that receive this module BY VALUE (cloudpickle
-    register_pickle_by_value) carry the encoder along instead of
-    attempting a worker-side package import."""
-    global _COMPRESS_BLOCK
-    if _COMPRESS_BLOCK is None:
-        from yark_spark.operators.zstd_encode import compress_block
-
-        _COMPRESS_BLOCK = compress_block
-
-
 def _compress_block(chunk: bytes, reps: list[int], window: bytes = b""):
     """Entropy-coded block writer: (body, new_reps), or None to fall
     back to raw framing."""
-    if _COMPRESS_BLOCK is None:
-        try:
-            bind_encoder()
-        except ImportError:
-            return None
-    return _COMPRESS_BLOCK(chunk, reps, window=window)
+    # function-local: zstd_encode imports this module
+    from yark_spark.operators.zstd_encode import compress_block
+
+    return compress_block(chunk, reps, window=window)
 
 
 # ---------------------------------------------------------------------------

@@ -193,14 +193,6 @@ def _col_rotl(x, r: int):
     )
 
 
-def _col_mm32_round(h, k):
-    k = _col_mul32(k, 0xCC9E2D51)
-    k = _col_rotl(k, 15)
-    k = _col_mul32(k, 0x1B873593)
-    h = _col_rotl(h.bitwiseXOR(k), 13)
-    return (_col_mul32(h, 5) + F.lit(0xE6546B64)).bitwiseAND(F.lit(_M32))
-
-
 def with_murmur3_long(df, src: str, out: str):
     """murmur3_x86_32 of a non-negative long column's 8-byte little-
     endian form, as pure Column arithmetic staged through NAMED

@@ -12,9 +12,12 @@ limited set deterministic with explicit tie-breaks.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from yark_spark.session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -25,14 +28,22 @@ ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query key. ``oracle=None`` → driver does a rows-only check
     (reserved for genuinely non-SQL-expressible ops: LSH, pandas UDFs,
-    streaming state — SURVEY.md §5.1)."""
+    streaming state — SURVEY.md §5.1). The registered callable tunes the
+    session first, so keys that never call ``load_table`` still run on a
+    session whose workers can import the package."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query key: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            tune(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = run
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return run
 
     return deco

@@ -10,6 +10,9 @@ values), Arrow enabled for the few pandas-UDF paths.
 from __future__ import annotations
 
 import os
+import tempfile
+import weakref
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -35,17 +38,52 @@ RUNTIME_CONFS = {
 #: (3-4 per query x hundreds of driver keys), and each conf.set is a
 #: py4j round trip; the values are constants, so apply them once per
 #: session. WeakSet: dropping a stopped session must not pin it.
-_TUNED: "weakref.WeakSet" = None  # type: ignore[assignment]
+_TUNED: "weakref.WeakSet" = weakref.WeakSet()
+
+#: SparkContexts the package zip was added to (a stopped and recreated
+#: context starts with no Python files, so it must be shipped again).
+_SHIPPED: "weakref.WeakSet" = weakref.WeakSet()
+
+#: Per-process temp dir holding the package zip, built on first use.
+_ZIP_DIR: tempfile.TemporaryDirectory | None = None
+
+
+def _package_zip() -> str:
+    """Zip the package's bytecode once per process, leaving out
+    ``queries`` (workers must never import it). Bytecode only: a Python
+    worker runs ``importlib.invalidate_caches()`` before every task,
+    which re-reads the directory of each zip on its path, so every entry
+    costs per task; worker tracebacks still name each source file and
+    line."""
+    global _ZIP_DIR
+    if _ZIP_DIR is None:
+        _ZIP_DIR = tempfile.TemporaryDirectory(prefix="yark_spark-")
+        with zipfile.PyZipFile(os.path.join(_ZIP_DIR.name, "yark_spark.zip"), "w") as zf:
+            zf.writepy(
+                os.path.dirname(os.path.abspath(__file__)),
+                filterfunc=lambda path: os.path.basename(path) != "queries",
+            )
+    return os.path.join(_ZIP_DIR.name, "yark_spark.zip")
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make ``import yark_spark`` work on the session's Python workers:
+    add the package zip to its SparkContext once. UDF bodies then pickle
+    module-level helpers by reference, whatever the driver's cwd or
+    ``sys.path``. ``yark_spark.queries`` is not shipped: its fixtures
+    module writes files next to itself on import, so no UDF may
+    reference a ``queries`` module global."""
+    sc = spark.sparkContext
+    if sc not in _SHIPPED:
+        sc.addPyFile(_package_zip())
+        _SHIPPED.add(sc)
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent; memoized
-    per session object — the confs are constants)."""
-    global _TUNED
-    if _TUNED is None:
-        import weakref
-
-        _TUNED = weakref.WeakSet()
+    """Apply runtime confs to an existing session and ship the package
+    to its workers (idempotent; memoized per session object — the confs
+    are constants)."""
+    ship_package(spark)
     if spark in _TUNED:
         return spark
     for k, v in RUNTIME_CONFS.items():
@@ -108,4 +146,4 @@ def get_spark(app_name: str = "yark_spark", cpus: int | None = None) -> SparkSes
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return tune(builder.getOrCreate())

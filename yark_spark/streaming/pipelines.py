@@ -77,23 +77,6 @@ def tumbling_counts(
     )
 
 
-def session_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Session windows per key (inactivity gap); state merges as sessions
-    extend, closes at watermark."""
-    return (
-        events.withWatermark(ts_col, delay)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), key)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("session_start"), key, "n_events")
-    )
-
-
 def interval_join(
     views: DataFrame,
     purchases: DataFrame,
@@ -632,17 +615,7 @@ def iceberg_sink(
     item #2)."""
     from yark_spark.operators.iceberg import iceberg_commit, iceberg_table_create
     from yark_spark.operators import parquet_write as _pw
-    from pyspark import cloudpickle as _cp
 
-    from yark_spark.operators import parquet_meta as _pm
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
-
-    _pw.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pw)
     cols = list(types)
     _write = _pw.parquet_write
     _types = dict(types)
@@ -895,18 +868,8 @@ def delta_sink(
     collision with a concurrent/external writer RAISES instead of
     clobbering — Delta's commit protocol), and the next version is
     max(existing)+1, gap-safe on checkpoint-trimmed logs."""
-    from pyspark import cloudpickle as _cp
-
-    from yark_spark.operators import parquet_meta as _pm
     from yark_spark.operators import parquet_write as _pw
-    from yark_spark.operators import snappy as _snappy
-    from yark_spark.operators import varint as _varint
 
-    _pw.bind_codecs()
-    _cp.register_pickle_by_value(_varint)
-    _cp.register_pickle_by_value(_pm)
-    _cp.register_pickle_by_value(_snappy)
-    _cp.register_pickle_by_value(_pw)
     cols = list(types)
     _write = _pw.parquet_write
     _types = dict(types)

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from yark_spark.session import ship_package
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -118,18 +120,8 @@ def track_sessions(events: DataFrame, watermark_delay: str = "10 minutes") -> Da
     """events(user_id long, video string, watched timestamp) stream →
     closed-session summaries. The watermark both bounds late data and
     drives session-timeout firing."""
-    # ship this module BY VALUE: the tracker is module-level (testable), so
-    # cloudpickle would otherwise serialize it by reference and every
-    # Python worker would need yark_spark importable (true only when the
-    # driver's cwd/sys.path reaches the repo)
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
+    # the tracker is module-level (testable), so workers import it
+    ship_package(events.sparkSession)
     return events.withWatermark("watched", watermark_delay).groupBy(
         "user_id"
     ).applyInPandasWithState(
@@ -171,8 +163,7 @@ def ensure_rocksdb_state_store(spark) -> None:
 
 
 def _make_session_processor(gap_seconds: int):
-    """Factory (closure-shipped by value — workers never import this
-    package) building the StatefulProcessor class instance."""
+    """Factory building the StatefulProcessor class instance."""
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     gap_us = gap_seconds * 1_000_000
