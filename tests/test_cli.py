@@ -161,3 +161,80 @@ def test_replay_command_streams_lost_queue(spark, tmp_path, store_dir, capsys):
     assert "still lost: 0" in out
     store = ParquetStore(spark, store_dir)
     assert store.read("videos").filter(F.col("availability") == "lost").count() == 1
+
+
+def _nullable(schema):
+    from pyspark.sql.types import StructField, StructType
+
+    return StructType([StructField(f.name, f.dataType, True) for f in schema])
+
+
+def test_written_tables_infer_their_declared_schema(spark, tmp_path, store_dir):
+    """The store reads a written table with the schema in its footer, so
+    the CLI's writes must carry the declared types: the schema Spark
+    infers from every committed version dir is ``ALL_TABLES[name]`` with
+    every field nullable."""
+    import os
+
+    from yark_spark.schemas import ALL_TABLES
+
+    batch = [dict(INFODICTS[0], comments=[
+        {"id": "c1", "author_id": "u2", "author": "A", "text": "hi",
+         "like_count": 1, "is_favorited": False, "author_is_uploader": False,
+         "parent": "root", "timestamp": 1700000000},
+    ]), INFODICTS[1]]
+    p = tmp_path / "batch.json"
+    p.write_text(json.dumps(batch))
+    wh = tmp_path / "wh.json"
+    wh.write_text(json.dumps(
+        [{"titleUrl": "https://youtube.com/watch?v=abcdefghij1", "time": "2024-01-01T10:00:00Z"}]
+    ))
+    pl = tmp_path / "Mix videos.csv"
+    pl.write_text("Video ID,Time Added\nabcdefghij1,2024-01-01 10:00:00\n")
+    for argv in (
+        ["archive-video", str(p)],
+        ["archive-history", str(wh)],
+        ["archive-playlist", str(pl)],
+    ):
+        assert cli.main([*argv, "--store", store_dir], spark=spark) == 0
+    store = ParquetStore(spark, store_dir)
+    written = store._load_manifest()
+    assert set(written) == set(ALL_TABLES)
+    for name, v in written.items():
+        inferred = spark.read.parquet(os.path.join(store_dir, name, f"v{v}")).schema
+        assert inferred == _nullable(ALL_TABLES[name]), name
+        assert store.read(name).schema == inferred, name
+
+
+def test_playlist_updated_keeps_naive_datetime_semantics(spark, tmp_path, monkeypatch):
+    """``read_playlist_csv(ingested_at=<naive datetime>)`` reads the value
+    as a wall-clock time in the driver's local timezone, as
+    ``createDataFrame`` of a Python row does; an aware datetime is exact."""
+    import datetime
+    import time
+
+    from yark_spark.sources.takeout import read_playlist_csv
+
+    pl = tmp_path / "Mix videos.csv"
+    pl.write_text("Video ID,Time Added\nabcdefghij1,2024-01-01 10:00:00\n")
+    naive = datetime.datetime(2024, 3, 10, 1, 30, 15, 250)
+    aware = datetime.datetime(
+        2024, 7, 1, 14, 0, tzinfo=datetime.timezone(datetime.timedelta(hours=2))
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = {}
+        for at in (naive, aware):
+            playlists, _ = read_playlist_csv(spark, str(pl), ingested_at=at)
+            got[at] = playlists.select(F.unix_micros("updated")).first()[0]
+            assert got[at] == spark.createDataFrame([(at,)], "u timestamp").select(
+                F.unix_micros("u")
+            ).first()[0]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    # 01:30:15 EST (DST starts at 02:00 that day) is 06:30:15 UTC
+    assert got[naive] == 1710052215 * 10**6 + 250
+    assert got[aware] == 1719835200 * 10**6
+    assert playlists.first()["visibility"] == "Local"

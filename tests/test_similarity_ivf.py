@@ -183,3 +183,22 @@ def test_cosine_topk_auto_route_both_sides_of_crossover(spark, sf_dir):
         assert rows(cosine_topk(emb, query_max_id=5, k=3)) == baseline
     finally:
         spark.conf.unset("spark.yark.similarity.blasMinPairs")
+
+
+def test_cosine_topk_auto_route_at_threshold_edges(spark, sf_dir):
+    """The router's candidate count is bounded at threshold // |queries|
+    + 1 rows; the route it picks must still be the full-count one
+    (|queries| x |candidates| >= threshold → BLAS) just below, at and just
+    above the threshold."""
+    from yark_spark.io import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = emb.filter(F.col("vec_id") < 5).count() * emb.count()
+    for threshold, blas in ((pairs - 1, True), (pairs, True), (pairs + 1, False)):
+        spark.conf.set("spark.yark.similarity.blasMinPairs", str(threshold))
+        try:
+            plan = cosine_topk(emb, query_max_id=5, k=3)._jdf.queryExecution()
+            plan = plan.analyzed().toString()
+        finally:
+            spark.conf.unset("spark.yark.similarity.blasMinPairs")
+        assert ("MapInPandas" in plan) is blas, threshold

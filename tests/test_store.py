@@ -144,3 +144,67 @@ def test_store_log_multi_table_commit(spark, tmp_path):
     assert store.read_at("a", store.log_version()).count() == 3
     # b unchanged at head
     assert store.snapshot_at()["b"] == store.snapshot_at(v0)["b"]
+
+
+# ---------------------------------------------------------------------------
+# Reads the driver can answer without a job: unwritten archive tables are
+# empty LocalRelations, written tables carry their footer schema
+# ---------------------------------------------------------------------------
+
+
+def test_unwritten_archive_table_is_empty_local_relation(spark, tmp_path):
+    from yark_spark.schemas import ALL_TABLES
+
+    store = ParquetStore(spark, str(tmp_path / "s"))
+    for name, schema in ALL_TABLES.items():
+        df = store.read(name)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", name
+        assert plan.data().isEmpty(), name
+        assert df.schema == schema, name
+
+
+def test_read_of_written_table_starts_no_job(spark, tmp_path):
+    from yark_spark.schemas import ALL_TABLES
+
+    store = ParquetStore(spark, str(tmp_path / "s"))
+    store.write("t", spark.range(5).selectExpr("id", "cast(id as string) s"))
+    store.write("tags", store.read("tags"))
+    sc = spark.sparkContext
+    group = "test_read_of_written_table_starts_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        t, tags = store.read("t"), store.read("tags")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    # the footer schema is the one Spark's inference gives
+    assert t.schema == spark.read.parquet(str(tmp_path / "s" / "t" / "v0")).schema
+    assert [f.name for f in tags.schema] == [f.name for f in ALL_TABLES["tags"]]
+    assert t.count() == 5 and tags.count() == 0
+
+
+def test_archive_batch_on_empty_store_has_no_python_rdd(spark, tmp_path):
+    import json
+
+    from yark_spark.operators.archive import archive_batch, empty_store
+    from yark_spark.sources.infodict import read_infodicts
+
+    p = tmp_path / "batch.json"
+    p.write_text(
+        json.dumps(
+            [
+                {"id": "abcdefghij1", "fulltitle": "T1", "channel_id": "ch1",
+                 "channel": "Chan", "uploader_id": "u1", "uploader": "U",
+                 "tags": ["x"], "comments": []},
+                {"id": "bad"},
+            ]
+        )
+    )
+    out = archive_batch(empty_store(spark), read_infodicts(spark, str(p)))
+    for name, df in out.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" not in plan, name
+    assert out["videos"].count() == 2  # the good row + the 'lost' stub

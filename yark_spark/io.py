@@ -72,6 +72,38 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order; ``schema`` a
+    StructType or DDL string) as a JVM-side relation: built through an
+    Arrow table, which Spark turns into a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and into a JVM
+    RDD above it. ``spark.createDataFrame(list)`` instead builds a
+    Python-pickled RDD whose every scan runs Python-worker tasks, and an
+    empty one hides from the optimizer that it is empty; an empty
+    ``LocalRelation`` lets ``PropagateEmptyRelation`` prune the joins
+    and unions it feeds at plan time.
+
+    Naive datetimes keep ``createDataFrame(list)``'s semantics: they are
+    wall-clock times in the driver process's local timezone."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, TimestampType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values, atype in zip(schema.fields, columns, arrow.types):
+        if isinstance(field.dataType, TimestampType):
+            # to UTC first: pyarrow drops the offset of a non-UTC tzinfo
+            values = [v if v is None else v.astimezone(datetime.timezone.utc) for v in values]
+        arrays.append(pa.array(list(values), type=atype))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+
+
 def read_csv_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV source with header row → columns (reference `cmds/archive.py:229-247`).
 

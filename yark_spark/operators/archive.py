@@ -14,15 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yark_spark.io import local_frame
 from yark_spark.operators.writes import insert_ignore, stamp_archived, upsert
 from yark_spark.schemas import ALL_TABLES
 from yark_spark.sources import infodict as src
 
 
 def empty_store(spark) -> dict[str, DataFrame]:
-    return {
-        name: spark.createDataFrame([], schema) for name, schema in ALL_TABLES.items()
-    }
+    """Every archive table as an empty ``LocalRelation`` with its declared
+    schema (see ``io.local_frame``)."""
+    return {name: local_frame(spark, [], schema) for name, schema in ALL_TABLES.items()}
 
 
 def update_guard():

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yark_spark.io import local_frame
+
 #: repo-wide tokenizer parity class (operators/dedup.tokens)
 _WS = r"[ \t\n\x0B\f\r]+"
 
@@ -145,7 +147,7 @@ def train_bpe_merges(
             merges_l = train_bpe_merges_local(
                 [(r["word"], int(r["freq"])) for r in head], k_merges
             )
-            return spark.createDataFrame(merges_l, schema)
+            return local_frame(spark, merges_l, schema)
 
     words = (
         wf.select("freq", F.split("word", "").alias("seq"))
@@ -177,9 +179,7 @@ def train_bpe_merges(
                 words = nxt
     finally:
         words.unpersist()
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
-    )
+    return local_frame(spark, merges, schema)
 
 
 def train_bpe_merges_local(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yark_spark.io import local_frame
+
 
 def _np_round_half_up(a, digits: int):
     """Decimal HALF_UP (round half away from zero) over a numpy array,
@@ -126,7 +128,7 @@ def cosine_topk(
     matmul wins even from cold; 0 disables routing, and
     ``route="column"``/``"blas"`` force a path. The router costs one
     tiny query-set collect (reused by the blas path) and one candidate
-    count job.
+    count bounded at ``threshold // |queries| + 1`` rows.
     """
     if route == "blas":
         return cosine_topk_blas(
@@ -144,7 +146,11 @@ def cosine_topk(
                 .select(id_col, vec_col)
                 .collect()
             )
-            if qrows and len(qrows) * embeddings.count() >= threshold:
+            # bounded count: past threshold // |queries| + 1 candidates
+            # the product clears the threshold whatever the full count is
+            if qrows and len(qrows) * embeddings.limit(
+                threshold // len(qrows) + 1
+            ).count() >= threshold:
                 return cosine_topk_blas(
                     embeddings,
                     id_col,
@@ -296,8 +302,8 @@ def ivf_topk(
     centers = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    centers_df = embeddings.sparkSession.createDataFrame(
-        centers, "cell int, center array<double>"
+    centers_df = local_frame(
+        embeddings.sparkSession, centers, "cell int, center array<double>"
     )
 
     q = assigned.filter(F.col(id_col) < query_max_id).select(
@@ -495,8 +501,8 @@ def embedding_near_dups_blas(
     base = embeddings if max_id is None else embeddings.filter(F.col(id_col) < max_id)
     rows = base.select(id_col, vec_col).collect()
     if not rows:
-        return base.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_sim double"
+        return local_frame(
+            base.sparkSession, [], "id_a long, id_b long, cosine_sim double"
         )
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     M = np.array([r[1] for r in rows], dtype=np.float64)

@@ -36,8 +36,30 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
+from yark_spark.io import local_frame
 from yark_spark.schemas import ALL_TABLES
+
+#: Parquet footer key under which Spark's writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of the first part file
+    directly under ``path``, or None when there is none."""
+    import pyarrow.parquet as pq
+
+    part = next(
+        (f for f in sorted(os.listdir(path)) if f.startswith("part-") and f.endswith(".parquet")),
+        None,
+    )
+    if part is None:
+        return None
+    meta = pq.read_schema(os.path.join(path, part)).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 class ParquetStore:
@@ -50,7 +72,15 @@ class ParquetStore:
     ``retain - 1`` subsequent writes to the same table. Multi-table
     commands that read a whole store, transform, then write each table
     (archive, replay, cascade delete) rely on exactly that window. Call
-    ``vacuum()`` to reclaim old versions once no readers remain."""
+    ``vacuum()`` to reclaim old versions once no readers remain.
+
+    ``read()`` runs no Spark job. A written table is scanned with the
+    schema in its Parquet footer, read on the driver, instead of paying
+    a schema-inference job per read; an ``ALL_TABLES`` table that was
+    never written is an empty ``LocalRelation`` with its declared schema,
+    so the anti-joins and unions an upsert builds on it are pruned at
+    plan time. Both matter per command and per streaming micro-batch
+    (``history_sink`` reads the store once per batch)."""
 
     def __init__(
         self,
@@ -255,7 +285,7 @@ class ParquetStore:
                 f"store: {name} v{state[name]} vacuumed past retention — "
                 "raise `retain` to time-travel further back"
             )
-        return self.spark.read.parquet(target)
+        return self._read_version(name, state[name])
 
     def _log_reconcile(self) -> None:
         """Close the crash window between the manifest flip and the log
@@ -293,12 +323,27 @@ class ParquetStore:
         return self._current_version(name) is not None
 
     def read(self, name: str) -> DataFrame:
+        """The table's current version, without a Spark job (see the
+        class docstring)."""
         v = self._current_version(name)
         if v is None:
-            if name in ALL_TABLES:  # empty archive table with proper schema
-                return self.spark.createDataFrame([], ALL_TABLES[name])
+            if name in ALL_TABLES:
+                return local_frame(self.spark, [], ALL_TABLES[name])
             raise FileNotFoundError(f"table {name} not initialized")
-        return self.spark.read.parquet(os.path.join(self._table_dir(name), f"v{v}"))
+        return self._read_version(name, v)
+
+    def _read_version(self, name: str, version: int) -> DataFrame:
+        """Parquet scan of one version dir with the schema Spark wrote
+        into its part files' footers, read on the driver — the schema
+        Spark's own inference would return, without the job inference
+        runs. A dir with no part file at its top level (a partitioned
+        write) falls back to inference."""
+        target = os.path.join(self._table_dir(name), f"v{version}")
+        reader = self.spark.read
+        schema = _footer_schema(target)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(target)
 
     def _versions(self, name: str) -> list[int]:
         tdir = self._table_dir(name)

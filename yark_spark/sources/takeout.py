@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from yark_spark.functions.scalar import normalize_spaces, video_id_from_title_url
+from yark_spark.io import local_frame
 
 WATCH_HISTORY_SCHEMA = StructType(
     [
@@ -105,7 +106,8 @@ def read_playlist_csv(
         normalize_spaces(F.col("Video ID")).alias("video"),
         F.to_timestamp(F.col("Time Added")).alias("added"),
     ).filter(F.col("video").isNotNull() & (F.col("video") != ""))
-    playlists = videos.sparkSession.createDataFrame(
+    playlists = local_frame(
+        spark,
         [(playlist_id, None, None, ingested_at, title, None, "Local")],
         "playlist_id string, channel string, created timestamp, updated timestamp, "
         "title string, description string, visibility string",
