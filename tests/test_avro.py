@@ -21,7 +21,7 @@ from yark_spark.operators.avro_ocf import (
     zigzag_decode,
     zigzag_encode,
 )
-from yark_spark.operators.png import crc32
+from zlib import crc32
 
 DOC_SCHEMA = {
     "type": "record",

@@ -102,7 +102,7 @@ def test_uncompressed_and_metadata_metablocks():
     w3.write(3, 2)  # MNIBBLES pattern 3 → metadata
     w3.write(0, 1)  # reserved
     w3.write(1, 2)  # MSKIPBYTES = 1
-    w3.write(2, 8)  # skip 2 bytes
+    w3.write(1, 8)  # MSKIPLEN - 1 (RFC 7932 §9.2): skip 2 bytes
     tail = w3.done() + b"XY"
     w4 = _Writer()
     w4.write(1, 1)  # ISLAST

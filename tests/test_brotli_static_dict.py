@@ -1,8 +1,7 @@
-"""The extracted RFC 7932 static dictionary + context tables (round
-14, session 3): every datum in operators/brotli_dict.py came out of
-the container's REAL C brotli via probe streams — these tests keep
-the extraction pinned against the same library, so any drift between
-our transform/context arithmetic and real brotli fails here."""
+"""Real brotli streams that lean on the RFC 7932 static dictionary and
+the UTF8/SIGNED literal-context modes: every quality 0–11 over
+dictionary-hungry and context-hungry corpora decodes byte-exactly
+through ``brotli_decompress``."""
 
 from __future__ import annotations
 
@@ -10,11 +9,7 @@ import random
 
 import pytest
 
-from yark_spark.operators import brotli_dict as bd
-from yark_spark.operators.brotli import (
-    _transform_word,
-    brotli_decompress,
-)
+from yark_spark.operators.brotli import brotli_decompress
 
 
 def _real(level=11):
@@ -23,121 +18,29 @@ def _real(level=11):
     return pa.Codec("brotli", compression_level=level)
 
 
-def test_dictionary_shape():
-    assert len(bd.DICT) == 122784  # the RFC total, reproduced exactly
-    total = 0
-    for ln, nd in bd.NDBITS.items():
-        assert bd.OFFSETS[ln] == total
-        total += ln * (1 << nd)
-    assert total == 122784
-    # spot words every English reader recognizes
-    assert bd.dictionary_word(4, 0) == b"time"
-    assert bd.dictionary_word(5, 0) == b"first"
-
-
-def test_transform_table_shape():
-    assert len(bd.TRANSFORMS) == 121
-    assert bd.TRANSFORMS[0] == (b"", "identity", b"")
-    ops = {t[1] for t in bd.TRANSFORMS}
-    assert "ferment_first" in ops and "ferment_all" in ops
-    assert any(o.startswith("omit_first_") for o in ops)
-    assert any(o.startswith("omit_last_") for o in ops)
-
-
-def _probe(copy_len, address, out_len):
-    """Re-derive a probe via the extraction script and real brotli."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from extract_brotli_dict import try_probe
-
-    return try_probe(copy_len, address, out_len)
-
-
-def test_transform_fuzz_against_real_brotli():
-    """Random (length, word, transform) triples: our transform_word
-    must equal what real brotli outputs for the same address."""
-    rng = random.Random(1414)
-    checked = 0
-    for _ in range(120):
-        ln = rng.choice(list(bd.NDBITS))
-        nd = bd.NDBITS[ln]
-        wid = rng.randrange(1 << nd)
-        t = rng.randrange(121)
-        word = bd.dictionary_word(ln, wid)
-        expect = _transform_word(word, bd.TRANSFORMS[t])
-        if not expect:
-            continue  # degenerate omit — real brotli rejects, skip
-        got = _probe(ln, (t << nd) | wid, len(expect))
-        if got is None:
-            # real brotli refused (degenerate transform on short word)
-            assert len(expect) < ln, (ln, wid, t)
-            continue
-        assert got == expect, (ln, wid, t)
-        checked += 1
-    assert checked > 80
-
-
-def test_nonascii_ferment_against_real_brotli():
-    """Multi-byte words under ferment transforms — the ^=32 / ^=5
-    continuation-byte arithmetic must match real brotli exactly."""
-    ferment_ids = [
-        i for i, tr in enumerate(bd.TRANSFORMS) if tr[1].startswith("ferment")
-    ]
-    checked = 0
-    for ln in bd.NDBITS:
-        for wid in range(1 << bd.NDBITS[ln]):
-            word = bd.dictionary_word(ln, wid)
-            if word.isascii():
-                continue
-            for t in ferment_ids[:4]:
-                expect = _transform_word(word, bd.TRANSFORMS[t])
-                got = _probe(ln, (t << bd.NDBITS[ln]) | wid, len(expect))
-                assert got == expect, (ln, wid, t)
-                checked += 1
-            if checked >= 40:
-                return
-    assert checked > 0
-
-
-def test_context_tables_against_real_brotli():
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from extract_brotli_context import CODEC, ctx_probe_stream
-
-    from yark_spark.operators.brotli import _SIGNED, _UTF8
-
-    rng = random.Random(77)
-    for _ in range(60):
-        p1, p2 = rng.randrange(256), rng.randrange(256)
-        out = CODEC.decompress(ctx_probe_stream(p1, p2, _UTF8), 3, asbytes=True)
-        assert out[2] == bd.CTX_UTF8_LUT0[p1] | bd.CTX_UTF8_LUT1[p2]
-        out = CODEC.decompress(ctx_probe_stream(p1, p2, _SIGNED), 3, asbytes=True)
-        assert out[2] == (bd.CTX_SIGNED_LUT[p1] << 3) | bd.CTX_SIGNED_LUT[p2]
+#: dictionary-hungry English/markup, UTF-8, random bytes and JSON —
+#: shared with tests/test_native_decode.py's zlib/bzip2 level matrix
+_RNG = random.Random(14)
+CORPORA = [
+    (
+        b"The quick brown fox jumps over the lazy dog. " * 40
+        + b"information about the world public license, example.com "
+        b"said that would be the first time"
+    )
+    * 3,
+    b'<script type="text/javascript">document.getElementById("x")'
+    b'</script><body style="display:none;">' * 30,
+    ("你好世界 привет "
+     "café naïve ").encode() * 60,
+    bytes(_RNG.getrandbits(8) for _ in range(6000)),
+    (b'{"key": "value", "count": 123, "list": [1,2,3]}') * 80,
+]
 
 
 @pytest.mark.parametrize("quality", range(12))
 def test_full_decode_matrix(quality):
     """Real brotli at EVERY quality over dictionary-hungry and
     context-hungry corpora — byte-exact, no boundaries."""
-    rng = random.Random(14)
-    corpora = [
-        (
-            b"The quick brown fox jumps over the lazy dog. " * 40
-            + b"information about the world public license, example.com "
-            b"said that would be the first time"
-        )
-        * 3,
-        b'<script type="text/javascript">document.getElementById("x")'
-        b'</script><body style="display:none;">' * 30,
-        ("你好世界 привет "
-         "café naïve ").encode() * 60,
-        bytes(rng.getrandbits(8) for _ in range(6000)),
-        (b'{"key": "value", "count": 123, "list": [1,2,3]}') * 80,
-    ]
     cc = _real(quality)
-    for t in corpora:
+    for t in CORPORA:
         assert brotli_decompress(cc.compress(t, asbytes=True)) == t

@@ -273,7 +273,7 @@ from yark_spark.operators.deltalog import (  # noqa: E402
     delta_checkpoint_table,
     delta_live_files_dv,
 )
-from yark_spark.operators.png import crc32  # noqa: E402
+from zlib import crc32  # noqa: E402
 from yark_spark.operators.roaring import (  # noqa: E402
     roaring64_array_serialize,
     z85_encode,

@@ -1,8 +1,8 @@
-"""operators/png: the from-scratch PNG codec (round 11, VERDICT r10
-next-round #1) — DEFLATE inflate pinned against stdlib zlib (an
-independent implementation producing stored/fixed/dynamic blocks),
-roundtrips across the color-type x depth x filter matrix, checksum and
-container validation, and fuzz (no hangs, typed errors only).
+"""operators/png: the PNG codec (round 11, VERDICT r10 next-round #1)
+— the from-scratch DEFLATE encoder pinned against stdlib zlib, the
+zlib-backed inflate's container checks and typed errors, roundtrips
+across the color-type x depth x filter matrix, checksum and container
+validation, and fuzz (no hangs, typed errors only).
 
 Sparkless: the kernels are plain numpy; the Spark-side plumbing is
 covered by q_image_decode_png's driver/parity rows and the multimodal
@@ -19,16 +19,8 @@ from yark_spark.operators import png as P
 
 
 # ---------------------------------------------------------------------------
-# checksums + DEFLATE, differential vs stdlib zlib
+# DEFLATE, differential vs stdlib zlib
 # ---------------------------------------------------------------------------
-
-
-def test_checksums_match_stdlib():
-    rnd = random.Random(0)
-    for n in (0, 1, 17, 5551, 5552, 5553, 20000):
-        data = bytes(rnd.randrange(256) for _ in range(n))
-        assert P.crc32(data) == zlib.crc32(data)
-        assert P.adler32(data) == zlib.adler32(data)
 
 
 @pytest.mark.parametrize("level", [0, 1, 6, 9])
@@ -361,8 +353,6 @@ def test_package_merge_respects_limit_and_kraft():
             assert all(lens[s] == 0 for s, f in enumerate(freqs) if f == 0)
             # Kraft equality for a complete prefix code
             assert sum(2 ** (maxlen - l) for _, l in used) <= 2**maxlen
-            # the code must be decodable by the canonical constructor
-            P._Huff(lens)
 
 
 def test_rle_lengths_reconstructs():

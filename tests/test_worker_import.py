@@ -62,7 +62,7 @@ CHILD = textwrap.dedent(
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
     )
-    for key in ("q_warc_http_brotli", "q_epub_extract"):
+    for key in ("q_warc_http_brotli", "q_epub_extract", "q_text_unbz2"):
         print("STEP " + key, flush=True)
         got = qs[key](spark, sf_dir).count()
         want = len(con.execute(oracles[key]).fetchall())
@@ -126,7 +126,7 @@ def test_vanilla_session_outside_repo(tmp_path):
     assert proc.returncode == 0 and lines, f"{steps[-1:]} raised {errors[-5:]}"
     out = json.loads(lines[-1][len("RESULT ") :])
     assert out["db_rows"] == 50
-    for key in ("q_warc_http_brotli", "q_epub_extract"):
+    for key in ("q_warc_http_brotli", "q_epub_extract", "q_text_unbz2"):
         got, want = out[key]
         assert got == want and got > 0, (key, got, want)
     # the >30 min gap closes user 1's first session inside the micro-batch

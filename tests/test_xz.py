@@ -22,7 +22,7 @@ from yark_spark.operators.xz import (
     xz_compress,
     xz_decompress,
 )
-from yark_spark.operators.png import crc32
+from zlib import crc32
 
 # ---------------------------------------------------------------------------
 # CRC64-ECMA

@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: key groups per cogroup task in ``asof_join_grouped``: per-group
+#: Python cost is milliseconds, so a task needs tens of groups to
+#: amortize its launch + Arrow setup (measured at sf0.01, 150 groups:
+#: 200 tasks 4.6 s, 19 tasks 3.6 s, 5 tasks 3.0 s)
+GROUPS_PER_TASK = 32
+
 
 def asof_join(
     left: DataFrame,
@@ -123,22 +129,18 @@ def asof_join_grouped(
     # vanilla 200-partition session a 150-group input fanned into 200
     # mostly-empty tasks, each paying an Arrow/Python round-trip. One
     # distinct-count job on the left keys sizes the stage at
-    # ``spark.yark.asof.groupsPerTask`` groups per task (default 32:
-    # per-group Python cost is milliseconds, so a task needs tens of
-    # groups to amortize its launch + Arrow setup — measured at sf0.01,
-    # 150 groups: 200 tasks 4.6 s, 19 tasks 3.6 s, 5 tasks 3.0 s),
-    # floored at the executor parallelism and still capped at the
-    # session conf width, so a cluster-scale run (groups >> width)
-    # keeps today's behavior: the conf width.
+    # ``GROUPS_PER_TASK`` groups per task, floored at the executor
+    # parallelism and still capped at the session conf width, so a
+    # cluster-scale run (groups >> width) keeps today's behavior: the
+    # conf width.
     spark = left.sparkSession
     conf_width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    gpt = max(1, int(spark.conf.get("spark.yark.asof.groupsPerTask", "32")))
     n_groups = l_sel.select(key).distinct().count()
     n = min(
         max(conf_width, spark.sparkContext.defaultParallelism),
         max(
             spark.sparkContext.defaultParallelism,
-            -(-n_groups // gpt),  # ceil
+            -(-n_groups // GROUPS_PER_TASK),  # ceil
         ),
     )
     l_sel = l_sel.repartition(n, key)

@@ -42,9 +42,10 @@ from __future__ import annotations
 
 import json
 import struct
+import zlib
 
 from yark_spark.operators.bzip2 import bz2_compress, bz2_decompress
-from yark_spark.operators.png import crc32, inflate, zlib_compress
+from yark_spark.operators.png import inflate, zlib_compress
 from yark_spark.operators.snappy import snappy_compress, snappy_decompress
 from yark_spark.operators.varint import read_uvarint, write_uvarint
 
@@ -287,7 +288,7 @@ def _codec_compress(codec: str, raw: bytes) -> bytes:
     if codec == "deflate":  # raw RFC 1951 stream (no zlib wrapper)
         return zlib_compress(raw)[2:-4]
     if codec == "snappy":  # spec: big-endian CRC-32 of the UNCOMPRESSED data
-        return snappy_compress(raw) + struct.pack(">I", crc32(raw))
+        return snappy_compress(raw) + struct.pack(">I", zlib.crc32(raw))
     # zstd/xz import lazily: avro's import must stay cheap for the many
     # readers that never touch those codecs
     if codec == "zstd":
@@ -313,7 +314,7 @@ def _codec_decompress(codec: str, data: bytes, max_output: int | None) -> bytes:
             raise ValueError("avro: snappy block missing CRC")
         raw = snappy_decompress(data[:-4], max_output=max_output)
         (want,) = struct.unpack(">I", data[-4:])
-        if crc32(raw) != want:
+        if zlib.crc32(raw) != want:
             raise ValueError("avro: snappy block CRC mismatch")
         return raw
     if codec == "zstd":
@@ -352,7 +353,7 @@ def avro_build(
     """Serialize ``records`` into one Avro object container file."""
     if sync is None:
         # deterministic but content-dependent (fixtures stay reproducible)
-        h = crc32(json.dumps(schema, sort_keys=True).encode())
+        h = zlib.crc32(json.dumps(schema, sort_keys=True).encode())
         sync = struct.pack("<IIII", h, len(records), 0x9E3779B9, 0x85EBCA6B)
     if len(sync) != 16:
         raise ValueError("avro: sync marker must be 16 bytes")

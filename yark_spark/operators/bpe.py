@@ -40,6 +40,10 @@ from yark_spark.io import local_frame
 #: repo-wide tokenizer parity class (operators/dedup.tokens)
 _WS = r"[ \t\n\x0B\f\r]+"
 
+#: vocabularies of at most this many distinct words train on the
+#: driver (``train_bpe_merges``); larger ones take the distributed loop
+LOCAL_TRAIN_MAX_VOCAB = 200_000
+
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the whitespace-parity tokenization, lowercased;
@@ -105,7 +109,7 @@ def train_bpe_merges(
     docs: DataFrame,
     k_merges: int = 6,
     text_col: str = "text",
-    local_max_vocab: "int | None" = None,
+    local_max_vocab: int = LOCAL_TRAIN_MAX_VOCAB,
 ) -> DataFrame:
     """Learn the top-``k_merges`` BPE merges from a corpus. Returns
     (rank, left, right, pair_count) — rank 1 = first merge learned.
@@ -119,9 +123,8 @@ def train_bpe_merges(
 
     Round 18 (VERDICT r17 #3): vocabularies at or under
     ``local_max_vocab`` distinct words (default
-    ``spark.yark.bpe.localTrainMaxVocab`` = 200k, ``0`` disables)
-    route to the driver-side incremental trainer
-    (``train_bpe_merges_local`` — output pinned identical to the
+    ``LOCAL_TRAIN_MAX_VOCAB`` = 200k) route to the driver-side
+    incremental trainer (``train_bpe_merges_local`` — output pinned identical to the
     distributed loop and the classic reference in tests/test_bpe.py).
     The corpus-sized tokenize+reduce still runs distributed; only the
     (word, freq) table — bounded by the cap, ~tens of bytes/row —
@@ -133,21 +136,16 @@ def train_bpe_merges(
     spark = docs.sparkSession
     from yark_spark.operators.conf import scoped_shuffle_partitions
 
-    if local_max_vocab is None:
-        local_max_vocab = int(
-            spark.conf.get("spark.yark.bpe.localTrainMaxVocab", "200000")
-        )
     schema = "rank int, left string, right string, pair_count long"
     wf = word_freqs(docs, text_col)
-    if local_max_vocab > 0:
-        # bounded probe-and-collect: one job; > cap rows means the
-        # vocabulary is too big to hold driver-side — fall through
-        head = wf.limit(local_max_vocab + 1).collect()
-        if len(head) <= local_max_vocab:
-            merges_l = train_bpe_merges_local(
-                [(r["word"], int(r["freq"])) for r in head], k_merges
-            )
-            return local_frame(spark, merges_l, schema)
+    # bounded probe-and-collect: one job; > cap rows means the
+    # vocabulary is too big to hold driver-side — fall through
+    head = wf.limit(local_max_vocab + 1).collect()
+    if len(head) <= local_max_vocab:
+        merges_l = train_bpe_merges_local(
+            [(r["word"], int(r["freq"])) for r in head], k_merges
+        )
+        return local_frame(spark, merges_l, schema)
 
     words = (
         wf.select("freq", F.split("word", "").alias("seq"))

@@ -1,33 +1,30 @@
-"""bzip2 codec from scratch (round 12): the complete decode stack —
-stream/block framing, the two-level symbol map, multi-group Huffman
-with MTF-coded selectors, delta-coded code lengths, RUNA/RUNB
-(bijective base-2) zero-run decoding, move-to-front, the inverse
-Burrows-Wheeler transform, the initial run-length layer, and both CRC
-layers (bzip2's non-reflected CRC-32 per block plus the rotate-combine
-stream CRC) — and a conformant encoder (numpy rank-doubling BWT,
-package-merge length-limited Huffman reused from the DEFLATE work,
-canonical code emission) so the stdlib ``bz2`` module provides TRUE
-two-way differentials: our decoder must read libbzip2's output and
-libbzip2 must read ours, the same external pin the PNG/DEFLATE codec
-has with zlib.
+"""bzip2 codec (round 12). Decoding runs in stdlib ``bz2``
+(libbzip2): :func:`bz2_decompress` walks concatenated streams (the
+Wikipedia *multistream* dump layout) under a bomb guard and maps
+libbzip2's errors onto typed ``ValueError``. The encoder is a conformant
+pure-Python one (fixture bytes are pinned to it): the initial
+run-length layer, numpy rank-doubling BWT, move-to-front with RUNA/RUNB
+zero runs, package-merge length-limited Huffman reused from the DEFLATE
+work, canonical code emission, and both CRC layers (bzip2's
+non-reflected CRC-32 per block plus the rotate-combine stream CRC).
+libbzip2 must read its output byte-exactly — the external pin
+tests/test_bzip2.py holds it to.
 
 Why this format: Wikipedia database dumps — a canonical LLM pretraining
 source — ship exclusively as ``.xml.bz2`` (including the multistream
-variant, which is just concatenated bzip2 streams; the decoder walks
-them the way the gzip reader walks multi-member files). With gzip,
-zstd, LZ4 and now bzip2, every compression wrapper a public text corpus
-actually arrives in decodes through ``containers.decompress_auto``.
+variant, which is just concatenated bzip2 streams, walked the way the
+gzip reader walks multi-member files). With gzip, zstd, LZ4 and bzip2,
+every compression wrapper a public text corpus actually arrives in
+decodes through ``containers.decompress_auto``.
 
 Reference parity note: the reference archiver ingests from archives
 (/root/reference/cmds/archive.py:317-327) but stores bytes opaquely;
 decoding them is mandate-side training-pipeline surface.
-
-Malformed payloads raise typed ``ValueError`` (quarantine-compatible);
-the deprecated "randomized" block bit raises ``NotImplementedError``
-(libbzip2 itself dropped the encoder for it decades ago).
 """
 
 from __future__ import annotations
+
+import bz2
 
 import numpy as np
 
@@ -38,7 +35,7 @@ __all__ = ["bz2_compress", "bz2_decompress", "bzip2_crc32"]
 _BLOCK_MAGIC = 0x314159265359
 _FOOTER_MAGIC = 0x177245385090
 _GROUP_SIZE = 50  # symbols per Huffman selector
-_MAX_HUFF_LEN = 17  # encoder cap (decoder accepts up to 23 per spec)
+_MAX_HUFF_LEN = 17  # code-length cap, the one libbzip2's own encoder uses
 
 
 # ---------------------------------------------------------------------------
@@ -70,36 +67,9 @@ def bzip2_crc32(data: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Bit I/O — one continuous MSB-first bitstream (bzip2 has no byte
+# Bit writer — one continuous MSB-first bitstream (bzip2 has no byte
 # alignment anywhere between the header and the final padding)
 # ---------------------------------------------------------------------------
-
-
-class _Reader:
-    __slots__ = ("data", "pos", "nbits")
-
-    def __init__(self, data: bytes, start_byte: int = 0):
-        self.data = data
-        self.pos = start_byte << 3
-        self.nbits = len(data) << 3
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        end = self.pos + n
-        if end > self.nbits:
-            raise ValueError("bzip2: truncated bitstream")
-        lo, hi = self.pos >> 3, (end + 7) >> 3
-        chunk = int.from_bytes(self.data[lo:hi], "big")
-        self.pos = end
-        return (chunk >> ((hi << 3) - end)) & ((1 << n) - 1)
-
-    def read_bit(self) -> int:
-        if self.pos >= self.nbits:
-            raise ValueError("bzip2: truncated bitstream")
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
 
 
 class _Writer:
@@ -150,27 +120,6 @@ def _rle1_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _rle1_decode(data: bytes) -> bytes:
-    out = bytearray()
-    i, n = 0, len(data)
-    run = 0
-    prev = -1
-    while i < n:
-        b = data[i]
-        i += 1
-        out.append(b)
-        run = run + 1 if b == prev else 1
-        prev = b
-        if run == 4:
-            if i >= n:
-                raise ValueError("bzip2: RLE1 run missing count byte")
-            out += bytes([b]) * data[i]
-            i += 1
-            run = 0
-            prev = -1
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # BWT — numpy rank-doubling over cyclic rotations (O(n log² n); never
 # the quadratic sorted-rotations shortcut)
@@ -208,43 +157,6 @@ def _bwt_encode(data: bytes) -> tuple[bytes, int]:
     return last.tobytes(), orig_ptr
 
 
-def _bwt_decode(last: bytes, orig_ptr: int) -> bytes:
-    n = len(last)
-    if not 0 <= orig_ptr < n:
-        raise ValueError("bzip2: origPtr outside block")
-    arr = np.frombuffer(last, dtype=np.uint8)
-    # T[j] = position in `last` of the j-th smallest (symbol, occurrence)
-    order = np.argsort(arr, kind="stable").astype(np.int64)
-    out = np.empty(n, dtype=np.uint8)
-    p = order[orig_ptr]
-    for i in range(n):
-        out[i] = arr[p]
-        p = order[p]
-    return out.tobytes()
-
-
-def _bwt_decode_fast(last: bytes, orig_ptr: int) -> bytes:
-    """Vectorized inverse BWT: follow the permutation cycle with numpy
-    by materializing the cycle order via repeated squaring is overkill —
-    instead decode via the linked-list walk but in a C-speed loop using
-    the standard counting construction. Falls back to the reference
-    walk for small blocks (they dominate the fixture path anyway)."""
-    n = len(last)
-    if n <= 1 << 14:
-        return _bwt_decode(last, orig_ptr)
-    arr = np.frombuffer(last, dtype=np.uint8)
-    order = np.argsort(arr, kind="stable").astype(np.int64)
-    out = bytearray(n)
-    p = int(order[orig_ptr])
-    # local-variable walk: ~3x the numpy item access speed
-    ol = order.tolist()
-    al = arr.tolist()
-    for i in range(n):
-        out[i] = al[p]
-        p = ol[p]
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # MTF + RUNA/RUNB
 # ---------------------------------------------------------------------------
@@ -279,52 +191,9 @@ def _mtf_rle2_encode(bwt: bytes, used: list[int]) -> list[int]:
     return out
 
 
-def _mtf_rle2_decode(symbols: list[int], used: list[int], max_block: int) -> bytes:
-    stack = list(used)
-    out = bytearray()
-    zrun = 0
-    zbit = 0
-    for s in symbols:
-        if s <= 1:  # RUNA / RUNB
-            zrun += (s + 1) << zbit
-            zbit += 1
-            continue
-        if zrun:
-            if len(out) + zrun > max_block:
-                raise ValueError("bzip2: block overruns declared size")
-            out += bytes([stack[0]]) * zrun
-            zrun = zbit = 0
-        j = s - 1
-        if j >= len(stack):
-            raise ValueError("bzip2: MTF index beyond used alphabet")
-        stack.insert(0, stack.pop(j))
-        out.append(stack[0])
-        if len(out) > max_block:
-            raise ValueError("bzip2: block overruns declared size")
-    if zrun:
-        if len(out) + zrun > max_block:
-            raise ValueError("bzip2: block overruns declared size")
-        out += bytes([stack[0]]) * zrun
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # Huffman (canonical, MSB-first — increasing length, symbol order)
 # ---------------------------------------------------------------------------
-
-
-def _read_lengths(r: _Reader, alpha: int) -> list[int]:
-    lens = []
-    cur = r.read(5)
-    for _ in range(alpha):
-        while True:
-            if not 1 <= cur <= 23:
-                raise ValueError("bzip2: code length out of range")
-            if r.read_bit() == 0:
-                break
-            cur += -1 if r.read_bit() else 1
-        lens.append(cur)
-    return lens
 
 
 def _write_lengths(w: _Writer, lens: list[int]) -> None:
@@ -340,158 +209,37 @@ def _write_lengths(w: _Writer, lens: list[int]) -> None:
         w.write(0, 1)
 
 
-class _HuffDecoder:
-    """limit/base/perm canonical decoder (the classic bzip2 layout)."""
-
-    __slots__ = ("min_len", "max_len", "limit", "base", "perm")
-
-    def __init__(self, lens: list[int]):
-        self.min_len = min(lens)
-        self.max_len = max(lens)
-        if self.max_len > 23:
-            raise ValueError("bzip2: code length exceeds 23")
-        self.perm = [
-            s
-            for ln in range(self.min_len, self.max_len + 1)
-            for s, l in enumerate(lens)
-            if l == ln
-        ]
-        count = [0] * (self.max_len + 2)
-        for l in lens:
-            count[l] += 1
-        self.limit = [0] * (self.max_len + 2)
-        self.base = [0] * (self.max_len + 2)
-        vec = 0
-        total = 0
-        for ln in range(self.min_len, self.max_len + 1):
-            self.base[ln] = vec - total
-            vec += count[ln]
-            total += count[ln]
-            self.limit[ln] = vec - 1
-            vec <<= 1
-
-    def decode(self, r: _Reader) -> int:
-        ln = self.min_len
-        code = r.read(ln)
-        while ln <= self.max_len:
-            if code <= self.limit[ln]:
-                return self.perm[code - self.base[ln]]
-            code = (code << 1) | r.read_bit()
-            ln += 1
-        raise ValueError("bzip2: invalid Huffman code")
-
-
 # ---------------------------------------------------------------------------
-# Stream decode
+# Stream decode (libbzip2)
 # ---------------------------------------------------------------------------
-
-
-def _decode_block(r: _Reader, max_block: int) -> tuple[bytes, int]:
-    crc = r.read(32)
-    if r.read_bit():
-        raise NotImplementedError("bzip2: randomized blocks (deprecated)")
-    orig_ptr = r.read(24)
-    used_groups = r.read(16)
-    used: list[int] = []
-    for g in range(16):
-        if used_groups & (0x8000 >> g):
-            bits = r.read(16)
-            for j in range(16):
-                if bits & (0x8000 >> j):
-                    used.append(16 * g + j)
-    if not used:
-        raise ValueError("bzip2: empty symbol map")
-    alpha = len(used) + 2
-    n_groups = r.read(3)
-    if not 2 <= n_groups <= 6:
-        raise ValueError(f"bzip2: invalid group count {n_groups}")
-    n_selectors = r.read(15)
-    if n_selectors == 0:
-        raise ValueError("bzip2: zero selectors")
-    sel_mtf = [0] * n_selectors
-    for i in range(n_selectors):
-        j = 0
-        while r.read_bit():
-            j += 1
-            if j >= n_groups:
-                raise ValueError("bzip2: selector beyond group count")
-        sel_mtf[i] = j
-    stack = list(range(n_groups))
-    selectors = []
-    for j in sel_mtf:
-        stack.insert(0, stack.pop(j))
-        selectors.append(stack[0])
-    tables = [_HuffDecoder(_read_lengths(r, alpha)) for _ in range(n_groups)]
-
-    eob = alpha - 1
-    symbols: list[int] = []
-    g_idx, g_left = -1, 0
-    dec = None
-    while True:
-        if g_left == 0:
-            g_idx += 1
-            if g_idx >= len(selectors):
-                raise ValueError("bzip2: ran out of selectors")
-            dec = tables[selectors[g_idx]]
-            g_left = _GROUP_SIZE
-        s = dec.decode(r)
-        g_left -= 1
-        if s == eob:
-            break
-        symbols.append(s)
-        if len(symbols) > max_block + 10:
-            raise ValueError("bzip2: symbol stream overruns block size")
-
-    bwt = _mtf_rle2_decode(symbols, used, max_block)
-    if orig_ptr >= len(bwt):
-        raise ValueError("bzip2: origPtr outside block")
-    raw = _rle1_decode(_bwt_decode_fast(bwt, orig_ptr))
-    if bzip2_crc32(raw) != crc:
-        raise ValueError("bzip2: block CRC mismatch")
-    return raw, crc
-
-
-def _decode_stream(r: _Reader) -> bytes:
-    if r.read(16) != 0x425A or r.read(8) != 0x68:  # 'BZ' 'h'
-        raise ValueError("bzip2: bad stream magic")
-    level = r.read(8) - 0x30
-    if not 1 <= level <= 9:
-        raise ValueError("bzip2: invalid block-size level")
-    max_block = level * 100_000
-    out = bytearray()
-    combined = 0
-    while True:
-        magic = r.read(48)
-        if magic == _FOOTER_MAGIC:
-            stream_crc = r.read(32)
-            if stream_crc != combined:
-                raise ValueError("bzip2: stream CRC mismatch")
-            return bytes(out)
-        if magic != _BLOCK_MAGIC:
-            raise ValueError("bzip2: lost block sync")
-        raw, crc = _decode_block(r, max_block)
-        out += raw
-        combined = (((combined << 1) | (combined >> 31)) ^ crc) & 0xFFFFFFFF
 
 
 def bz2_decompress(payload: bytes, max_output: int = 1 << 26) -> bytes:
-    """bzip2 stream(s) → raw bytes. Concatenated streams (the Wikipedia
-    *multistream* dump layout) decode like multi-member gzip: after one
-    stream's footer, the reader re-aligns to the next byte and expects
-    another ``BZh`` header."""
-    b = bytes(payload)
-    if len(b) < 10:
+    """bzip2 stream(s) → raw bytes through libbzip2. Concatenated
+    streams (the Wikipedia *multistream* dump layout) decode like
+    multi-member gzip: after one stream ends, the next bytes must open
+    another ``BZh`` stream. Output past ``max_output`` raises."""
+    rest = bytes(payload)
+    if len(rest) < 10:
         raise ValueError("bzip2: payload too short")
-    out = bytearray()
-    r = _Reader(b)
-    while True:
-        out += _decode_stream(r)
-        if len(out) > max_output:
+    parts = []
+    produced = 0
+    while rest:
+        if rest[:3] != b"BZh":
+            raise ValueError("bzip2: bad stream magic")
+        d = bz2.BZ2Decompressor()
+        try:
+            part = d.decompress(rest, max_output + 1 - produced)
+        except OSError as e:
+            raise ValueError(f"bzip2: {e}") from None
+        parts.append(part)
+        produced += len(part)
+        if produced > max_output:
             raise ValueError("bzip2: output exceeds bomb guard")
-        r.pos = (r.pos + 7) & ~7  # streams are byte-aligned
-        if r.pos >= r.nbits:
-            return bytes(out)
-        r = _Reader(b, r.pos >> 3)
+        if not d.eof:
+            raise ValueError("bzip2: truncated stream")
+        rest = d.unused_data
+    return b"".join(parts)
 
 
 # ---------------------------------------------------------------------------

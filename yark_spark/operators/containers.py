@@ -1,16 +1,15 @@
 """Compressed/archival text containers (round 11): gzip members and
-POSIX ustar tar shards, from scratch over the in-repo DEFLATE.
+POSIX ustar tar shards.
 
 Why these two: web corpora ship as **gzip** (WARC/WET, most crawled
 text), and multimodal training shards ship as **tar** (the WebDataset
 convention: ``{key}.jpg`` + ``{key}.json`` members streamed
 sequentially). Both are pure container formats — gzip is RFC 1952
-framing around the DEFLATE stream ``operators/png`` already implements
-from scratch (round 11's LZ77 + length-limited dynamic Huffman
-encoder), and ustar is 512-byte headers with octal fields — so the
-engine reads real-world shard bytes with no external library, same
-design rules as the codecs (typed ``ValueError`` on malformed
-payloads, bomb guard via ``max_output``).
+framing around a DEFLATE stream (inflated by ``operators/png.inflate``
+through stdlib zlib; written by png's round-11 LZ77 + length-limited
+dynamic Huffman encoder), and ustar is 512-byte headers with octal
+fields — with the same design rules as the codecs (typed
+``ValueError`` on malformed payloads, bomb guard via ``max_output``).
 
 Reference parity note: the reference stores fetched bytes opaquely
 (/root/reference/cmds/archive.py:88-91); shard ingest is mandate-side
@@ -21,8 +20,9 @@ from __future__ import annotations
 
 import re
 import struct
+import zlib
 
-from yark_spark.operators.png import crc32, inflate, zlib_compress, zlib_decompress
+from yark_spark.operators.png import inflate, zlib_compress, zlib_decompress
 
 _MEMBER_KEY_RE = re.compile(r"^(\d+)")
 
@@ -68,7 +68,7 @@ def gzip_compress(raw: bytes, name: str | None = None, method: str = "dynamic") 
         out += name.encode("utf-8") + b"\x00"
     # zlib_compress = 2-byte header + deflate body + 4-byte adler; strip both
     out += zlib_compress(raw, method=method)[2:-4]
-    out += struct.pack("<II", crc32(raw), len(raw) & 0xFFFFFFFF)
+    out += struct.pack("<II", zlib.crc32(raw), len(raw) & 0xFFFFFFFF)
     return bytes(out)
 
 
@@ -109,7 +109,7 @@ def _gzip_member(p: bytes, pos: int, max_output: int | None) -> tuple[bytes, int
     if pos + 8 > len(p):
         raise ValueError("gzip: truncated trailer")
     crc, isize = struct.unpack_from("<II", p, pos)
-    if crc32(raw) != crc:
+    if zlib.crc32(raw) != crc:
         raise ValueError("gzip: CRC-32 mismatch")
     if (len(raw) & 0xFFFFFFFF) != isize:
         raise ValueError("gzip: ISIZE mismatch")
@@ -467,17 +467,13 @@ def _content_decode(coding: str, data: bytes, max_output: int | None) -> bytes:
     if coding == "zstd":
         return zstd_decompress_member(data, max_output=max_output)
     if coding == "br":
-        # from-scratch RFC 7932 (round 14); streams referencing the
-        # static dictionary or the UTF8/SIGNED context tables raise
-        # typed NotImplementedError inside → quarantine, never mojibake
+        # RFC 7932 through the C brotli decoder (round 14); corrupt or
+        # cut bodies raise typed ValueError → quarantine, never mojibake
         from yark_spark.operators.brotli import brotli_decompress
 
-        out = brotli_decompress(
-            data, max_output=max_output if max_output else 1 << 28
+        return brotli_decompress(
+            data, max_output=1 << 28 if max_output is None else max_output
         )
-        if max_output is not None and len(out) > max_output:
-            raise ValueError("http: brotli body exceeds bound")
-        return out
     raise ValueError(f"http: unknown content-coding {coding!r}")
 
 

@@ -57,12 +57,12 @@ from __future__ import annotations
 
 import json
 import re
+import zlib
 
 from yark_spark.operators.containers import tar_build, tar_members
 from yark_spark.operators.parquet_data import parquet_read_columns
 from yark_spark.operators.parquet_meta import parquet_footer
 from yark_spark.operators.parquet_write import parquet_write, plist, pmap
-from yark_spark.operators.png import crc32
 from yark_spark.operators.variant import variant_to_python
 from yark_spark.operators.roaring import (
     roaring64_array_deserialize,
@@ -491,7 +491,7 @@ def _dv_dead_rows(members: dict, dv: dict) -> frozenset:
             raise ValueError("delta: DV length word disagrees with sizeInBytes")
         data = blob[off + 4 : off + 4 + size]
         stored = int.from_bytes(blob[off + 4 + size : off + 8 + size], "big")
-        if crc32(data) != stored:
+        if zlib.crc32(data) != stored:
             raise ValueError("delta: DV checksum mismatch")
     else:
         raise ValueError(f"delta: unknown DV storageType {st!r}")
@@ -588,7 +588,7 @@ def delta_add_deletion_vectors(
             off = len(blob)
             blob += len(bitmap).to_bytes(4, "big")
             blob += bitmap
-            blob += crc32(bitmap).to_bytes(4, "big")
+            blob += zlib.crc32(bitmap).to_bytes(4, "big")
             descriptors[path] = {
                 "storageType": storage,
                 "offset": off,

@@ -12,9 +12,8 @@ T.81 codec in operators/jpeg (hash-matched via q_image_decode_jpeg on a
 constructed-exact roundtrip) — including PROGRESSIVE JPEG and restart
 intervals since round 9, lossless WebP (VP8L) via operators/webp since
 round 10 (hash-matched via q_image_decode_webp), plus 16-bit netpbm and
-BI_RLE8-compressed BMP, and PNG since round 11 — a from-scratch DEFLATE
-inflate (stored/fixed/dynamic Huffman) + all five filters in
-operators/png, hash-matched via q_image_decode_png. The remaining
+BI_RLE8-compressed BMP, and PNG since round 11 — zlib inflate + all
+five filters in operators/png, hash-matched via q_image_decode_png. The remaining
 boundaries are the DCT/arithmetic video-class codecs: lossy VP8,
 arithmetic-coded JPEG, and BMP's embedded BI_JPEG/BI_PNG payloads;
 fake_image_features remains the deterministic stand-in for those paths.
@@ -28,6 +27,7 @@ governs scan granularity; rows stay within a single task end-to-end.
 from __future__ import annotations
 
 import hashlib
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -65,7 +65,7 @@ def _make_decoder():
     with BI_RGB at 8/24/32 bpp, BI_RLE8/BI_RLE4 runs, and BI_BITFIELDS
     16/32 bpp (mask-generic, 565/555/8888), baseline +
     progressive JPEG (operators/jpeg), lossless WebP / VP8L
-    (operators/webp), and PNG (operators/png — from-scratch DEFLATE,
+    (operators/webp), and PNG (operators/png — zlib inflate,
     all filter types, color types 0/2/3/4/6, depths 1-16). Remaining
     formats raise NotImplementedError — a real deployment plugs PIL/cv2
     in for those (the VP8 DCT codec is out of scope; PNG decodes fully,
@@ -260,9 +260,9 @@ def _make_decoder():
     # documented DCT-codec boundary)
     from yark_spark.operators.webp import decode_webp as _decode_webp
 
-    # PNG (r11): the from-scratch DEFLATE + filter decoder in
-    # operators/png (both interlace methods decode; FDICT/zlib-bomb
-    # payloads raise typed errors)
+    # PNG (r11): zlib inflate + the filter decoder in operators/png
+    # (both interlace methods decode; FDICT/zlib-bomb payloads raise
+    # typed errors)
     from yark_spark.operators.png import decode_png as _decode_png
 
     # GIF (r11): the from-scratch LZW codec in operators/gif (multi-frame
@@ -1791,11 +1791,11 @@ def with_warc_shards(
     # message, framing cycling with doc key % 6 — identity / chunked /
     # gzip / chunked-over-gzip / deflate / zstd (q_warc_http_decode).
     # "cycle_br" (round 14) widens to % 8 with br and chunked-over-br —
-    # the from-scratch RFC 7932 wire (q_warc_http_brotli).
+    # the from-scratch RFC 7932 encoder's wire (q_warc_http_brotli).
     # "cycle_br_real" (session 3) widens to % 9: the ninth wire is a
     # body compressed by GENUINE C brotli at q11 — static-dictionary
     # references and UTF8 context modeling on third-party wire, decoded
-    # by the from-scratch reader inside the oracle-checked path
+    # inside the oracle-checked path
     # (q_warc_http_brotli_real).
     _WIRES = (
         (False, None),
@@ -1813,10 +1813,9 @@ def with_warc_shards(
     def _br_real(body: bytes) -> tuple[str, bytes]:
         # body compressed by GENUINE C brotli at max quality — static-
         # dictionary references and UTF8 context modeling on the wire,
-        # decoded by the from-scratch reader (whose dictionary/context
-        # tables were themselves extracted from this library;
-        # scripts/extract_brotli_*.py). Lives HERE, in the fixture
-        # builder, so operators/containers.py stays dependency-free.
+        # decoded by operators/brotli through the same library. Lives
+        # HERE, in the fixture builder, so operators/containers.py
+        # stays dependency-free.
         import pyarrow as _pa
 
         return "br", _pa.Codec("brotli", compression_level=11).compress(
@@ -2832,14 +2831,12 @@ def delta_dv_features(
     applyInPandas per table, map-only resolve."""
     from yark_spark.operators import deltalog as _dl
     from yark_spark.operators import parquet_write as _pw_mod
-    from yark_spark.operators import png as _png_mod
     from yark_spark.operators import roaring as _roar_mod
     from yark_spark.operators.containers import tar_build as _tar
 
     _rows = _dl.delta_snapshot_rows
 
     _write = _pw_mod.parquet_write
-    _crc32 = _png_mod.crc32
     _rser = _roar_mod.roaring64_array_serialize
     _z85 = _roar_mod.z85_encode
 
@@ -2878,7 +2875,7 @@ def delta_dv_features(
             bytes([1])
             + len(bm1).to_bytes(4, "big")
             + bm1
-            + _crc32(bm1).to_bytes(4, "big")
+            + zlib.crc32(bm1).to_bytes(4, "big")
         )
         dv1 = {
             "storageType": "p",
@@ -3558,7 +3555,7 @@ def with_jsonl_lz4_shards(
 def with_bz2_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """bzip2-compress each document's text with the from-scratch codec
+    """bzip2-compress each document's text with the from-scratch encoder
     (operators/bzip2: RLE1 → rank-doubling BWT → MTF/RUNA-RUNB →
     canonical Huffman, both CRC layers) — the `.bz2` wrapper Wikipedia
     dumps ship in. Map-only mapInPandas."""
@@ -4521,7 +4518,7 @@ def tfrecord_listing(
     payload_col: str = "payload",
 ) -> DataFrame:
     """Explode TFRecord shards back into per-document rows (round 12):
-    explicit codec dispatch (gzip via the in-repo DEFLATE — tf.data
+    explicit codec dispatch (gzip via containers.gzip_decompress — tf.data
     style, where compression_type is declared, never sniffed, because a
     record length's low bytes can collide with the gzip magic), masked
     CRC-32C verification on EVERY length and payload, tf.Example

@@ -4,8 +4,8 @@ grammar — header, numbered objects, cross-reference TABLE located via
 object model (dicts ``<<…>>``, names, numbers, literal strings with
 all eight escapes + octal + line continuations, arrays, indirect
 references ``N G R``), streams with direct OR indirect ``/Length``,
-``FlateDecode`` through the in-repo RFC 1950/1951 codec
-(``operators/png``) — and the content-stream text operators (``BT`` /
+``FlateDecode`` through ``operators/png`` (RFC 1950 container checks,
+stdlib zlib inflate) — and the content-stream text operators (``BT`` /
 ``ET``, ``Tj``, the ``TJ`` array form with kerning numbers, the ``'``
 next-line form, ``Td``/``TD``/``T*`` line moves as word boundaries) —
 reader AND a writer for fixtures, nothing imported.

@@ -21,8 +21,8 @@ Deletion vector blob (``deletion-vector-v1``, Iceberg v3 spec): a
 ``D1 D3 39 64``, the vector serialized in Delta's RoaringBitmapArray
 portable format (magic 1681511377 — ``operators/roaring`` both
 directions, deliberately Delta-compatible per the v3 spec), and a
-4-byte big-endian CRC-32C (Castagnoli, NOT zlib's CRC-32) over
-magic + vector. Blob properties must carry ``referenced-data-file``
+4-byte big-endian CRC-32C (Castagnoli, NOT zlib's CRC-32 — the
+slice-by-8 ``tfrecord.crc32c``) over magic + vector. Blob properties must carry ``referenced-data-file``
 and ``cardinality``.
 
 Reference parity note: the reference archiver (SupBlizard/yark)
@@ -39,6 +39,7 @@ from yark_spark.operators.roaring import (
     roaring64_array_deserialize,
     roaring64_array_serialize,
 )
+from yark_spark.operators.tfrecord import crc32c
 
 __all__ = [
     "crc32c",
@@ -51,23 +52,6 @@ __all__ = [
 
 _MAGIC = b"PFA1"
 _DV_MAGIC = bytes([0xD1, 0xD3, 0x39, 0x64])
-
-# CRC-32C (Castagnoli): reflected polynomial 0x82F63B78 — the checksum
-# Iceberg's DV blob mandates (zlib's crc32 uses 0xEDB88320 and would
-# reject every real file).
-_CRC32C_TABLE = []
-for _i in range(256):
-    _c = _i
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
-    crc = ~crc & 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
-    return ~crc & 0xFFFFFFFF
 
 
 def dv_blob_build(rows: "list[int] | set[int]") -> tuple[bytes, int]:

@@ -59,8 +59,8 @@ from __future__ import annotations
 
 import hashlib
 import struct
+import zlib
 
-from yark_spark.operators.png import crc32
 
 __all__ = [
     "crc64",
@@ -1106,7 +1106,7 @@ def xz_compress(
         raise ValueError(f"xz: unknown check {check!r}")
     cid = _CHECK_NAMES[check]
     flags = bytes([0x00, cid])
-    out = bytearray(_XZ_MAGIC + flags + struct.pack("<I", crc32(flags)))
+    out = bytearray(_XZ_MAGIC + flags + struct.pack("<I", zlib.crc32(flags)))
 
     # block header: one LZMA2 filter
     body = bytearray()
@@ -1120,7 +1120,7 @@ def xz_compress(
     body += b"\x00" * pad
     header_size_byte = (1 + len(body) + 4) // 4 - 1
     header = bytes([header_size_byte]) + bytes(body)
-    header += struct.pack("<I", crc32(header))
+    header += struct.pack("<I", zlib.crc32(header))
     out += header
 
     comp = lzma2_compress(data, chunk_size=chunk_size, mode=mode)
@@ -1128,7 +1128,7 @@ def xz_compress(
     data_pad = (4 - len(comp) % 4) % 4
     out += b"\x00" * data_pad
     if cid == 0x01:
-        out += struct.pack("<I", crc32(data))
+        out += struct.pack("<I", zlib.crc32(data))
     elif cid == 0x04:
         out += struct.pack("<Q", crc64(data))
     elif cid == 0x0A:
@@ -1142,12 +1142,12 @@ def xz_compress(
     index += _varint_encode(len(data))
     ipad = (4 - len(index) % 4) % 4
     index += b"\x00" * ipad
-    index += struct.pack("<I", crc32(bytes(index)))
+    index += struct.pack("<I", zlib.crc32(bytes(index)))
     out += index
 
     backward = struct.pack("<I", len(index) // 4 - 1)
     footer_body = backward + flags
-    out += struct.pack("<I", crc32(footer_body)) + footer_body + _XZ_FOOTER_MAGIC
+    out += struct.pack("<I", zlib.crc32(footer_body)) + footer_body + _XZ_FOOTER_MAGIC
     return bytes(out)
 
 
@@ -1163,7 +1163,7 @@ def _parse_block(
         raise ValueError("xz: truncated block header")
     header = data[pos : pos + header_size]
     (stored_crc,) = struct.unpack("<I", header[-4:])
-    if crc32(header[:-4]) != stored_crc:
+    if zlib.crc32(header[:-4]) != stored_crc:
         raise ValueError("xz: block header CRC mismatch")
     hp = 1
     bflags = header[hp]
@@ -1255,7 +1255,7 @@ def _parse_block(
     chk = data[pos : pos + csize]
     if len(chk) != csize:
         raise ValueError("xz: truncated block check")
-    if check_id == 0x01 and struct.unpack("<I", chk)[0] != crc32(raw):
+    if check_id == 0x01 and struct.unpack("<I", chk)[0] != zlib.crc32(raw):
         raise ValueError("xz: CRC32 check mismatch")
     if check_id == 0x04 and struct.unpack("<Q", chk)[0] != crc64(raw):
         raise ValueError("xz: CRC64 check mismatch")
@@ -1341,7 +1341,7 @@ def xz_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
             raise ValueError("xz: bad stream-header magic")
         flags = data[pos + 6 : pos + 8]
         (hcrc,) = struct.unpack("<I", data[pos + 8 : pos + 12])
-        if crc32(flags) != hcrc:
+        if zlib.crc32(flags) != hcrc:
             raise ValueError("xz: stream-header CRC mismatch")
         if flags[0] != 0 or flags[1] not in _CHECK_SIZES:
             raise ValueError("xz: unsupported stream flags")
@@ -1374,7 +1374,7 @@ def xz_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
             raise ValueError("xz: nonzero index padding")
         pos += ipad
         (icrc,) = struct.unpack("<I", data[pos : pos + 4])
-        if crc32(data[istart:pos]) != icrc:
+        if zlib.crc32(data[istart:pos]) != icrc:
             raise ValueError("xz: index CRC mismatch")
         pos += 4
         index_size = pos - istart
@@ -1383,7 +1383,7 @@ def xz_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
             raise ValueError("xz: truncated stream footer")
         (fcrc,) = struct.unpack("<I", data[pos : pos + 4])
         footer_body = data[pos + 4 : pos + 10]
-        if crc32(footer_body) != fcrc:
+        if zlib.crc32(footer_body) != fcrc:
             raise ValueError("xz: stream-footer CRC mismatch")
         (backward,) = struct.unpack("<I", footer_body[:4])
         if (backward + 1) * 4 != index_size:

@@ -4,8 +4,8 @@ layout — local file headers (PK\\x03\\x04), central directory entries
 by the backward signature scan the format requires (the trailing
 variable-length comment means a reader MUST find EOCD from the end),
 DOS mod time/date fields, and per-member CRC-32 verification — with
-methods 0 (stored) and 8 (deflate, the in-repo RFC 1951 codec from
-``operators/png``), both directions, nothing imported.
+methods 0 (stored) and 8 (deflate through ``operators/png``: the
+in-repo RFC 1951 encoder, stdlib zlib to inflate), both directions.
 
 ZIP is the long tail of public dataset distribution: Kaggle exports,
 academic benchmark releases (GLUE, SQuAD mirrors), image-archive drops
@@ -44,8 +44,9 @@ hash. Wire vectors + roundtrip fuzz live in tests/test_zip.py.
 from __future__ import annotations
 
 import struct
+import zlib
 
-from yark_spark.operators.png import crc32, inflate, zlib_compress
+from yark_spark.operators.png import inflate, zlib_compress
 
 __all__ = ["zip_build", "zip_members", "zip_member_names"]
 
@@ -79,7 +80,7 @@ def zip_build(
     central = bytearray()
     for i, (name, payload) in enumerate(members):
         nb = name.encode("utf-8")
-        crc = crc32(payload)
+        crc = zlib.crc32(payload)
         method = methods[i] if methods is not None else _DEFLATE
         if method == _DEFLATE:
             comp = zlib_compress(payload)[2:-4]  # raw RFC 1951 stream
@@ -345,7 +346,7 @@ def zip_members(
                 raise ValueError("zip: zstd member size mismatch")
         else:
             raise NotImplementedError(f"zip: compression method {method}")
-        if crc32(data) != crc:
+        if zlib.crc32(data) != crc:
             raise ValueError(f"zip: CRC mismatch in member {name!r}")
         out.append((name, method, data))
     return out

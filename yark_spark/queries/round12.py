@@ -664,16 +664,16 @@ _UNBZ2_ORACLE = (
 
 @query("q_text_unbz2", oracle=_UNBZ2_ORACLE)
 def q_text_unbz2(spark, sf_dir):
-    """E104 bzip2 text ingest (round 12): documents round-trip through
-    the from-scratch bzip2 codec (operators/bzip2 — RLE1, numpy
+    """E104 bzip2 text ingest (round 12): documents are compressed by
+    the from-scratch bzip2 encoder (operators/bzip2 — RLE1, numpy
     rank-doubling BWT, MTF with RUNA/RUNB bijective-base-2 zero runs,
-    multi-group canonical Huffman with MTF selectors, bzip2's
-    non-reflected CRC-32 per block plus the rotate-combine stream CRC).
-    `.bz2` is how Wikipedia database dumps — a canonical pretraining
-    source — actually ship. The codec is pinned by TWO-WAY stdlib
-    differentials (our decoder reads libbzip2 output, libbzip2 reads
-    ours — the PNG/zlib recipe); the decoded md5 digest must equal
-    DuckDB's md5(text). Two map-only mapInPandas stages; text bytes
+    canonical Huffman, bzip2's non-reflected CRC-32 per block plus the
+    rotate-combine stream CRC) and decoded by libbzip2 (stdlib ``bz2``)
+    behind ``bz2_decompress``'s bomb guard and typed errors. `.bz2` is
+    how Wikipedia database dumps — a canonical pretraining source —
+    actually ship. libbzip2 must read the encoder's streams
+    byte-exactly (tests/test_bzip2.py); the decoded md5 digest must
+    equal DuckDB's md5(text). Two map-only mapInPandas stages; text bytes
     never shuffle."""
     from yark_spark.operators.multimodal import unbz2_text_features, with_bz2_payload
 

@@ -384,14 +384,11 @@ def q_warc_http_brotli(spark, sf_dir):
     FROM-SCRATCH RFC 7932 encoder (operators/brotli: greedy LZ77 over
     the stream window, canonical package-merge prefix codes through
     the complex serialization, implicit-distance command cells) and
-    recovered by the from-scratch decoder (full meta-block grammar,
-    both prefix-code header forms, block switching, context maps,
-    the distance short-code ring). Both directions are pinned against
-    GENUINE C brotli in tests/test_brotli.py — real brotli decodes our
-    wire byte-exactly, and (since session 3 extracted the static
-    dictionary + context tables from the container's real brotli —
-    q_warc_http_brotli_real) real streams at EVERY quality decode
-    byte-exactly here. CDN-served crawl captures lean on br heavily;
+    recovered by the C brotli decoder pyarrow ships. The encoder is
+    pinned against that GENUINE C brotli in tests/test_brotli.py —
+    real brotli decodes our wire byte-exactly — and real streams at
+    EVERY quality decode byte-exactly (q_warc_http_brotli_real).
+    CDN-served crawl captures lean on br heavily;
     a WET pass without it quarantines a growing slice of the web.
     Grouping shuffle = shard assignment; map-only decode."""
     from yark_spark.operators.multimodal import (

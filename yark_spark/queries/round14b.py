@@ -1,10 +1,8 @@
 """Round-14 session-3 operator batch: the brotli COMPLETION campaign
-(the RFC 7932 static dictionary and UTF8/SIGNED context tables turned
-out to be extractable from the container's real C brotli — see
-scripts/extract_brotli_dict.py / extract_brotli_context.py — so the
-two round-14 "spec data with no in-container source" boundaries are
-CLOSED) plus the parquet page-codec matrix (BROTLI / LZ4_RAW / legacy
-Hadoop LZ4 both directions).
+(real third-party wire with static-dictionary references and
+UTF8/SIGNED context modes — ``operators/brotli`` decodes it through
+the C brotli pyarrow ships) plus the parquet page-codec matrix
+(BROTLI / LZ4_RAW / legacy Hadoop LZ4 both directions).
 
 Reference parity note: the reference archiver (SupBlizard/yark,
 768 LoC) stores fetched payloads opaquely; these keys extend the
@@ -462,15 +460,10 @@ def q_warc_http_brotli_real(spark, sf_dir):
     session 3): q_warc_http_brotli's cycle widened to % 9 — the ninth
     wire compresses the body with GENUINE C brotli at quality 11,
     whose streams lean on the RFC 7932 static dictionary and UTF8
-    context modeling. Round 14 session 2 held those back as typed
-    boundaries ("literal spec data with no in-container source"); the
-    premise was false — pyarrow.Codec('brotli') IS real brotli, and
-    one-command probe streams make it RETURN the dictionary
-    (122,784 bytes, 121 transforms) and the context tables (both
-    factorizations verified on all 65,536 (p1,p2) pairs). With the
-    extracted tables wired in, every real brotli stream q0–q11
-    decodes byte-exactly (tests/test_brotli_static_dict.py), and this
-    key pins the full path — WARC record → HTTP head → chunked
+    context modeling. ``operators/brotli`` decodes through the same C library
+    (pyarrow's), so every real brotli stream q0–q11 decodes
+    byte-exactly (tests/test_brotli_static_dict.py), and this key pins
+    the full path — WARC record → HTTP head → chunked
     de-framing → real-brotli body → text digest — against the DuckDB
     oracle. Map-only decode; grouping shuffle = shard assignment."""
     from yark_spark.operators.multimodal import (
