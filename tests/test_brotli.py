@@ -80,10 +80,10 @@ def test_q0_q1_decode_fully():
 
 
 def test_uncompressed_and_metadata_metablocks():
-    from yark_spark.operators.brotli import _Writer
+    from yark_spark.operators.brotli import _BitsW
 
     # hand-built: uncompressed meta-block, metadata meta-block, empty last
-    w = _Writer()
+    w = _BitsW()
     w.write(0, 1)  # wbits 16
     # uncompressed meta-block "abc"
     w.write(0, 1)  # not last
@@ -91,23 +91,20 @@ def test_uncompressed_and_metadata_metablocks():
     for i in range(4):
         w.write((2 >> (4 * i)) & 0xF, 4)  # mlen-1 = 2
     w.write(1, 1)  # ISUNCOMPRESSED
-    blob = w.done()  # align happens at byte boundary
-    pad = (-len(blob) * 8 - 0) % 8
-    w2 = _Writer()
-    w2.buf = bytearray(blob)
-    data = bytes(w2.buf) + b"abc"
+    blob = w.flush()  # align happens at byte boundary
+    data = blob + b"abc"
     # metadata meta-block skipping 2 bytes, then empty last block
-    w3 = _Writer()
+    w3 = _BitsW()
     w3.write(0, 1)  # not last
     w3.write(3, 2)  # MNIBBLES pattern 3 → metadata
     w3.write(0, 1)  # reserved
     w3.write(1, 2)  # MSKIPBYTES = 1
     w3.write(1, 8)  # MSKIPLEN - 1 (RFC 7932 §9.2): skip 2 bytes
-    tail = w3.done() + b"XY"
-    w4 = _Writer()
+    tail = w3.flush() + b"XY"
+    w4 = _BitsW()
     w4.write(1, 1)  # ISLAST
     w4.write(1, 1)  # ISLASTEMPTY
-    stream = data + tail + w4.done()
+    stream = data + tail + w4.flush()
     assert brotli_decompress(stream) == b"abc"
 
 
@@ -119,7 +116,7 @@ def test_short_distance_codes_initial_ring():
 
     def craft(k):
         data = bytes(range(0x21, 0x21 + 40))
-        w = B._Writer()
+        w = B._BitsW()
         w.write(1, 1)
         w.write(5, 3)
         w.write(1, 1)
@@ -151,7 +148,7 @@ def test_short_distance_codes_initial_ring():
             B._put_code(w, c, ln)
         c, ln = dm[k]
         B._put_code(w, c, ln)
-        return w.done()
+        return w.flush()
 
     real = _real()
     want = {0: 4, 1: 11, 2: 15, 3: 16, 4: 3, 5: 5, 6: 2, 7: 6, 8: 1,

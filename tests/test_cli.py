@@ -48,6 +48,45 @@ def test_archive_and_lost_roundtrip(spark, tmp_path, store_dir, capsys):
     assert "bad" in out
 
 
+def _video(vid, n_comments):
+    return {
+        "id": vid,
+        "fulltitle": f"title {vid}",
+        "channel_id": "ch1",
+        "channel": "Chan",
+        "uploader_id": "u1",
+        "uploader": "U",
+        "duration": 5,
+        "tags": ["x"],
+        "comments": [
+            {
+                "id": f"{vid}-c{k}",
+                "author_id": f"a{k}",
+                "author": f"A{k}",
+                "text": f"comment {k}",
+                "author_is_uploader": False,
+                "parent": "root",
+                "timestamp": 1_700_000_000 + k,
+            }
+            for k in range(n_comments)
+        ],
+    }
+
+
+def test_archive_video_prints_committed_counts(spark, tmp_path, store_dir, capsys):
+    """The printed counts are the store's totals after the commit: a
+    second batch with one known and one new video adds only the new
+    video and its comments."""
+    first = tmp_path / "first.json"
+    first.write_text(json.dumps([_video("abcdefghij1", 3), _video("abcdefghij2", 2)]))
+    second = tmp_path / "second.json"
+    second.write_text(json.dumps([_video("abcdefghij2", 2), _video("abcdefghij3", 4)]))
+    assert cli.main(["archive-video", str(first), "--store", store_dir], spark=spark) == 0
+    assert capsys.readouterr().out == "archived: videos=2 comments=5\n"
+    assert cli.main(["archive-video", str(second), "--store", store_dir], spark=spark) == 0
+    assert capsys.readouterr().out == "archived: videos=3 comments=9\n"
+
+
 def test_history_command(spark, tmp_path, store_dir):
     p = tmp_path / "wh.json"
     p.write_text(

@@ -170,14 +170,15 @@ def test_compressed_block_fse_mode_hand_built():
     s0, bv, bn = enc.step(2, s_last)
     bw = _BitsW()
     for v, n in reversed([(s0, 5), (bv, bn)]):
-        bw.add(v, n)
+        bw.write(v, n)
+    bw.write(1, 1)  # end marker
     body = (
         b"\x10xy"                                   # raw literals, size 2
         + b"\x02"                                   # 2 sequences
         + bytes([(2 << 6) | (1 << 4) | (1 << 2)])   # LL=FSE, OF=RLE, ML=RLE
         + desc                                      # LL ncount description
         + b"\x00\x00"                               # OF RLE code 0, ML RLE code 0
-        + bw.close()
+        + bw.flush()
     )
     blocks = struct.pack("<I", 1 | (2 << 1) | (len(body) << 3))[:3] + body
     assert zstd_decompress(_frame(blocks, 8)) == b"xyyyyyyy"
@@ -410,8 +411,9 @@ def test_structured_dictionary_tables_reps_and_window():
         (0, 4),
     ]
     for v, n in reversed(reads):
-        bw.add(v, n)
-    body = lit_sec + b"\x01" + bytes([0xFC]) + bw.close()
+        bw.write(v, n)
+    bw.write(1, 1)  # end marker
+    body = lit_sec + b"\x01" + bytes([0xFC]) + bw.flush()
     blocks = struct.pack("<I", 1 | (2 << 1) | (len(body) << 3))[:3] + body
     frame = _dict_frame(blocks, 8, 77)
     out = zstd_decompress(frame, dictionary=d)

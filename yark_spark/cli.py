@@ -55,7 +55,10 @@ def cmd_archive_video(spark, args) -> int:
     tables = _load_store_tables(store)
     out = archive_batch(tables, read_infodicts(spark, args.path), force=args.force)
     _save(store, out, ("users", "channels", "videos", "tags", "video_tags", "comments"))
-    print(f"archived: videos={out['videos'].count()} comments={out['comments'].count()}")
+    # count the committed tables: ``out`` is still the lazy upsert graph,
+    # and counting it would run the whole graph again
+    videos, comments = store.read("videos").count(), store.read("comments").count()
+    print(f"archived: videos={videos} comments={comments}")
     return 0
 
 

@@ -26,7 +26,15 @@ crawl-ingest surface (SURVEY.md §2.8).
 
 from __future__ import annotations
 
-from yark_spark.operators.png import _limited_code_lengths
+from bisect import bisect_right
+
+from yark_spark.operators.png import (
+    _bits,
+    _BitsW,
+    _canon_codes,
+    _key_chains,
+    _limited_code_lengths,
+)
 
 __all__ = ["brotli_compress", "brotli_decompress"]
 
@@ -58,35 +66,6 @@ def brotli_decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Bit writer (LSB-first, per §2)
-# ---------------------------------------------------------------------------
-
-
-class _Writer:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def done(self) -> bytes:
-        if self.nbits:
-            self.buf.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.buf)
-
-
-# ---------------------------------------------------------------------------
 # Spec tables
 # ---------------------------------------------------------------------------
 
@@ -110,6 +89,9 @@ _COPY_BITS = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 7,
 # implicit-distance copies of (0,0) and (0,8))
 _CELL_INSERT = [0, 0, 8, 8, 0, 16, 8, 16, 16]
 _CELL_COPY = [0, 8, 0, 8, 16, 0, 16, 8, 16]
+_CELL = {
+    (i >> 3, c >> 3): k for k, (i, c) in enumerate(zip(_CELL_INSERT, _CELL_COPY))
+}
 # context mode LSB6 (§7.1)
 _LSB6 = 0
 
@@ -133,29 +115,22 @@ def _huff_lengths(freqs: dict[int, int]) -> dict[int, int]:
 
 def _canon_map(lens: dict[int, int]) -> dict[int, tuple[int, int]]:
     """{symbol: (code, length)} canonical over (length, symbol)."""
-    items = sorted((ln, s) for s, ln in lens.items() if ln > 0)
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    prev = 0
-    for ln, s in items:
-        code <<= ln - prev
-        prev = ln
-        out[s] = (code, ln)
-        code += 1
-    return out
+    dense = [0] * (max(lens) + 1)
+    for s, ln in lens.items():
+        dense[s] = ln
+    return {s: c for s, c in enumerate(_canon_codes(dense)) if c[1]}
 
 
 _CLC_WRITE = {0: (0b00, 2), 1: (0b1110, 4), 2: (0b110, 3), 3: (0b01, 2),
               4: (0b10, 2), 5: (0b1111, 4)}
 
 
-def _put_code(w: _Writer, code: int, ln: int) -> None:
-    for i in range(ln - 1, -1, -1):  # prefix codes write MSB first
-        w.write((code >> i) & 1, 1)
+def _put_code(w: _BitsW, code: int, ln: int) -> None:
+    w.parts.append(bin((1 << ln) | code)[:2:-1])  # prefix codes go MSB first
 
 
 def _write_prefix_code(
-    w: _Writer, lens: dict[int, int], alphabet: int
+    w: _BitsW, lens: dict[int, int], alphabet: int
 ) -> dict[int, tuple[int, int]]:
     """Serialize a prefix code and return the EFFECTIVE {sym: (code,
     length)} emission map — simple form for ≤4 symbols (whose template
@@ -243,61 +218,64 @@ def _write_prefix_code(
 
 
 def _lz77(data: bytes, window: int) -> list[tuple[int, bytes, int, int]]:
-    """Greedy hash-chain matcher → [(insert_len, literals, copy_len,
-    distance)]; the final command may carry copy_len 0."""
+    """Greedy hash-chain matcher over 4-byte keys, each chain holding a
+    key's 16 most recent positions → [(insert_len, literals, copy_len,
+    distance)]; the final command may carry copy_len 0. The chains come
+    from png's :func:`_key_chains` (every position enters its chain
+    before the matcher moves past it), so literal runs cost one
+    ``bytes.find``; the first candidate of 64+ bytes ends the search."""
     n = len(data)
-    table: dict[bytes, list[int]] = {}
     cmds: list[tuple[int, bytes, int, int]] = []
     lit_start = 0
-    i = 0
-    while i < n:
-        best_len = 0
-        best_dist = 0
-        if i + 4 <= n:
-            key = data[i : i + 4]
-            for j in reversed(table.get(key, ())):
+    if n >= 4:
+        starts, prev = _key_chains(data, 4, window)
+        i = starts.find(1)
+        while i >= 0:
+            limit = min(n - i, 16777216)
+            # a candidate beats the best so far only if it matches one
+            # byte more (the nearest one shares the 4-byte key)
+            best_len = 3
+            best_dist = 0
+            j = prev[i]
+            for _ in range(16):
                 dist = i - j
                 if dist > window:
                     break
-                ln = 4
-                while i + ln < n and ln < 16777216 and data[j + ln] == data[i + ln]:
-                    ln += 1
-                if ln > best_len:
+                if best_len == 3 or data.startswith(probe, j):
+                    # extend: 32-byte memcmp strides, per-byte tail
+                    ln = best_len + 1
+                    while (
+                        ln + 32 <= limit
+                        and data[j + ln : j + ln + 32] == data[i + ln : i + ln + 32]
+                    ):
+                        ln += 32
+                    while ln < limit and data[j + ln] == data[i + ln]:
+                        ln += 1
                     best_len, best_dist = ln, dist
-                    if ln >= 64:
+                    if ln >= 64 or ln == limit:
                         break
-        if best_len >= 4:
+                    probe = data[i : i + ln + 1]
+                j = prev[j]
             cmds.append((i - lit_start, data[lit_start:i], best_len, best_dist))
-            for k in range(i, min(i + best_len, n - 3)):
-                table.setdefault(data[k : k + 4], []).append(k)
-                chain = table[data[k : k + 4]]
-                if len(chain) > 16:
-                    del chain[0]
-            i += best_len
-            lit_start = i
-        else:
-            if i + 4 <= n:
-                table.setdefault(key, []).append(i)
-                if len(table[key]) > 16:
-                    del table[key][0]
-            i += 1
+            lit_start = i + best_len
+            i = starts.find(1, lit_start)
     if lit_start < n or not cmds:
         cmds.append((n - lit_start, data[lit_start:], 0, 0))
     return cmds
 
 
 def _insert_code(ln: int) -> tuple[int, int]:
-    for c in range(23, -1, -1):
-        if ln >= _INSERT_OFFSET[c]:
-            return c, ln - _INSERT_OFFSET[c]
-    raise ValueError("brotli-enc: bad insert length")
+    c = bisect_right(_INSERT_OFFSET, ln) - 1
+    if c < 0:
+        raise ValueError("brotli-enc: bad insert length")
+    return c, ln - _INSERT_OFFSET[c]
 
 
 def _copy_code(ln: int) -> tuple[int, int]:
-    for c in range(23, -1, -1):
-        if ln >= _COPY_OFFSET[c]:
-            return c, ln - _COPY_OFFSET[c]
-    raise ValueError("brotli-enc: bad copy length")
+    c = bisect_right(_COPY_OFFSET, ln) - 1
+    if c < 0:
+        raise ValueError("brotli-enc: bad copy length")
+    return c, ln - _COPY_OFFSET[c]
 
 
 def _cmd_symbol(ins_code: int, cp_code: int, implicit: bool) -> int:
@@ -307,22 +285,22 @@ def _cmd_symbol(ins_code: int, cp_code: int, implicit: bool) -> int:
         if ins_hi or cp_hi > 1:
             raise ValueError("brotli-enc: implicit cell out of range")
         return (cp_hi << 6) | low
-    for c in range(9):
-        if _CELL_INSERT[c] == ins_hi * 8 and _CELL_COPY[c] == cp_hi * 8:
-            return 128 + (c << 6) + low
-    raise ValueError("brotli-enc: no cell for command")
+    c = _CELL.get((ins_hi, cp_hi))
+    if c is None:
+        raise ValueError("brotli-enc: no cell for command")
+    return 128 + (c << 6) + low
 
 
 def _dist_symbol(distance: int) -> tuple[int, int, int]:
-    """(symbol, extra value, extra bits) with NPOSTFIX=0, NDIRECT=0."""
-    d = distance - 1
-    for nbits in range(1, 25):
-        for hbit in (0, 1):
-            base = ((2 + hbit) << nbits) - 4
-            if base <= d < base + (1 << nbits):
-                dcode = ((nbits - 1) << 1) | hbit
-                return 16 + dcode, d - base, nbits
-    raise ValueError("brotli-enc: distance out of range")
+    """(symbol, extra value, extra bits) with NPOSTFIX=0, NDIRECT=0:
+    ``distance + 3`` lies in ``[(2 + hbit) << nbits, (3 + hbit) <<
+    nbits)``, so its top two bits give ``nbits`` and ``hbit``."""
+    x = distance + 3
+    nbits = x.bit_length() - 2
+    if distance < 1 or nbits > 24:
+        raise ValueError("brotli-enc: distance out of range")
+    hbit = (x >> nbits) & 1
+    return 16 + (((nbits - 1) << 1) | hbit), x - ((2 + hbit) << nbits), nbits
 
 
 def brotli_compress(data: bytes, wbits: int = 22) -> bytes:
@@ -333,7 +311,7 @@ def brotli_compress(data: bytes, wbits: int = 22) -> bytes:
     data = bytes(data)
     if not 10 <= wbits <= 24 or wbits == 9:
         raise ValueError("brotli-enc: wbits out of range")
-    w = _Writer()
+    w = _BitsW()
     # window header
     if wbits == 16:
         w.write(0, 1)
@@ -351,18 +329,18 @@ def brotli_compress(data: bytes, wbits: int = 22) -> bytes:
     if not data:
         w.write(1, 1)  # ISLAST
         w.write(1, 1)  # ISLASTEMPTY
-        return w.done()
+        return w.flush()
     window = (1 << wbits) - 16
     chunk = 1 << 22
     for at in range(0, len(data), chunk):
         _compress_metablock(
             w, data[at : at + chunk], window, at + chunk >= len(data)
         )
-    return w.done()
+    return w.flush()
 
 
 def _compress_metablock(
-    w: _Writer, data: bytes, window: int, is_last: bool
+    w: _BitsW, data: bytes, window: int, is_last: bool
 ) -> None:
     cmds = _lz77(data, window)
     # token stream with implicit-distance substitution (repeat = ring[0])
@@ -429,18 +407,19 @@ def _compress_metablock(
     cmd_map = _write_prefix_code(w, cmd_lens, 704)
     dist_map = _write_prefix_code(w, dist_lens, 64)  # 16 + 0 + 48<<0
     # single-symbol codes carry (0, 0) — zero bits on the wire
+    lit_parts, cmd_parts, dist_parts = (
+        {s: bin((1 << ln) | code)[:2:-1] for s, (code, ln) in m.items()}
+        for m in (lit_map, cmd_map, dist_map)
+    )
+    parts = w.parts
     for (ic, ie, cc, ce, implicit, lits, dist, _cl), sym in zip(
         tokens, sym_cache
     ):
-        code, ln = cmd_map[sym]
-        _put_code(w, code, ln)
-        w.write(ie, _INSERT_BITS[ic])
-        w.write(ce, _COPY_BITS[cc])
-        for b in lits:
-            code, ln = lit_map[b]
-            _put_code(w, code, ln)
+        parts.append(cmd_parts[sym])
+        parts.append(_bits(ie, _INSERT_BITS[ic]))
+        parts.append(_bits(ce, _COPY_BITS[cc]))
+        parts += map(lit_parts.__getitem__, lits)
         if dist is not None:
             ds, extra, nbits = _dist_symbol(dist)
-            code, ln = dist_map[ds]
-            _put_code(w, code, ln)
-            w.write(extra, nbits)
+            parts.append(dist_parts[ds])
+            parts.append(_bits(extra, nbits))

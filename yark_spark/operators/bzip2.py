@@ -85,10 +85,11 @@ class _Writer:
             return
         self.acc = (self.acc << n) | (value & ((1 << n) - 1))
         self.nacc += n
-        while self.nacc >= 8:
-            self.nacc -= 8
-            self.buf.append((self.acc >> self.nacc) & 0xFF)
-        self.acc &= (1 << self.nacc) - 1
+        if self.nacc >= 8:  # move every whole byte out in one step
+            keep = self.nacc & 7
+            self.buf += (self.acc >> keep).to_bytes(self.nacc >> 3, "big")
+            self.acc &= (1 << keep) - 1
+            self.nacc = keep
 
     def getvalue(self) -> bytes:
         if self.nacc:  # zero-pad the final byte (stream end only)
@@ -277,8 +278,7 @@ def _encode_block(w: _Writer, raw: bytes) -> int:
     n_selectors = (len(symbols) + _GROUP_SIZE - 1) // _GROUP_SIZE
     w.write(n_groups, 3)
     w.write(n_selectors, 15)
-    for _ in range(n_selectors):
-        w.write(0, 1)  # selector MTF index 0 → unary '0'
+    w.write(0, n_selectors)  # every selector MTF index 0 → unary '0'
 
     freqs = [0] * alpha
     for s in symbols:
@@ -293,10 +293,12 @@ def _encode_block(w: _Writer, raw: bytes) -> int:
 
     # canonical codes under the bzip2 assignment: increasing length,
     # symbol order within a length — exactly the RFC 1951 rule
-    codes = _canon_codes(lens)
-    for s in symbols:
-        code, ln = codes[s]
-        w.write(code, ln)
+    codes = [
+        bin((1 << ln) | (code & ((1 << ln) - 1)))[3:] for code, ln in _canon_codes(lens)
+    ]
+    # all symbol codes as one write (EOB makes it non-empty)
+    bits = "".join(map(codes.__getitem__, symbols))
+    w.write(int(bits, 2), len(bits))
     return crc
 
 

@@ -43,8 +43,13 @@ partition exactly like the JPEG/WebP paths.
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
+from bisect import bisect_right
+from collections import Counter
+from itertools import accumulate, chain, compress, repeat
+from operator import add, and_
 
 import numpy as np
 
@@ -181,36 +186,34 @@ def zlib_decompress(
 
 
 # ---------------------------------------------------------------------------
-# DEFLATE — encoder side (stored + fixed-Huffman literal coding)
+# DEFLATE — encoder side (stored, fixed-Huffman literals, LZ77 + dynamic
+# Huffman) and the entropy-coding kernels brotli, bzip2 and zstd share
 # ---------------------------------------------------------------------------
 
 
 class _BitsW:
-    """LSB-first bit writer; ``code`` emits Huffman codes MSB-first."""
+    """LSB-first bit writer of the DEFLATE, brotli and zstd encoders:
+    ``write(value, nbits)`` appends the low ``nbits`` bits of ``value``
+    in one call. Each write is kept as the MSB-first binary string of
+    its value — read as one integer, an LSB-first stream has the writes,
+    last first, as its binary digits — so :meth:`flush` is a single
+    ``int(bits, 2).to_bytes`` that zero-pads the last byte. Hot loops
+    extend ``parts`` with precomputed strings (:func:`_code_strs`); a
+    string holding several writes lists them last first."""
+
+    __slots__ = ("parts",)
 
     def __init__(self) -> None:
-        self.acc = 0
-        self.n = 0
-        self.out = bytearray()
+        self.parts: list[str] = []
 
     def write(self, value: int, nbits: int) -> None:
-        self.acc |= (value & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def code(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
+        self.parts.append(bin((1 << nbits) | (value & ((1 << nbits) - 1)))[3:])
 
     def flush(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
+        bits = "".join(reversed(self.parts))
+        if not bits:
+            return b""
+        return int(bits, 2).to_bytes((len(bits) + 7) // 8, "little")
 
 
 def _deflate_stored(raw: bytes) -> bytes:
@@ -232,33 +235,42 @@ def _deflate_fixed_literals(raw: bytes) -> bytes:
     """One fixed-Huffman block, literals only (no LZ77 matches) + EOB —
     the minimal real-entropy-coded stream, enough to make an inflater's
     fixed path load-bearing in roundtrips."""
-    lengths = _fixed_lit_lengths()
-    # canonical codes via the RFC 1951 next_code construction
-    maxlen = max(lengths)
-    bl_count = [0] * (maxlen + 1)
-    for l in lengths:
-        bl_count[l] += 1
-    code = 0
-    next_code = [0] * (maxlen + 1)
-    for l in range(1, maxlen + 1):
-        code = (code + bl_count[l - 1]) << 1
-        next_code[l] = code
-    codes = []
-    for l in lengths:
-        codes.append((next_code[l], l))
-        next_code[l] += 1
+    strs = _code_strs(_fixed_lit_lengths())
     bw = _BitsW()
-    bw.write(1, 1)  # BFINAL
-    bw.write(1, 2)  # fixed
-    for b in raw:
-        c, l = codes[b]
-        bw.code(c, l)
-    c, l = codes[256]
-    bw.code(c, l)
+    bw.write(0b011, 3)  # BFINAL, fixed
+    bw.parts += map(strs.__getitem__, raw)
+    bw.parts.append(strs[256])
     return bw.flush()
 
 
-def _lz77_tokens(raw: bytes, max_chain: int = 128, start: int = 0):
+def _key_chains(raw: bytes, width: int, window: int) -> tuple[bytes, memoryview]:
+    """Hash chains of a greedy LZ77 matcher over ``width``-byte keys (3
+    or 4), computed up front. A matcher that inserts every position
+    into its key's chain before moving past it sees, at position ``i``,
+    every earlier position with ``i``'s key — so one stable numpy
+    argsort of the keys builds every chain: ``prev[i]`` is the nearest
+    earlier position with ``i``'s key (or one out of ``window``'s
+    reach), and ``starts[i]`` is 1 where that position is within
+    ``window``, i.e. where the greedy matcher finds a match. Needs
+    ``len(raw) >= width``."""
+    keyed = len(raw) - width + 1
+    # key at i: the little-endian u32 read at byte i (top byte masked
+    # for 3-byte keys)
+    keys = np.ndarray(
+        (keyed,), dtype="<u4", buffer=bytes(raw) + b"\0", strides=(1,)
+    ).copy()
+    if width == 3:
+        keys &= 0xFFFFFF
+    order = np.argsort(keys, kind="stable")
+    ordered = keys[order]
+    same = ordered[1:] == ordered[:-1]
+    link = np.full(keyed, -window - 1, dtype=np.int32)
+    link[order[1:][same]] = order[:-1][same]
+    starts = np.arange(keyed) - link <= window
+    return starts.tobytes(), memoryview(link)
+
+
+def _lz77_tokens(raw: bytes, max_chain: int = 128, start: int = 0) -> list:
     """Greedy LZ77 over the 32 KB window via 3-byte hash chains: a list
     of int literals and ``(length, distance)`` matches (3 <= length <=
     258, 1 <= distance <= 32768). ``max_chain`` bounds the candidates
@@ -269,213 +281,210 @@ def _lz77_tokens(raw: bytes, max_chain: int = 128, start: int = 0):
 
     Output is BYTE-IDENTICAL to the straightforward per-byte loop (the
     reference copy lives in tests/test_png.py and is compared across
-    payload classes); only the per-position work is vectorized — this
+    payload classes); the chains come from :func:`_key_chains`. This
     matcher is the per-task bill under every DEFLATE (PNG idat, gzip
     fixtures) and zstd entropy-block encode:
 
-    - the 3-byte chain keys are precomputed per 256K-position SEGMENT
-      with one numpy pass + ``tolist`` (a plain-int list lookup beats
-      three byte indexes + two shifts per position, and the covered
-      positions of a long match reuse the same materialized segment);
-    - match extension compares 32-byte windows (one C memcmp each)
-      before the per-byte tail, so a 258-byte match costs 8 compares.
+    - a position whose nearest earlier same-key position is missing or
+      more than 32 KB back is a literal, any other position starts a
+      match (its key guarantees >= 3 bytes), so literal runs are found
+      with one ``bytes.find`` and emitted as a slice;
+    - only match positions walk their chain; a candidate that cannot
+      beat the best so far is rejected by one ``startswith``, and match
+      extension compares 32-byte windows (one C memcmp each) before the
+      per-byte tail, so a 258-byte match costs 8 compares.
     """
+    if max_chain < 1:
+        raise ValueError("lz77: max_chain must be >= 1")
     n = len(raw)
+    if start >= n - 2:
+        return list(raw[start:])
+    starts, prev = _key_chains(raw, 3, 32768)
     tokens: list = []
-    head: dict[int, list[int]] = {}
-    last = n - 3  # final position with a full 3-byte key
-    seg_base = 0
-    seg_end = 0
-    keys: list = []
-    if last >= 0:
-        import numpy as np
-
-        a = np.frombuffer(raw, dtype=np.uint8)
-        u32 = np.uint32
-
-        def _seg(pos: int) -> None:
-            nonlocal seg_base, seg_end, keys
-            seg_base = pos
-            seg_end = min(pos + (1 << 18), last + 1)
-            keys = (
-                a[seg_base:seg_end].astype(u32)
-                | (a[seg_base + 1 : seg_end + 1].astype(u32) << u32(8))
-                | (a[seg_base + 2 : seg_end + 2].astype(u32) << u32(16))
-            ).tolist()
-
-        _seg(0)
-    for k in range(max(0, min(start, n - 2))):
-        if k >= seg_end:
-            _seg(k)
-        kk = keys[k - seg_base]
-        h = head.get(kk)
-        if h is None:
-            head[kk] = [k]
-        else:
-            h.append(k)
     i = start
     while i < n:
-        best_len = 0
+        c = starts.find(1, i)
+        if c < 0:
+            tokens += raw[i:]
+            break
+        if c > i:
+            tokens += raw[i:c]
+            i = c
+        limit = n - i if n - i < 258 else 258
+        # a candidate beats the best so far only if it matches one byte
+        # more: one startswith per candidate (the nearest one shares the
+        # 3-byte key, so it always opens the best match)
+        best_len = 2
         best_dist = 0
-        if i <= last:
-            if i >= seg_end or i < seg_base:
-                _seg(i)
-            key = keys[i - seg_base]
-            chain = head.get(key)
-            if chain:
-                limit = min(258, n - i)
-                for j in reversed(chain[-max_chain:]):
-                    if i - j > 32768:
-                        break
-                    if best_len:
-                        # a candidate can only beat the current best if
-                        # it matches through position best_len — one
-                        # 2-byte memcmp rejects it (exact filter: chain
-                        # keys are the literal 3 bytes, not a hash)
-                        if (
-                            raw[j + best_len - 1 : j + best_len + 1]
-                            != raw[i + best_len - 1 : i + best_len + 1]
-                        ):
-                            continue
-                    # extend (the 3-byte prefix is equal by key):
-                    # 32-byte memcmp strides, per-byte tail
-                    length = 3
-                    while (
-                        length + 32 <= limit
-                        and raw[j + length : j + length + 32]
-                        == raw[i + length : i + length + 32]
-                    ):
-                        length += 32
-                    while length < limit and raw[j + length] == raw[i + length]:
-                        length += 1
-                    if length > best_len:
-                        best_len = length
-                        best_dist = i - j
-                        if length == limit:
-                            break
-        if best_len >= 3:
-            tokens.append((best_len, best_dist))
-            # index every covered position so later matches can start here
-            end = min(i + best_len, n - 2)
-            k = i
-            while k < end:
-                if k >= seg_end:
-                    _seg(k)
-                kk = keys[k - seg_base]
-                h = head.get(kk)
-                if h is None:
-                    head[kk] = [k]
-                else:
-                    h.append(k)
-                k += 1
-            i += best_len
-        else:
-            if i <= last:
-                h = head.get(key)
-                if h is None:
-                    head[key] = [i]
-                else:
-                    h.append(i)
-            tokens.append(raw[i])
-            i += 1
+        j = prev[i]
+        for _ in range(max_chain):
+            if i - j > 32768:
+                break
+            if best_len == 2 or raw.startswith(probe, j):
+                # extend: 32-byte memcmp strides, per-byte tail
+                length = best_len + 1
+                while (
+                    length + 32 <= limit
+                    and raw[j + length : j + length + 32]
+                    == raw[i + length : i + length + 32]
+                ):
+                    length += 32
+                while length < limit and raw[j + length] == raw[i + length]:
+                    length += 1
+                best_len = length
+                best_dist = i - j
+                if length == limit:
+                    break
+                probe = raw[i : i + length + 1]
+            j = prev[j]
+        tokens.append((best_len, best_dist))
+        i += best_len
     return tokens
-
-
-def _sym_for(base_table: list[tuple[int, int]], value: int, first_sym: int):
-    """(symbol, extra_bits, extra_value) for a length/distance via the
-    generated base tables (largest base <= value)."""
-    lo, hi = 0, len(base_table) - 1
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if base_table[mid][0] <= value:
-            lo = mid
-        else:
-            hi = mid - 1
-    base, eb = base_table[lo]
-    return first_sym + lo, eb, value - base
 
 
 def _limited_code_lengths(freqs: list[int], maxlen: int) -> list[int]:
     """Package-merge: optimal length-limited prefix-code lengths for the
     nonzero entries of ``freqs`` (RFC 1951 caps literal/distance codes at
-    15 bits, the code-length code at 7)."""
-    syms = [s for s, f in enumerate(freqs) if f > 0]
+    15 bits, the code-length code at 7).
+
+    Each level's list is the leaves merged with the pairs of the level
+    below, sorted by (weight, symbol tuple), and a symbol's length is
+    how often it occurs in the first 2(n-1) items of the last level.
+    An item's weight is the sum of its symbols' frequencies, so two
+    items of equal weight never have one tuple a prefix of the other:
+    ties between a leaf and a pair are decided by their first symbols,
+    and the pairs of one level are already in tuple order. An item is
+    therefore the int ``weight << sh | first_symbol``, equal ints stand
+    for interchangeable pairs, and the lengths come from how many leaves
+    each level's selected prefix holds (leaves keep their sorted order
+    in every level). A level whose paired items equal those of the
+    level below repeats to the top, so building stops there."""
     out = [0] * len(freqs)
-    if not syms:
+    syms = list(compress(range(len(freqs)), freqs))
+    n = len(syms)
+    if n <= 1:
+        if n:
+            out[syms[0]] = 1
         return out
-    if len(syms) == 1:
-        out[syms[0]] = 1
-        return out
-    if len(syms) > (1 << maxlen):
+    if n > (1 << maxlen):
         raise ValueError("deflate: alphabet too large for length limit")
-    orig = sorted((freqs[s], (s,)) for s in syms)
-    prev = list(orig)
+    sh = len(freqs).bit_length()
+    low = (1 << sh) - 1
+    leaves = sorted([(freqs[s] << sh) | s for s in syms])
+    hi = repeat(~low)
+    levels = [leaves]
+    prev = leaves
     for _ in range(maxlen - 1):
-        packages = [
-            (prev[i][0] + prev[i + 1][0], prev[i][1] + prev[i + 1][1])
-            for i in range(0, len(prev) - 1, 2)
-        ]
-        prev = sorted(orig + packages)
-    for _, ss in prev[: 2 * (len(syms) - 1)]:
-        for s in ss:
-            out[s] += 1
+        # a pair's weight is the sum, its first symbol its left item's
+        cur = sorted(leaves + list(map(add, prev[0::2], map(and_, prev[1::2], hi))))
+        levels.append(cur)
+        paired = len(cur) & ~1
+        if paired == len(prev) & ~1 and cur[:paired] == prev[:paired]:
+            break  # same pairs as prev: every level above equals cur
+        prev = cur
+    # top down: the first m items of a level are its first j leaves and
+    # its first m - j pairs, which are the first 2(m - j) items below
+    picked = [0] * (n + 1)  # picked[j]: levels whose prefix holds j leaves
+    m = min(2 * n - 2, len(levels[-1]))
+    for items in chain(repeat(levels[-1], maxlen - len(levels)), reversed(levels)):
+        j = bisect_right(leaves, items[m - 1])
+        picked[j] += 1
+        m = 2 * (m - j)
+        if not m:
+            break
+    # leaf r is in the prefix of every level that holds more than r leaves
+    for leaf, ln in zip(reversed(leaves), accumulate(reversed(picked))):
+        out[leaf & low] = ln
     return out
 
 
 def _canon_codes(lengths: list[int]) -> list[tuple[int, int]]:
     """(code, length) per symbol under the RFC 1951 canonical
-    assignment (0 length -> (0, 0), never emitted)."""
-    maxlen = max(lengths) if lengths else 0
-    bl_count = [0] * (maxlen + 1)
-    for l in lengths:
-        if l:
-            bl_count[l] += 1
+    assignment — consecutive codes in (length, symbol) order, shifted
+    left once per length step (0 length -> (0, 0), never emitted)."""
+    out = [(0, 0)] * len(lengths)
     code = 0
-    next_code = [0] * (maxlen + 1)
-    for l in range(1, maxlen + 1):
-        code = (code + bl_count[l - 1]) << 1
-        next_code[l] = code
-    out = []
-    for l in lengths:
-        if l:
-            out.append((next_code[l], l))
-            next_code[l] += 1
-        else:
-            out.append((0, 0))
+    prev = 0
+    for s in sorted(compress(range(len(lengths)), lengths), key=lengths.__getitem__):
+        ln = lengths[s]
+        code <<= ln - prev
+        prev = ln
+        out[s] = (code, ln)
+        code += 1
     return out
 
 
-def _rle_lengths(lens: list[int]):
-    """RFC 1951 §3.2.7 RLE of the code-length vector: yields
+def _code_strs(lengths: list[int]) -> dict[int, str]:
+    """{symbol: :class:`_BitsW` part} for the used symbols of the
+    canonical prefix code with these lengths (the :func:`_canon_codes`
+    assignment): codes go on the wire MSB-first, so a part is the
+    code's bits reversed."""
+    out = {}
+    code = 0
+    prev = 0
+    for s in sorted(compress(range(len(lengths)), lengths), key=lengths.__getitem__):
+        ln = lengths[s]
+        code <<= ln - prev
+        prev = ln
+        out[s] = bin((1 << ln) | code)[:2:-1]
+        code += 1
+    return out
+
+
+#: runs _rle_lengths codes: >= 3 zeros (17/18), a length repeated >= 4
+#: times (the length, then 16s)
+_LEN_RUN = re.compile(rb"\x00{3,}|([^\x00])\1{3,}")
+
+
+def _rle_lengths(lens: list[int]) -> list[tuple[int, int, int]]:
+    """RFC 1951 §3.2.7 RLE of the code-length vector:
     (clc_symbol, extra_bits, extra_value) triples using 16 (copy prev
     3-6), 17 (zero-run 3-10), 18 (zero-run 11-138)."""
-    i = 0
-    n = len(lens)
-    while i < n:
-        v = lens[i]
-        run = 1
-        while i + run < n and lens[i + run] == v:
-            run += 1
-        i += run
+    b = bytes(lens)
+    out = []
+    pos = 0
+    for m in _LEN_RUN.finditer(b):
+        i, pos_end = m.span()
+        out += zip(b[pos:i], repeat(0), repeat(0))
+        pos = pos_end
+        v = b[i]
+        run = pos_end - i
         if v == 0:
             while run >= 11:
                 take = min(run, 138)
-                yield (18, 7, take - 11)
+                out.append((18, 7, take - 11))
                 run -= take
             if run >= 3:
-                yield (17, 3, run - 3)
+                out.append((17, 3, run - 3))
                 run = 0
-            for _ in range(run):
-                yield (0, 0, 0)
         else:
-            yield (v, 0, 0)
+            out.append((v, 0, 0))
             run -= 1
             while run >= 3:
                 take = min(run, 6)
-                yield (16, 2, take - 3)
+                out.append((16, 2, take - 3))
                 run -= take
-            for _ in range(run):
-                yield (v, 0, 0)
+        out += [(v, 0, 0)] * run
+    out += zip(b[pos:], repeat(0), repeat(0))
+    return out
+
+
+def _bits(value: int, nbits: int) -> str:
+    """:class:`_BitsW` part of ``value`` as an ``nbits``-bit field."""
+    return bin((1 << nbits) | value)[3:]
+
+
+#: DEFLATE length symbol per match length 3..258 (258 is symbol 285,
+#: not 284 + 31: the largest base <= the length wins), and the part of
+#: its extra bits
+_LEN_SYM = [0, 0, 0] + [
+    257 + bisect_right([b for b, _ in _LEN_TABLE], ln) - 1 for ln in range(3, 259)
+]
+_LEN_EXTRA = ["", "", ""] + [
+    _bits(ln - _LEN_TABLE[s - 257][0], _LEN_TABLE[s - 257][1])
+    for ln, s in enumerate(_LEN_SYM[3:], 3)
+]
+_DIST_BASES = [b for b, _ in _DIST_TABLE]
 
 
 def _deflate_dynamic(raw: bytes, max_chain: int = 128) -> bytes:
@@ -484,74 +493,56 @@ def _deflate_dynamic(raw: bytes, max_chain: int = 128) -> bytes:
     stream -> symbol frequencies -> package-merge length-limited codes
     (15-bit lit/dist, 7-bit code-length code) -> RFC 1951 §3.2.7 header
     (HLIT/HDIST/HCLEN, permuted CLC order, RLE 16/17/18) -> entropy-
-    coded body. Verified against stdlib zlib.decompress in
-    tests/test_png.py."""
-    tokens = list(_lz77_tokens(raw, max_chain=max_chain))
+    coded body. Each distinct token's bits (code + extra bits) are
+    built once and the body is one lookup per token. Verified against
+    stdlib zlib.decompress in tests/test_png.py."""
+    tokens = _lz77_tokens(raw, max_chain=max_chain)
+    counts = Counter(tokens)
     lit_freq = [0] * 286
     dist_freq = [0] * 30
     lit_freq[256] = 1  # EOB
-    enc: list[tuple] = []  # (lit_sym, eb, ev, dist_sym, deb, dev) | literals
-    for t in tokens:
-        if isinstance(t, tuple):
-            length, dist = t
-            ls, leb, lev = _sym_for(_LEN_TABLE, length, 257)
-            # symbol 284 tops out at 227+31=258, but 258 must use sym 285
-            if length == 258:
-                ls, leb, lev = 285, 0, 0
-            ds, deb, dev = _sym_for(_DIST_TABLE, dist, 0)
-            lit_freq[ls] += 1
-            dist_freq[ds] += 1
-            enc.append((ls, leb, lev, ds, deb, dev))
+    matches = {}
+    for t, c in counts.items():
+        if t.__class__ is int:
+            lit_freq[t] += c
         else:
-            lit_freq[t] += 1
-            enc.append(t)
+            ls = _LEN_SYM[t[0]]
+            ds = bisect_right(_DIST_BASES, t[1]) - 1
+            lit_freq[ls] += c
+            dist_freq[ds] += c
+            matches[t] = (ls, ds)
     lit_lens = _limited_code_lengths(lit_freq, 15)
     dist_lens = _limited_code_lengths(dist_freq, 15)
-    hlit = max(257, max(s for s, l in enumerate(lit_lens) if l) + 1)
-    used_dist = [s for s, l in enumerate(dist_lens) if l]
-    hdist = max(1, (used_dist[-1] + 1) if used_dist else 1)
-    lit_codes = _canon_codes(lit_lens)
-    dist_codes = _canon_codes(dist_lens)
+    hlit = next(s for s in range(285, 255, -1) if lit_freq[s]) + 1
+    hdist = next((s for s in range(29, 0, -1) if dist_freq[s]), 0) + 1
+    lit_strs = _code_strs(lit_lens)
+    dist_strs = _code_strs(dist_lens)
     # code-length code over the concatenated (trimmed) length vectors
-    all_lens = lit_lens[:hlit] + dist_lens[:hdist]
-    clc_syms = list(_rle_lengths(all_lens))
+    clc_syms = _rle_lengths(lit_lens[:hlit] + dist_lens[:hdist])
     clc_freq = [0] * 19
     for s, _, _ in clc_syms:
         clc_freq[s] += 1
     clc_lens = _limited_code_lengths(clc_freq, 7)
-    clc_codes = _canon_codes(clc_lens)
-    hclen = max(
-        4, max(i + 1 for i, s in enumerate(_CLC_ORDER) if clc_lens[s] > 0)
-    )
+    clc_strs = _code_strs(clc_lens)
+    clc_order_lens = [clc_lens[s] for s in _CLC_ORDER]
+    hclen = max(4, len(bytes(clc_order_lens).rstrip(b"\0")))
     bw = _BitsW()
-    bw.write(1, 1)  # BFINAL
-    bw.write(2, 2)  # dynamic
-    bw.write(hlit - 257, 5)
-    bw.write(hdist - 1, 5)
-    bw.write(hclen - 4, 4)
-    for i in range(hclen):
-        bw.write(clc_lens[_CLC_ORDER[i]], 3)
-    for s, eb, ev in clc_syms:
-        c, l = clc_codes[s]
-        bw.code(c, l)
-        if eb:
-            bw.write(ev, eb)
-    for t in enc:
-        if isinstance(t, tuple):
-            ls, leb, lev, ds, deb, dev = t
-            c, l = lit_codes[ls]
-            bw.code(c, l)
-            if leb:
-                bw.write(lev, leb)
-            c, l = dist_codes[ds]
-            bw.code(c, l)
-            if deb:
-                bw.write(dev, deb)
-        else:
-            c, l = lit_codes[t]
-            bw.code(c, l)
-    c, l = lit_codes[256]
-    bw.code(c, l)
+    # BFINAL, dynamic, HLIT, HDIST, HCLEN
+    bw.write(0b101 | (hlit - 257) << 3 | (hdist - 1) << 8 | (hclen - 4) << 13, 17)
+    bw.parts += [_bits(ln, 3) for ln in clc_order_lens[:hclen]]
+    bw.parts += [
+        _bits(ev, eb) + clc_strs[s] if eb else clc_strs[s] for s, eb, ev in clc_syms
+    ]
+    # a literal token is its symbol; a match is length code, length
+    # extra, distance code, distance extra — one part, last write first
+    emit = lit_strs
+    for t, (ls, ds) in matches.items():
+        dbase, deb = _DIST_TABLE[ds]
+        emit[t] = (
+            _bits(t[1] - dbase, deb) + dist_strs[ds] + _LEN_EXTRA[t[0]] + lit_strs[ls]
+        )
+    bw.parts += map(emit.__getitem__, tokens)
+    bw.parts.append(emit[256])
     return bw.flush()
 
 

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 import struct
 from bisect import bisect_right
+from functools import cache
+from itertools import starmap
 
-from yark_spark.operators.png import _limited_code_lengths, _lz77_tokens
+from yark_spark.operators.png import _bits, _BitsW, _limited_code_lengths, _lz77_tokens
 from yark_spark.operators.zstd import (
     _LL_DEFAULT,
     _LL_EXTRA,
@@ -34,27 +36,6 @@ from yark_spark.operators.zstd import (
 )
 
 __all__ = ["compress_block"]
-
-
-class _BitsW:
-    """LSB-first bit writer for the zstd backward-read streams: values
-    appear to the backward reader in reverse write order, each value
-    intact. ``close`` appends the 1-bit end marker."""
-
-    def __init__(self):
-        self.acc = 0
-        self.n = 0
-
-    def add(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self.acc |= (value & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-
-    def close(self) -> bytes:
-        self.acc |= 1 << self.n
-        self.n += 1
-        return self.acc.to_bytes((self.n + 7) // 8, "little")
 
 
 # ---------------------------------------------------------------------------
@@ -101,6 +82,14 @@ class _FseEncoder:
             if base <= next_state < base + (1 << nb):
                 return st, next_state - base, nb
         raise ValueError(f"zstd encode: no transition for symbol {sym}")
+
+
+@cache
+def _predefined_encoder(channel: str) -> _FseEncoder:
+    """Encoder over a channel's predefined distribution (a constant
+    table, built once per process)."""
+    default = {"ll": _LL_DEFAULT, "of": _OF_DEFAULT, "ml": _ML_DEFAULT}[channel]
+    return _FseEncoder(_FseTable.from_counts(*default))
 
 
 def _ll_code(ll: int) -> tuple[int, int, int]:
@@ -153,8 +142,7 @@ def _seq_body(seqs, lls, ofs, mls, tables) -> bytes:
     for shift, key, spec in ((6, "ll", tables["ll"]), (4, "of", tables["of"]),
                              (2, "ml", tables["ml"])):
         if spec is None:  # predefined
-            default = {"ll": _LL_DEFAULT, "of": _OF_DEFAULT, "ml": _ML_DEFAULT}[key]
-            encs[key] = _FseEncoder(_FseTable.from_counts(*default))
+            encs[key] = _predefined_encoder(key)
         elif spec[0] == "rle":
             modes |= 1 << shift
             descs.append(spec[1])
@@ -192,15 +180,15 @@ def _seq_body(seqs, lls, ofs, mls, tables) -> bytes:
             reads.append(chains["ml"][1][i])
             reads.append(chains["of"][1][i])
     bw = _BitsW()
-    for value, nbits in reversed(reads):
-        bw.add(value, nbits)
+    bw.parts += starmap(_bits, reversed(reads))
+    bw.write(1, 1)  # end marker
     if n < 128:
         head = bytes([n])
     elif n < 0x7F00:
         head = bytes([(n >> 8) + 128, n & 0xFF])
     else:
         head = bytes([255, n & 0xFF, (n - 0x7F00) >> 8])
-    return head + bytes([modes]) + bytes(descs) + bw.close()
+    return head + bytes([modes]) + bytes(descs) + bw.flush()
 
 
 def _encode_sequences(seqs: list[tuple[int, int, int]]) -> bytes | None:
@@ -268,11 +256,11 @@ def _huf_codes(weights: list[int]):
 def _huf_stream(segment: bytes, codes) -> bytes:
     """One huff0 stream: symbols encoded in REVERSE order so the
     backward reader decodes them forward."""
+    parts = {sym: _bits(c, nb) for sym, (c, nb) in codes.items()}
     bw = _BitsW()
-    for b in reversed(segment):
-        c, nb = codes[b]
-        bw.add(c, nb)
-    return bw.close()
+    bw.parts += map(parts.__getitem__, reversed(segment))
+    bw.write(1, 1)  # end marker
+    return bw.flush()
 
 
 def _compress_literals(lit: bytes) -> bytes:
@@ -594,9 +582,9 @@ def _fse_compress_weights(weights: list[int]) -> bytes | None:
         chain, j = (b1, idx // 2) if idx % 2 == 0 else (b2, idx // 2)
         reads.append(chain[1][j])
     bw = _BitsW()
-    for v, nb in reversed(reads):
-        bw.add(v, nb)
-    return desc + bw.close()
+    bw.parts += starmap(_bits, reversed(reads))
+    bw.write(1, 1)  # end marker
+    return desc + bw.flush()
 
 
 # ---------------------------------------------------------------------------
