@@ -6,7 +6,7 @@ under ``yark_spark/`` must come with a fresh 50x scale-lane result.
 
 Run from the repository root. Compares the working tree with
 ``<base-rev>``. Exits 1 when the diff adds or removes a line under
-``yark_spark/`` that matches ``persist|localCheckpoint|StorageLevel`` and
+``yark_spark/`` that matches ``persist|localCheckpoint|StorageLevel|.cache(`` and
 no ``SCALE_*_50x.json`` was added or changed since ``<base-rev>``
 (committed, in the working tree, or untracked); exits 0 otherwise.
 Materialization is where the 50x lane has caught what smaller runs did
@@ -20,7 +20,7 @@ import re
 import subprocess
 import sys
 
-MATERIALIZATION = re.compile(r"persist|localCheckpoint|StorageLevel")
+MATERIALIZATION = re.compile(r"persist|localCheckpoint|StorageLevel|\.cache\(")
 SCALE_50X = re.compile(r"(^|/)SCALE_[^/]*_50x\.json$")
 
 

@@ -1,5 +1,5 @@
 """scripts/check_materialization.py on a synthetic repository: a diff
-that touches persist/localCheckpoint/StorageLevel under yark_spark/
+that touches persist/localCheckpoint/StorageLevel/.cache( under yark_spark/
 fails until a SCALE_*_50x.json newer than the base revision exists."""
 
 import os
@@ -64,4 +64,9 @@ def test_materialization_diff_needs_a_fresh_50x_result(tmp_path):
     op.write_text("from pyspark import StorageLevel\n")
     _git(repo, "commit", "-qam", "storage level")
     op.write_text("def f(df):\n    return df\n")
+    assert _check(repo, "HEAD") == 1
+
+    # a lazy .cache() materializes too
+    _git(repo, "commit", "-qam", "plain")
+    op.write_text("def f(df):\n    return df.cache()\n")
     assert _check(repo, "HEAD") == 1

@@ -104,22 +104,24 @@ def test_local_cumsum_plan_is_range_partitioned_mapinpandas(spark):
 
 def test_release_cumsum_checkpoints_frees_tracked_blocks(spark):
     """partitioned_cumsum retains its checkpointed intermediate for the
-    session; release_cumsum_checkpoints() must free every tracked one
-    exactly once (second call is a no-op returning 0)."""
+    session, registered with operators.release; release_tracked() must
+    free it exactly once (a second call frees nothing)."""
     import pandas as pd
 
     from yark_spark.operators import packing
+    from yark_spark.operators.release import persisted_block_count, release_tracked
 
-    packing.release_cumsum_checkpoints()  # clean slate from earlier tests
+    release_tracked()  # clean slate from earlier tests
+    before = persisted_block_count(spark)
     pdf = pd.DataFrame({"k": range(50), "v": [1] * 50})
     df = spark.createDataFrame(pdf)
     out = packing.partitioned_cumsum(df, ["k"], "v", "cum", num_partitions=4)
     out.count()  # materialize the consumer before releasing
-    n = len(packing._CHECKPOINTED)
-    assert n >= 1
-    assert packing.release_cumsum_checkpoints() == n
-    assert packing.release_cumsum_checkpoints() == 0
-    assert packing._CHECKPOINTED == []
+    assert persisted_block_count(spark) >= before + 1
+    assert release_tracked() >= 1
+    assert persisted_block_count(spark) == before
+    assert release_tracked() == 0
+    assert persisted_block_count(spark) == before
 
 
 def test_global_row_number_and_ntile_match_window(spark):
@@ -248,10 +250,8 @@ def test_partitioned_cumsum_aqe_coalesce_preserves_adjacency(spark):
     single-partition cumsum."""
     from pyspark.sql import functions as F
 
-    from yark_spark.operators.packing import (
-        partitioned_cumsum,
-        release_cumsum_checkpoints,
-    )
+    from yark_spark.operators.packing import partitioned_cumsum
+    from yark_spark.operators.release import release_tracked
 
     prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.shuffle.partitions", "512")
@@ -271,4 +271,4 @@ def test_partitioned_cumsum_aqe_coalesce_preserves_adjacency(spark):
         assert got == want
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        release_cumsum_checkpoints()
+        release_tracked()

@@ -74,3 +74,67 @@ def test_release_tracked_frees_checkpoint_storage(spark):
     assert persisted_block_count(spark) == before + 1
     assert release_tracked() >= 1
     assert persisted_block_count(spark) == before
+
+
+#: Files under yark_spark/ (besides operators/release.py) that may name
+#: ``.persist(``, ``localCheckpoint(`` or ``StorageLevel``, each with the
+#: reason it cannot go through ``release.materialize``.
+MATERIALIZATION_ALLOW = {
+    "sources/takeout.py": (
+        "a LAZY DISK_ONLY persist of the raw corrupt-record scan, returned "
+        "to the caller as the quarantine handle it unpersists after both "
+        "splits are written — nothing is materialized here"
+    ),
+}
+
+
+def test_eager_materialization_goes_through_release():
+    """One storage policy: every eager persist/checkpoint under
+    yark_spark/ is ``release.materialize``, so the materialization
+    tokens appear only in operators/release.py and the allow-list."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "yark_spark"
+    token = re.compile(r"\.persist\(|localCheckpoint\(|StorageLevel")
+    found = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        if token.search(path.read_text())
+    }
+    assert found - {"operators/release.py"} == set(MATERIALIZATION_ALLOW), found
+    assert all(reason.strip() for reason in MATERIALIZATION_ALLOW.values())
+
+
+#: Every ``.cache()`` under yark_spark/ is LAZY — its first consumer's
+#: own action fills it, so counting it eagerly would add a job. Per
+#: file: how many, and why. An eager ``.cache()`` + ``count()`` belongs
+#: in ``release.materialize`` instead, so a new ``.cache()`` must be
+#: listed here.
+LAZY_CACHES = {
+    "operators/dedup.py": (1, "banded_pairs' bucket table, filled by the pair join"),
+    "operators/graph.py": (
+        3,
+        "PPR's masked reset vector (filled by its weight-sum probe), the "
+        "degree table (filled by the first iteration) and the between-"
+        "checkpoint iterates (filled by the L1 probe)",
+    ),
+    "operators/lm.py": (2, "per-document bucket counts, filled by the first rollup"),
+    "operators/unigram.py": (1, "the word table, filled by the seed pass"),
+    "queries/round8b.py": (1, "the bigram counts, filled by the query's action"),
+    "queries/round8c.py": (1, "the embedding table, filled by the query's action"),
+}
+
+
+def test_every_cache_call_is_a_listed_lazy_cache():
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "yark_spark"
+    found = {}
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        n = path.read_text().count(".cache()")
+        if n and rel != "operators/release.py":
+            found[rel] = n
+    assert found == {k: n for k, (n, _) in LAZY_CACHES.items()}, found
+    assert all(reason.strip() for _, reason in LAZY_CACHES.values())

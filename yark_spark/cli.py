@@ -137,6 +137,7 @@ def cmd_replay(spark, args) -> int:
     partition-parallel refetch → re-archive, end-to-end as DataFrames (the
     id set is never collected to the driver)."""
     from yark_spark.operators.archive import lost_ids, replay_lost
+    from yark_spark.operators.release import materialize, release_now
     from yark_spark.sources.fetch import fetch_infodicts, load_fetcher, parse_fetched
 
     store = _store(spark, args.store)
@@ -147,13 +148,15 @@ def cmd_replay(spark, args) -> int:
     # this each would re-run the (non-deterministic, networked) fetcher,
     # re-fetching every lost id ~10x and risking mutually inconsistent
     # table writes (ADVICE r2 #1).
-    fetched = fetch_infodicts(ids, load_fetcher(args.fetcher)).localCheckpoint()
+    fetched, _ = materialize(
+        fetch_infodicts(ids, load_fetcher(args.fetcher)), checkpoint=True
+    )
     raw, still_lost = parse_fetched(fetched)
     out, recovered = replay_lost(t, raw)
     store.commit_tables(out)  # all tables in one atomic snapshot flip
     print(f"recovered: {recovered.first()['recovered']}")
     print(f"still lost: {still_lost.count()}")
-    fetched.unpersist()
+    release_now(fetched)
     return 0
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yark_spark.io import local_frame
+from yark_spark.operators.release import materialize
 
 #: repo-wide tokenizer parity class (operators/dedup.tokens)
 _WS = r"[ \t\n\x0B\f\r]+"
@@ -147,11 +148,9 @@ def train_bpe_merges(
         )
         return local_frame(spark, merges_l, schema)
 
-    words = (
-        wf.select("freq", F.split("word", "").alias("seq"))
-        .persist()
-    )
-    n_words = words.count()  # materializes the cache AND sizes the loop
+    # the count materializes the cache AND sizes the loop
+    words, m = materialize(wf.select("freq", F.split("word", "").alias("seq")))
+    n_words = m["count"]
     merges: list[tuple[int, str, str, int]] = []
     # scoped clamp — single-threaded-session assumption documented in
     # operators/conf.py (ADVICE r10 low #1)
@@ -168,11 +167,10 @@ def train_bpe_merges(
                     break
                 l, r, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
                 merges.append((rank, l, r, n))
-                nxt = words.select(
-                    "freq", _apply_merge(F.col("seq"), l, r).alias("seq")
+                # materialize before dropping the previous table
+                nxt, _ = materialize(
+                    words.select("freq", _apply_merge(F.col("seq"), l, r).alias("seq"))
                 )
-                nxt = nxt.persist()
-                nxt.count()  # materialize before dropping the previous table
                 words.unpersist()
                 words = nxt
     finally:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yark_spark.operators.release import materialize
+
 
 def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
     """Attach each comment's thread root and depth.
@@ -50,8 +52,11 @@ def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
         # lineage compounds per level; truncating keeps the plan one level
         # deep (same driver-OOM guard as dedup_clusters — plans, not data,
         # are the risk at depth)
-        resolved = resolved.unionByName(step).localCheckpoint()
-        pending = pending.join(step.select("comment_id"), "comment_id", "left_anti").localCheckpoint()
+        resolved, _ = materialize(resolved.unionByName(step), checkpoint=True)
+        pending, _ = materialize(
+            pending.join(step.select("comment_id"), "comment_id", "left_anti"),
+            checkpoint=True,
+        )
 
     # orphans (parent points at a missing comment — corrupt input) surface
     # with root_id NULL rather than disappearing

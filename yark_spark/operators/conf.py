@@ -13,7 +13,10 @@ explicit and centralized here:
 
 **Single-threaded-session assumption**: operators using
 :func:`scoped_shuffle_partitions` (graph.pagerank / personalized_pagerank,
-bpe.train_bpe_merges, retrieval-index builds) assume no concurrent query
+dedup.dedup_clusters, curate.curate, bpe.train_bpe_merges,
+retrieval.association_rules) and every eager materialization
+(``release.materialize`` opens :func:`scoped_cached_plan_aqe`) assume no
+concurrent query
 is being PLANNED on the same SparkSession inside the scope. Every
 harness in this repo (driver_sim, bench.py, scale lanes, pytest) runs
 queries sequentially per session, so the assumption holds; a server
@@ -29,9 +32,10 @@ size exceeds the session width.
 site was reviewed for conversion to an explicit ``repartition(n, key)``
 (the q_asof_grouped fix generalized). Result: none qualifies. The
 surviving scopes each wrap a WHOLE multi-shuffle build — the
-dedup_clusters contraction levels, the pagerank/PPR iteration loops,
-the BPE per-rank loop, curate()'s stage pipeline, and the retrieval
-rule build (basket self-join + two aggregations) — where per-shuffle
+dedup_clusters contraction levels, the one PageRank iteration loop
+(``graph._iterate``, shared by both variants), the BPE per-rank loop,
+curate()'s stage pipeline, and the association-rule build (basket
+self-join + two aggregations) — where per-shuffle
 repartition would either demote map-side partial aggregation (the
 groupBy case above) or need to be re-applied inside every loop
 iteration, reintroducing the 200-tiny-task problem one level down.
@@ -64,20 +68,16 @@ def scoped_shuffle_partitions(spark, n: int) -> Iterator[None]:
 @contextmanager
 def scoped_cached_plan_aqe(spark) -> Iterator[None]:
     """Scope ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-    to ``true`` around a ``persist()`` + materializing action (round 18).
+    to ``true`` around a persist + materializing action (round 18; its
+    one caller is ``release.materialize``, whose module doc holds the
+    storage policy).
 
     The conf defaults to false, which PINS a cached plan's output
     partitioning: AQE cannot coalesce the exchanges inside the cached
     subtree, so under a vanilla 200-partition session a bulk edge build
     (join+distinct) materializes as 200 tiny tasks per shuffle. Setting
     it true at cacheQuery time keeps AQE active inside the cached plan —
-    the materialization is data-sized — while the storage stays the
-    compressed, EVICTABLE columnar cache. That storage class matters at
-    scale: materializing the same edge sets as row-block
-    ``localCheckpoint``s (deserialized UnsafeRow objects, non-evictable)
-    OOMed an 8g heap on the 50x deep-scale lane (~50M edges, 32
-    concurrent unrolls), and even serialized row blocks are several
-    times the columnar cache's footprint (guide §5).
+    the materialization is data-sized.
 
     Downstream consumers simply read the cached relation, so the only
     plans affected are those planned INSIDE the scope; same

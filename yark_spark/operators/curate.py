@@ -33,7 +33,7 @@ from yark_spark.operators.dedup import (
     fuzzy_dedup_pairs,
 )
 from yark_spark.operators.packing import partitioned_cumsum
-from yark_spark.operators.release import track
+from yark_spark.operators.release import materialize, track
 
 
 @dataclass
@@ -135,13 +135,12 @@ def _curate_impl(
     from pyspark.sql import Window
 
     w = Window.partitionBy("__fp").orderBy(id_col)
-    exact = (
+    exact, m = materialize(
         fp.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__fp")
-        .persist()
     )
-    report.counts["after_exact_dedup"] = exact.count()
+    report.counts["after_exact_dedup"] = m["count"]
 
     # 2. fuzzy dedup: LSH candidate pairs → clusters → one representative.
     # The pair/cluster stages run on the exact-deduped set (smaller input,
@@ -156,10 +155,10 @@ def _curate_impl(
         max_bucket=cfg.max_bucket,
     )
     clusters = dedup_clusters(exact, pairs, id_col)
-    fuzzy_frontier = dedup_representatives(exact, clusters, id_col).persist()
+    fuzzy_frontier, m = materialize(dedup_representatives(exact, clusters, id_col))
     report.cached.append(fuzzy_frontier)  # caller releases via report.unpersist()
     track(fuzzy_frontier)  # ...or a harness via release_tracked()
-    report.counts["after_fuzzy_dedup"] = fuzzy_frontier.count()
+    report.counts["after_fuzzy_dedup"] = m["count"]
     exact.unpersist()  # fuzzy frontier is materialized; downstream reads only it
     fuzzy = fuzzy_frontier
 
@@ -255,10 +254,10 @@ def _curate_impl(
     # doubles as the materialization action.
     redacted = kept.withColumn(text_col, redact_pii(F.col(text_col)))
     n_tok = F.size(F.split(F.col(text_col), "[ \\t\\n\\x0B\\f\\r]+"))
-    staged = redacted.withColumn("__ntok", n_tok).persist()
+    staged, m = materialize(redacted.withColumn("__ntok", n_tok))
     report.cached.append(staged)  # caller releases via report.unpersist()
     track(staged)  # ...or a harness via release_tracked()
-    report.counts["after_quality_filters"] = staged.count()
+    report.counts["after_quality_filters"] = m["count"]
     curated = (
         partitioned_cumsum(staged, [id_col], "__ntok", "__cum")
         .withColumn(

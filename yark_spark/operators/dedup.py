@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from yark_spark.operators.conf import observation_get
-from yark_spark.operators.release import track
+from yark_spark.operators.release import materialize, track
 
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
@@ -167,7 +166,7 @@ def banded_pairs(
         *carry,
         *kcols,
         F.posexplode(F.array(*kcols)).alias("band", "key"),
-    ).where(F.col("key").isNotNull()).persist()
+    ).where(F.col("key").isNotNull()).cache()
     track(buckets)  # freed by harnesses via release_tracked()
     # The bucket table is small but the join OUTPUT is huge (every in-bucket
     # pair). A broadcast join would generate all pairs from the probe side's
@@ -398,22 +397,14 @@ def dedup_clusters(
     # Materialize once: the top-level edge set is consumed twice
     # (min-neighbor agg and the contraction join) — without it, an
     # expensive upstream (the LSH pair join) would run once per
-    # consumer. Round 18 (revised): persist under scoped_cached_plan_aqe
-    # — the conf scope keeps AQE active inside the cached plan, so under
-    # a vanilla 200-partition session the upstream pair build no longer
-    # materializes as 200 tiny tasks per exchange, while storage stays
-    # the compressed, EVICTABLE columnar cache. The first r18 form
-    # (eager localCheckpoint) stored edges as row blocks, the pattern
-    # that OOMed the 50x deep-scale lane on the pagerank twin (guide §5;
-    # rationale in operators/conf.scoped_cached_plan_aqe).
-    from yark_spark.operators.conf import scoped_cached_plan_aqe
-
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    # consumer. Cached, not checkpointed (storage policy in
+    # operators/release).
+    edges, m = materialize(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
     )
-    with scoped_cached_plan_aqe(nodes.sparkSession):
-        edges = edges.persist()
-        n_edges = edges.count()
+    n_edges = m["count"]
     if stats is not None:
         stats["levels"] = 0
     # Partition-count hygiene (round 11, the q_pagerank pattern): every
@@ -449,8 +440,6 @@ def _pointer_double(
     Eager ``Dataset.localCheckpoint`` runs under a SQL execution, so
     observed metrics are collected by its action (pinned in
     tests/test_dedup_clusters.py)."""
-    from pyspark.sql import Observation
-
     for _ in range(max_rounds):
         if stats is not None:
             stats["pointer_rounds"] = stats.get("pointer_rounds", 0) + 1
@@ -458,38 +447,33 @@ def _pointer_double(
         # LEFT join: a label need not itself be a row of the label table
         # (e.g. an edge endpoint outside `nodes`); an inner join would DROP
         # such rows, violating the "every node labeled" contract — treat a
-        # foreign label as its own root instead
-        obs = Observation()
-        j = (
-            labels.join(parent, "label", "left")
-            .select("id", F.col("label").alias("__old"), F.coalesce("l2", "label").alias("label"))
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum((F.col("label") != F.col("__old")).cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-            .select("id", "label")
-            .localCheckpoint()
-        )
-        track(j)  # checkpoint storage freed by harnesses via release_tracked()
+        # foreign label as its own root instead.
+        # The fallback probe (ADVICE r17) runs only if a Spark upgrade
+        # stops collecting observed metrics under eager localCheckpoint:
+        # an explicit changed-row probe against the previous round.
         prev = labels
-        labels = j
-        # bounded wait (ADVICE r17): if a Spark upgrade stops collecting
-        # observed metrics under eager localCheckpoint, degrade to an
-        # explicit changed-row probe against the previous round instead
-        # of hanging on obs.get
-        changed = observation_get(
-            obs,
-            fallback=lambda: {
-                "changed": j.join(
+        labels, m = materialize(
+            labels.join(parent, "label", "left").select(
+                "id", F.col("label").alias("__old"), F.coalesce("l2", "label").alias("label")
+            ),
+            checkpoint=True,
+            observe={
+                "changed": F.coalesce(
+                    F.sum((F.col("label") != F.col("__old")).cast("long")), F.lit(0)
+                )
+            },
+            keep=["id", "label"],
+            fallback=lambda ck: {
+                "changed": ck.join(
                     prev.select("id", F.col("label").alias("__prev")), "id"
                 )
                 .where(F.col("label") != F.col("__prev"))
                 .limit(1)
                 .count()
             },
-        )["changed"]
+        )
+        track(labels)  # checkpoint storage freed by harnesses via release_tracked()
+        changed = m["changed"]
         if changed == 0:
             return labels
     return labels
@@ -503,10 +487,11 @@ def _components(
     if stats is not None:
         stats["levels"] = stats.get("levels", 0) + 1
     nbr_min = edges.groupBy("src").agg(F.min("dst").alias("m")).withColumnRenamed("src", "id")
-    labels = (
-        ids.join(nbr_min, "id", "left")
-        .select("id", F.least("id", F.coalesce("m", "id")).alias("label"))
-        .localCheckpoint()  # eager: materializes + truncates lineage
+    labels, _ = materialize(
+        ids.join(nbr_min, "id", "left").select(
+            "id", F.least("id", F.coalesce("m", "id")).alias("label")
+        ),
+        checkpoint=True,
     )
     track(labels)
     # flatten parent chains before contracting — without this a path graph
@@ -514,29 +499,24 @@ def _components(
     labels = _pointer_double(labels, stats=stats)
     if levels <= 1:
         return labels
-    from pyspark.sql import Observation
-
     la = labels.select(F.col("id").alias("src"), F.col("label").alias("la"))
     lb = labels.select(F.col("id").alias("dst"), F.col("label").alias("lb"))
     # The eager localCheckpoint's own action fires the Observation, so the
     # emptiness probe shares the materialization job instead of running a
     # second ``isEmpty()`` job against the checkpoint (same single-job
     # pattern as _pointer_double).
-    obs = Observation()
-    contracted = (
+    contracted, m = materialize(
         edges.join(la, "src")
         .join(lb, "dst")
         .where(F.col("la") != F.col("lb"))
         .select(F.col("la").alias("src"), F.col("lb").alias("dst"))
-        .distinct()  # symmetric in, symmetric out — both directions survive
-        .observe(obs, F.count(F.lit(1)).alias("n_edges"))
-        .localCheckpoint()
+        .distinct(),  # symmetric in, symmetric out — both directions survive
+        checkpoint=True,
+        observe={"n_edges": F.count(F.lit(1))},
+        fallback=lambda ck: {"n_edges": 0 if ck.isEmpty() else 1},
     )
     track(contracted)
-    n_edges_left = observation_get(
-        obs,
-        fallback=lambda: {"n_edges": 0 if contracted.isEmpty() else 1},
-    )["n_edges"]
+    n_edges_left = m["n_edges"]
     if n_edges_left == 0:
         return labels
     sub = _components(

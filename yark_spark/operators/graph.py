@@ -12,24 +12,27 @@ partial-agg groupBy on dst, shuffling on the same key each round. Lineage
 is truncated with an eager localCheckpoint every ``checkpoint_every``
 iterations (the dedup_clusters pointer-doubling pattern — without it the
 plan doubles per iteration and the optimizer itself becomes the
-bottleneck); intermediate vectors persist MEMORY_AND_DISK between
-checkpoints and are released as soon as their successor is materialized.
-The per-iteration L1-delta (and dangling-mass) aggregates are 1-row
-scalars — inherent to a convergence test, not a driver-side data loop.
+bottleneck); intermediate vectors are cached between checkpoints and
+released as soon as their successor is materialized. The per-iteration
+L1-delta (and dangling-mass) aggregates are 1-row scalars — inherent to
+a convergence test, not a driver-side data loop.
+
+Both variants share one edge prologue (:func:`_edge_tables`) and one
+iteration loop (:func:`_iterate`); they differ only in the base frame
+the contributions join onto, the teleport term and the dangling share.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+from typing import Iterator
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from yark_spark.operators.conf import scoped_cached_plan_aqe, scoped_shuffle_partitions
-from yark_spark.operators.release import (
-    _unpersist_checkpoint_rdds,
-    release_now,
-    track,
-)
+from yark_spark.operators.conf import scoped_shuffle_partitions
+from yark_spark.operators.packing import sized_coalesce
+from yark_spark.operators.release import materialize, release_now, track
 
 
 def pagerank(
@@ -54,244 +57,26 @@ def pagerank(
     ``max_iters`` iterations — the fixed-iteration oracle twin
     (q_pagerank) is this operator at ``tol=0, max_iters=3,
     dangling=False``. The returned ranks DataFrame is materialized in
-    BOTH modes (the last persisted iterate in convergence mode, an eager
+    BOTH modes (the last cached iterate in convergence mode, an eager
     localCheckpoint in fixed mode) so every iteration input is released
     before return; the result is registered with
     ``yark_spark.operators.release`` — call ``.unpersist()`` (or
     ``release_tracked()`` from a harness) when done.
     """
-    # In CONVERGENCE mode the edge list and degree table feed every one
-    # of up-to-max_iters iterations — persist them once instead of
-    # re-evaluating their upstream plan (often a join+distinct) per
-    # round. This now holds in BOTH modes (VERDICT r9 next-round #2):
-    # in fixed-iteration mode each unrolled level references e three
-    # times (contrib, degree, node-universe), so the lazy plan
-    # re-evaluates the upstream edge build 3^k-ish times — 64 s at
-    # sf0.01 for k=3 on the orders⋈lineitem graph vs ~4 s persisted.
-    # Bench honesty (the r9 worry: the SQL cache manager serving an
-    # identical re-built plan from a previous run's cache) is preserved
-    # by RELEASING the inputs before return — fixed mode eagerly
-    # localCheckpoints the final vector so nothing stays in the cache
-    # manager afterwards; re-runs recompute from the sources.
-    spark = edges.sparkSession
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # Round 18 (revised): materialize the edge build as persist+count
-    # UNDER scoped_cached_plan_aqe. The conf scope keeps AQE active
-    # inside the cached plan, so under a vanilla 200-partition session
-    # the upstream edge build (often a join+distinct) no longer runs as
-    # 200 tiny tasks per shuffle — while the storage stays the
-    # compressed, evictable COLUMNAR cache. The first r18 form of this
-    # fix (eager localCheckpoint) stored edges as row blocks instead:
-    # deserialized-unroll UnsafeRow objects OOMed an 8g heap on the 50x
-    # deep-scale lane (~50M edges, 32 concurrent unrolls), and even
-    # serialized row blocks are several times the columnar footprint
-    # (guide §5). Pinned by
-    # tests/test_graph.py::test_edge_materialization_is_aqe_sized_columnar.
-    with scoped_cached_plan_aqe(spark):
-        e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = e.count()  # materializes the cache AND sizes the iterations
-    # Partition-count hygiene (VERDICT r9 #2, second half): at small
-    # graph sizes the session's full shuffle width is pure task-launch
-    # overhead for the per-iteration joins/aggs — AQE cannot re-coalesce
-    # under a cached/checkpointed relation, so clamp DOWN (never up) to
-    # ~1M edges per task, floored at the executor parallelism; restore
-    # the session conf on exit. At cluster scale n_edges/1M exceeds the
-    # session width and this is a no-op.
-    p = min(
-        conf_parts,
-        max(spark.sparkContext.defaultParallelism, int(n_edges // 1_000_000) + 1),
-    )
-    e_is_ckpt = False
-    if p * 4 <= e.rdd.getNumPartitions():
-        # repack only when the cached layout is badly over-fanned (rare
-        # now that AQE sizes the materialization). Cache read, no
-        # shuffle; the SERIALIZED level keeps the row blocks compact —
-        # the deserialized default is the 50x OOM hazard above.
-        packed = e.coalesce(p).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        e.unpersist()
-        e = packed
-        e_is_ckpt = True
-    # scoped clamp (single-threaded-session assumption documented in
-    # operators/conf.py — ADVICE r10 low #1)
-    with scoped_shuffle_partitions(spark, p):
-        return _pagerank_iterate(
-            e, e_is_ckpt, damp, tol, max_iters, checkpoint_every, dangling
-        )
-
-
-def _pagerank_iterate(
-    e: DataFrame,
-    e_is_ckpt: bool,
-    damp: float,
-    tol: float,
-    max_iters: int,
-    checkpoint_every: int,
-    dangling: bool,
-) -> tuple[DataFrame, int]:
-    """The iteration body of :func:`pagerank` — ``e`` arrives persisted
-    (or checkpointed, ``e_is_ckpt``) and partition-sized; the caller owns
-    the shuffle conf and restores it after the eager materialization
-    here."""
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    total = float(nodes.count())  # inherent scalar: the |V| normalizer
-    pr = nodes.select("node", F.lit(1.0 / total).alias("pr"))
-    pr_is_ckpt = False
-    if tol > 0:
-        pr = pr.localCheckpoint(eager=True)
-        pr_is_ckpt = True
-    iters_run = 0
-    for i in range(max_iters):
-        contrib = (
-            e.join(pr, e.src == pr.node)
-            .join(deg, "src")
-            .select(F.col("dst").alias("node"), (F.col("pr") / F.col("d")).alias("c"))
-        )
-        summed = nodes.join(
-            contrib.groupBy("node").agg(F.sum("c").alias("s")), "node", "left"
-        )
-        if dangling:
-            # dangling mass as a broadcast 1-row aggregate (zero rows on
-            # graphs where every node has out-degree)
-            dang = (
-                pr.join(deg, pr.node == deg.src, "left_anti")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-            )
-            new = summed.crossJoin(F.broadcast(dang)).select(
-                "node",
-                (
-                    F.lit((1 - damp) / total)
-                    + F.lit(damp)
-                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("dm") / F.lit(total))
-                ).alias("pr"),
-            )
-        else:
-            new = summed.select(
-                "node",
-                (
-                    F.lit((1 - damp) / total)
-                    + F.lit(damp) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("pr"),
-            )
+    with _edge_tables(edges) as (e, deg, nodes):
+        nodes, m = materialize(nodes, keyed=True)
+        total = float(m["count"])  # inherent scalar: the |V| normalizer
+        pr = nodes.select("node", F.lit(1.0 / total).alias("pr"))
         if tol > 0:
-            # convergence mode: bound lineage (checkpoint every K rounds,
-            # persist between) and probe the L1 delta — the probe also
-            # materializes `new` before the predecessor's blocks release.
-            # On CHECKPOINT rounds the delta rides the materialization
-            # job as an Observation (round 18, VERDICT r17 #4 — the
-            # dedup_clusters single-job pattern): the previous iterate
-            # is joined in only to be observed and immediately projected
-            # away, so the checkpointed rows stay (node, pr) and the
-            # release discipline below is unchanged. Both sides carry
-            # exactly the node universe, so the inner join is row- and
-            # value-preserving.
-            new_is_ckpt = (i + 1) % checkpoint_every == 0
-            if new_is_ckpt:
-                from pyspark.sql import Observation
-
-                from yark_spark.operators.conf import observation_get
-
-                obs = Observation()
-                new = (
-                    new.join(
-                        pr.select("node", F.col("pr").alias("__prev")), "node"
-                    )
-                    .observe(
-                        obs,
-                        F.sum(F.abs(F.col("pr") - F.col("__prev"))).alias("l1"),
-                    )
-                    .select("node", "pr")
-                    .localCheckpoint(eager=True)
-                )
-                new_ck = new
-                old = pr
-                delta = observation_get(
-                    obs,
-                    fallback=lambda: {
-                        "l1": new_ck.alias("a")
-                        .join(old.alias("b"), F.col("a.node") == F.col("b.node"))
-                        .agg(
-                            F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("l1")
-                        )
-                        .first()["l1"]
-                    },
-                )["l1"]
-            else:
-                new = new.persist(StorageLevel.MEMORY_AND_DISK)
-                delta = (
-                    new.alias("a")
-                    .join(pr.alias("b"), F.col("a.node") == F.col("b.node"))
-                    .agg(F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("l1"))
-                    .first()["l1"]
-                )
-            # Release the superseded iterate. The checkpoint-RDD leaf
-            # walk is ONLY safe when pr is itself a localCheckpoint
-            # (its plan is then a single LogicalRDD of its own blocks).
-            # A merely-PERSISTED iterate's analyzed plan still reaches
-            # the coalesced localCheckpointed edge table / the chain's
-            # base checkpoint — walking those leaves would free blocks
-            # the next iteration's join still needs ("Checkpoint block
-            # not found", ADVICE r10 high).
-            if pr_is_ckpt:
-                release_now(pr)
-            else:
-                pr.unpersist()
-            pr = new
-            pr_is_ckpt = new_is_ckpt
-            iters_run = i + 1
-            if delta is not None and delta < tol:
-                break
-        else:
-            # tol=0: fixed-iteration mode (the oracle twin) — no
-            # convergence probes, but each iterate still materializes
-            # eagerly with its predecessor released at once: one deep
-            # k-iteration lazy chain evaluated at the end held every
-            # intermediate exchange live simultaneously and broke the
-            # single-JVM broadcast build at the 50x lane scale
-            prev = pr
-            pr = new.localCheckpoint(eager=True)
-            pr_is_ckpt = True
-            if i > 0:
-                # only release OUR per-iteration checkpoints: iteration
-                # 0's prev is the LAZY initial vector whose lineage
-                # reaches the persisted/checkpointed edge inputs —
-                # walking its leaves would free e's blocks mid-run
-                release_now(prev)
-            iters_run = i + 1
-    # the final iterate is materialized in BOTH modes (checkpoint, or
-    # the persisted last convergence iterate); release.track() lets
-    # harnesses free it after the caller's action (release_tracked())
-    track(pr)
-    nodes.unpersist()
-    # the returned ranks are materialized in BOTH modes
-    # (checkpoint/persist), so every iteration input releases before
-    # return — nothing is left in the SQL cache manager for a later
-    # identical plan to silently reuse
-    e.unpersist()
-    deg.unpersist()
-    if e_is_ckpt:
-        # the coalesce branch made e a localCheckpoint, whose RDD-level
-        # blocks e.unpersist() cannot free (ADVICE r10 medium). If the
-        # returned vector is its own checkpoint it has no lineage to e
-        # — free e's blocks now; otherwise (persisted-only final
-        # convergence iterate) defer to release_tracked() after the
-        # caller's action.
-        if pr_is_ckpt:
-            _unpersist_checkpoint_rdds(e)
-        else:
-            track(e)
-    return pr.select("node", "pr"), iters_run
+            pr, _ = materialize(pr, checkpoint=True)
+        try:
+            return _iterate(
+                e, deg, nodes, pr, tol > 0,
+                F.lit((1 - damp) / total), F.col("dm") / F.lit(total),
+                damp, tol, max_iters, checkpoint_every, dangling,
+            )
+        finally:
+            nodes.unpersist()
 
 
 def personalized_pagerank(
@@ -318,7 +103,7 @@ def personalized_pagerank(
     subtree plus measurement ordering, not the reset-vector build, as
     the gap.
 
-    Same execution shape as ``pagerank``'s convergence mode: persisted
+    Same execution shape as ``pagerank``'s convergence mode: cached
     edge/degree/weight tables, per-iteration edge-equi-join + partial-agg,
     localCheckpoint rotation every ``checkpoint_every`` rounds, 1-row
     L1-delta probes. ``tol=0.0`` runs exactly ``max_iters`` iterations
@@ -327,82 +112,98 @@ def personalized_pagerank(
     ranks are materialized and tracked by ``operators.release`` —
     ``.unpersist()`` (or ``release_tracked()``) when done."""
     rcols = reset.columns
+    with _edge_tables(edges) as (e, deg, nodes):
+        r = reset.select(
+            F.col(rcols[0]).alias("node"), F.col(rcols[1]).cast("double").alias("__rw")
+        )
+        # normalize over GRAPH-RESIDENT seeds only (round 10): a seed absent
+        # from the edge list can't receive teleport mass, and normalizing by
+        # the raw reset total would silently leak that mass every iteration
+        # — this way the stationary vector still sums to 1
+        masked = (
+            nodes.join(r, "node", "left")
+            .select("node", F.coalesce(F.col("__rw"), F.lit(0.0)).alias("__rw"))
+            .cache()
+        )
+        try:
+            wsum = float(masked.agg(F.sum("__rw")).first()[0])
+            if wsum <= 0.0:
+                raise ValueError(
+                    "personalized_pagerank: reset puts no mass on graph nodes"
+                )
+            wdf = masked.select("node", (F.col("__rw") / F.lit(wsum)).alias("__w"))
+            pr, _ = materialize(
+                wdf.select("node", F.col("__w").alias("pr")), checkpoint=True
+            )
+            return _iterate(
+                e, deg, wdf, pr, True,
+                F.lit(1 - damp) * F.col("__w"), F.col("dm") * F.col("__w"),
+                damp, tol, max_iters, checkpoint_every, dangling,
+            )
+        finally:
+            masked.unpersist()
+
+
+@contextmanager
+def _edge_tables(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+    """The edge prologue of both variants: yields ``(e, deg, nodes)`` —
+    the cached edge list (read through ``packing.sized_coalesce``), its
+    lazily cached out-degree table and the (lazy) node universe — inside
+    a shuffle width sized to the graph, and frees the edge cache and
+    ``deg`` on exit.
+
+    The edge list and degree table feed every iteration in BOTH modes
+    (VERDICT r9 next-round #2): in fixed-iteration mode each unrolled
+    level references e three times (contrib, degree, node-universe), so
+    a lazy plan re-evaluated the upstream edge build (often a
+    join+distinct) 3^k-ish times — 64 s at sf0.01 for k=3 on the
+    orders⋈lineitem graph vs ~4 s cached. Releasing every input before
+    the caller returns keeps bench runs honest: nothing stays in the
+    SQL cache manager for a later identical plan to silently reuse."""
     spark = edges.sparkSession
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # persist+count under scoped_cached_plan_aqe so AQE sizes the edge
-    # build's exchanges while storage stays the compressed, evictable
-    # columnar cache (see pagerank() — the row-block localCheckpoint
-    # form OOMed the 50x deep-scale lane)
-    with scoped_cached_plan_aqe(spark):
-        e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = e.count()
-    # same partition-count hygiene as pagerank(): clamp the iteration
-    # shuffle width to the graph size, restore on exit
-    p = min(
-        conf_parts,
-        max(spark.sparkContext.defaultParallelism, int(n_edges // 1_000_000) + 1),
-    )
-    e_is_ckpt = False
-    if p * 4 <= e.rdd.getNumPartitions():
-        packed = e.coalesce(p).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        e.unpersist()
-        e = packed
-        e_is_ckpt = True
-    # scoped clamp (single-threaded-session assumption documented in
-    # operators/conf.py — ADVICE r10 low #1)
+    cached, m = materialize(edges.select("src", "dst"))
+    # Partition-count hygiene (VERDICT r9 #2, second half): at small
+    # graph sizes the session's full shuffle width is pure task-launch
+    # overhead for the per-iteration joins/aggs — clamp DOWN (never up)
+    # to ~1M edges per task, floored at the executor parallelism, and
+    # restore the session conf on exit (single-threaded-session
+    # assumption documented in operators/conf.py — ADVICE r10 low #1).
+    # At cluster scale the clamp is a no-op.
+    e, p = sized_coalesce(cached, m["count"])
     with scoped_shuffle_partitions(spark, p):
-        return _ppr_iterate(
-            e, e_is_ckpt, reset, rcols, damp, tol, max_iters, checkpoint_every,
-            dangling,
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).cache()
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
+        try:
+            yield e, deg, nodes
+        finally:
+            cached.unpersist()
+            deg.unpersist()
 
 
-def _ppr_iterate(
+def _iterate(
     e: DataFrame,
-    e_is_ckpt: bool,
-    reset: DataFrame,
-    rcols: list,
+    deg: DataFrame,
+    base: DataFrame,
+    pr: DataFrame,
+    pr_is_ckpt: bool,
+    teleport: Column,
+    share: Column,
     damp: float,
     tol: float,
     max_iters: int,
     checkpoint_every: int,
     dangling: bool,
 ) -> tuple[DataFrame, int]:
-    """Iteration body of :func:`personalized_pagerank` — ``e`` arrives
-    persisted (or checkpointed, ``e_is_ckpt``) and partition-sized; the
-    caller owns the shuffle conf."""
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    r = reset.select(
-        F.col(rcols[0]).alias("node"), F.col(rcols[1]).cast("double").alias("__rw")
-    )
-    # normalize over GRAPH-RESIDENT seeds only (round 10): a seed absent
-    # from the edge list can't receive teleport mass, and normalizing by
-    # the raw reset total would silently leak that mass every iteration
-    # — this way the stationary vector still sums to 1
-    masked = (
-        nodes.join(r, "node", "left")
-        .select("node", F.coalesce(F.col("__rw"), F.lit(0.0)).alias("__rw"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    wsum = float(masked.agg(F.sum("__rw")).first()[0])
-    if wsum <= 0.0:
-        masked.unpersist()
-        raise ValueError("personalized_pagerank: reset puts no mass on graph nodes")
-    wdf = masked.select("node", (F.col("__rw") / F.lit(wsum)).alias("__w"))
-    pr0 = wdf.select("node", F.col("__w").alias("pr")).localCheckpoint(eager=True)
-    pr = pr0
-    pr_is_ckpt = True
+    """The one iteration loop. Each round's contributions join onto
+    ``base`` (every node, with any columns ``teleport``/``share`` read);
+    the new rank is ``teleport + damp * (in-mass + dm * share)``, where
+    ``dm`` is the dangling mass (``share`` is unused when ``dangling`` is
+    off). ``pr`` is the initial vector, a checkpoint iff ``pr_is_ckpt``.
+    Runs inside the caller's shuffle-width scope."""
     iters_run = 0
     for i in range(max_iters):
         contrib = (
@@ -410,107 +211,87 @@ def _ppr_iterate(
             .join(deg, "src")
             .select(F.col("dst").alias("node"), (F.col("pr") / F.col("d")).alias("c"))
         )
-        summed = wdf.join(
+        summed = base.join(
             contrib.groupBy("node").agg(F.sum("c").alias("s")), "node", "left"
         )
         if dangling:
+            # dangling mass as a broadcast 1-row aggregate (zero rows on
+            # graphs where every node has out-degree)
             dang = pr.join(deg, pr.node == deg.src, "left_anti").agg(
                 F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm")
             )
             new = summed.crossJoin(F.broadcast(dang)).select(
                 "node",
                 (
-                    F.lit(1 - damp) * F.col("__w")
-                    + F.lit(damp)
-                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("dm") * F.col("__w"))
+                    teleport
+                    + F.lit(damp) * (F.coalesce(F.col("s"), F.lit(0.0)) + share)
                 ).alias("pr"),
             )
         else:
-            # sink-free graph: the dangling term is identically zero
             new = summed.select(
                 "node",
-                (
-                    F.lit(1 - damp) * F.col("__w")
-                    + F.lit(damp) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("pr"),
+                (teleport + F.lit(damp) * F.coalesce(F.col("s"), F.lit(0.0))).alias("pr"),
             )
-        if tol > 0:
-            # checkpoint rounds fold the L1 probe into the
-            # materialization job via an Observation — see
-            # _pagerank_iterate for the invariants
-            new_is_ckpt = (i + 1) % checkpoint_every == 0
-            if new_is_ckpt:
-                from pyspark.sql import Observation
-
-                from yark_spark.operators.conf import observation_get
-
-                obs = Observation()
-                new = (
-                    new.join(
-                        pr.select("node", F.col("pr").alias("__prev")), "node"
-                    )
-                    .observe(
-                        obs,
-                        F.sum(F.abs(F.col("pr") - F.col("__prev"))).alias("l1"),
-                    )
-                    .select("node", "pr")
-                    .localCheckpoint(eager=True)
-                )
-                new_ck = new
-                old = pr
-                delta = observation_get(
-                    obs,
-                    fallback=lambda: {
-                        "l1": new_ck.alias("a")
-                        .join(old.alias("b"), F.col("a.node") == F.col("b.node"))
-                        .agg(
-                            F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("l1")
-                        )
-                        .first()["l1"]
-                    },
-                )["l1"]
-            else:
-                new = new.persist(StorageLevel.MEMORY_AND_DISK)
-                delta = (
-                    new.alias("a")
+        delta = None
+        if tol <= 0:
+            # tol=0: fixed-iteration mode (the oracle twins) — no
+            # convergence probes, but each iterate still materializes
+            # eagerly with its predecessor released at once: one deep
+            # k-iteration lazy chain evaluated at the end held every
+            # intermediate exchange live simultaneously and broke the
+            # single-JVM broadcast build at the 50x lane scale
+            new, _ = materialize(new, checkpoint=True)
+            new_is_ckpt = True
+        elif (i + 1) % checkpoint_every == 0:
+            # convergence mode, checkpoint round: bound lineage, and let
+            # the L1 delta ride the materialization job as an Observation
+            # (round 18, VERDICT r17 #4 — the dedup_clusters single-job
+            # pattern). The previous iterate is joined in only to be
+            # observed and projected away, so the checkpointed rows stay
+            # (node, pr); both sides carry exactly the node universe, so
+            # the inner join is row- and value-preserving.
+            new, m = materialize(
+                new.join(pr.select("node", F.col("pr").alias("__prev")), "node"),
+                checkpoint=True,
+                observe={"l1": F.sum(F.abs(F.col("pr") - F.col("__prev")))},
+                keep=["node", "pr"],
+                fallback=lambda ck: {
+                    "l1": ck.alias("a")
                     .join(pr.alias("b"), F.col("a.node") == F.col("b.node"))
                     .agg(F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("l1"))
                     .first()["l1"]
-                )
-            # checkpoint-leaf walk only for iterates that ARE
-            # checkpoints; a persisted iterate's plan still reaches e's
-            # checkpoint blocks (ADVICE r10 high — see _pagerank_iterate)
-            if pr_is_ckpt:
-                release_now(pr)
-            else:
-                pr.unpersist()
-            pr = new
-            pr_is_ckpt = new_is_ckpt
-            iters_run = i + 1
-            if delta is not None and delta < tol:
-                break
+                },
+            )
+            delta = m["l1"]
+            new_is_ckpt = True
         else:
-            # tol=0: fixed-iteration oracle-twin mode (q_pagerank_
-            # personalized) — no convergence probes, but per-iteration
-            # eager materialization with prompt predecessor release
-            # (the deep-chain variant held every exchange live at once
-            # and broke the 50x lane's broadcast build). prev is always
-            # a checkpoint here (pr0 is one), so release_now is safe.
-            prev = pr
-            pr = new.localCheckpoint(eager=True)
-            pr_is_ckpt = True
-            release_now(prev)
-            iters_run = i + 1
-    track(pr)  # final iterate is materialized in both modes
-    e.unpersist()
-    deg.unpersist()
-    masked.unpersist()
-    if e_is_ckpt:
-        # free e's localCheckpoint RDD blocks (invisible to unpersist —
-        # ADVICE r10 medium): immediately when the returned vector is
-        # its own checkpoint, deferred via the registry otherwise
+            # between checkpoints: a lazy cache that the L1 probe itself
+            # materializes before the predecessor's blocks release
+            new = new.cache()
+            delta = (
+                new.alias("a")
+                .join(pr.alias("b"), F.col("a.node") == F.col("b.node"))
+                .agg(F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("l1"))
+                .first()["l1"]
+            )
+            new_is_ckpt = False
+        # Release the superseded iterate. The checkpoint-RDD leaf walk is
+        # ONLY safe when pr is itself a localCheckpoint (its plan is then
+        # a single LogicalRDD of its own blocks). A cached iterate's — or
+        # the lazy initial vector's — analyzed plan still reaches the
+        # chain's base checkpoint; walking those leaves would free blocks
+        # the next iteration's join still needs ("Checkpoint block not
+        # found", ADVICE r10 high).
         if pr_is_ckpt:
-            _unpersist_checkpoint_rdds(e)
+            release_now(pr)
         else:
-            track(e)
+            pr.unpersist()
+        pr, pr_is_ckpt = new, new_is_ckpt
+        iters_run = i + 1
+        if delta is not None and delta < tol:
+            break
+    # the final iterate is materialized in both modes (checkpoint, or the
+    # cached last convergence iterate); release.track() lets harnesses
+    # free it after the caller's action (release_tracked())
+    track(pr)
     return pr.select("node", "pr"), iters_run

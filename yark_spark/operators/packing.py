@@ -24,37 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-#: DataFrames localCheckpoint-ed by ``partitioned_cumsum`` this session.
-#: Checkpointed RDD blocks live in executor storage until released; a
-#: long-lived session (REPL, test suite, streaming driver) that builds many
-#: prefix sums should call :func:`release_cumsum_checkpoints` once the
-#: results have been fully materialized/persisted downstream.
-_CHECKPOINTED: list[DataFrame] = []
-
-
-def release_cumsum_checkpoints() -> int:
-    """Unpersist every checkpointed intermediate created by
-    ``partitioned_cumsum`` so far. ONLY call this after every DataFrame
-    returned by ``partitioned_cumsum`` / ``global_row_number`` has been
-    fully materialized (collected, written, or re-persisted) — the
-    returned plans read the checkpointed blocks on every evaluation.
-    Returns the number of intermediates released.
-
-    Round 10: ``DataFrame.unpersist()`` alone does NOT free a
-    localCheckpoint's storage (it only reaches the SQL cache manager;
-    the checkpoint is an RDD-level persist) — the backing RDD is now
-    unpersisted explicitly via the plan's LogicalRDD leaf."""
-    from yark_spark.operators.release import _unpersist_checkpoint_rdds
-
-    n = len(_CHECKPOINTED)
-    while _CHECKPOINTED:
-        df = _CHECKPOINTED.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            continue
-        _unpersist_checkpoint_rdds(df)
-    return n
+from yark_spark.operators.release import materialize, track
 
 
 def sized_partitions(spark, n_rows: int, rows_per_task: int = 1_000_000) -> int:
@@ -71,6 +41,23 @@ def sized_partitions(spark, n_rows: int, rows_per_task: int = 1_000_000) -> int:
         conf,
         max(spark.sparkContext.defaultParallelism, int(n_rows // rows_per_task) + 1),
     )
+
+
+def sized_coalesce(
+    df: DataFrame, n_rows: int, rows_per_task: int = 1_000_000
+) -> tuple[DataFrame, int]:
+    """``(view, p)`` for a materialized ``df`` of ``n_rows`` rows: ``p``
+    is :func:`sized_partitions`, and ``view`` reads ``df`` through a
+    narrow ``coalesce(p)`` when its stored layout is over-fanned (at
+    least 4x ``p`` partitions), else it is ``df`` itself. AQE cannot
+    re-coalesce a scan of stored data, so without this every shuffle
+    downstream would start from that many tiny map tasks. The view is
+    lazy: nothing is stored twice and the build is not re-run — release
+    ``df``, not the view."""
+    p = sized_partitions(df.sparkSession, n_rows, rows_per_task)
+    if p * 4 <= df.rdd.getNumPartitions():
+        return df.coalesce(p), p
+    return df, p
 
 
 def _local_cumsum(
@@ -172,9 +159,10 @@ def partitioned_cumsum(
     Side effects (by design — the correctness fix above requires them):
     calling this function runs a Spark job EAGERLY at plan-build time (the
     checkpoint materializes the partitioned cumsum), and the checkpointed
-    blocks stay in executor storage until :func:`release_cumsum_checkpoints`
-    is called or the session ends. Long-lived sessions that build many
-    prefix sums should release once downstream consumers are materialized.
+    blocks are registered with ``operators.release.track``: they stay in
+    executor storage until ``release_tracked()`` runs or the session ends.
+    Long-lived sessions that build many prefix sums should release once
+    downstream consumers are materialized.
     """
     return partitioned_cumsum_multi(
         df, order_cols, [value_col], [out_col], num_partitions
@@ -192,8 +180,8 @@ def partitioned_cumsum_multi(
     shuffle, one Arrow pass, one checkpoint for all of them (round 10;
     same contract and side effects as :func:`partitioned_cumsum`)."""
     local = _local_cumsum_multi(df, order_cols, value_cols, out_cols, num_partitions)
-    local = local.localCheckpoint(eager=True)
-    _CHECKPOINTED.append(local)
+    local, _ = materialize(local, checkpoint=True)
+    track(local)
 
     # partition total = SUM of the values, not max of the running sum —
     # they only coincide for non-negative values; a negative value_col

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yark_spark.operators.dedup import tokens
-from yark_spark.operators.release import track
+from yark_spark.operators.release import materialize, track
 
 
 def rrf_fuse(
@@ -133,38 +133,29 @@ def association_rules(
     materialized eagerly (localCheckpoint, tracked by
     ``operators/release``) — legitimate because the support filter
     bounds the rule set. Round 10: the same partition-count hygiene as
-    ``operators/graph`` — the cache pins 200-partition output under a
-    vanilla session (AQE cannot re-coalesce cached plans), so the five
+    ``operators/graph`` — under a vanilla 200-partition session the five
     downstream shuffles ran 200 tiny tasks each at small SF; the
     shuffle width is clamped to the basket-set size for the duration
     of the build and restored on exit (a no-op at cluster scale)."""
     from pyspark.sql import functions as F
 
-    from yark_spark.operators.release import release_now
+    from yark_spark.operators.conf import scoped_shuffle_partitions
+    from yark_spark.operators.packing import sized_coalesce
 
     spark = baskets.sparkSession
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    b = baskets.select(
-        F.col(basket_col).alias("__o"), F.col(item_col).alias("__i")
-    ).distinct()
-    b = b.cache()
-    n_rows = b.count()  # materializes the cache AND sizes the build
-    p = min(
-        conf_parts,
-        max(spark.sparkContext.defaultParallelism, int(n_rows // 2_000_000) + 1),
+    # the count materializes the cache AND sizes the build
+    b, m = materialize(
+        baskets.select(
+            F.col(basket_col).alias("__o"), F.col(item_col).alias("__i")
+        ).distinct()
     )
-    if p * 4 <= b.rdd.getNumPartitions():
-        packed = b.coalesce(p).localCheckpoint(eager=True)
-        b.unpersist()
-        b = packed
+    view, p = sized_coalesce(b, m["count"], 2_000_000)
     # scoped clamp — single-threaded-session assumption documented in
     # operators/conf.py (ADVICE r10 low #1)
-    from yark_spark.operators.conf import scoped_shuffle_partitions
-
     with scoped_shuffle_partitions(spark, p):
-        rules = track(_rules_plan(b, min_support).localCheckpoint(eager=True))
-    release_now(b)
-    return rules
+        rules, _ = materialize(_rules_plan(view, min_support), checkpoint=True)
+    b.unpersist()  # the rules checkpoint has cut its lineage to b
+    return track(rules)
 
 
 def _rules_plan(b, min_support: int):

@@ -274,7 +274,7 @@ def q_rfm_scores(spark, sf_dir):
         ntile_expr,
         sized_partitions,
     )
-    from yark_spark.operators.release import track
+    from yark_spark.operators.release import materialize, track
 
     o = load_table(spark, sf_dir, "orders")
     g = o.agg(F.max("o_orderdate").alias("mx"))
@@ -295,8 +295,9 @@ def q_rfm_scores(spark, sf_dir):
             "m_cents",
         )
     )
-    c = track(c.cache())
-    n_cust = c.count()
+    c, m = materialize(c)
+    track(c)
+    n_cust = m["count"]
     p = sized_partitions(spark, n_cust)
     c = global_row_number(c, ["r_days", "custkey"], "__rr", p)
     c = global_row_number(c, ["f", "custkey"], "__rf", p)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from yark_spark.io import load_table
-from yark_spark.operators.release import track
+from yark_spark.operators.release import materialize, track
 from yark_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -331,8 +331,11 @@ def q_ks_test(spark, sf_dir):
         F.count_if(F.col("event_type") == "click").alias("c1"),
         F.count_if(F.col("event_type") == "view").alias("c2"),
     )
-    s = track(s.cache())  # released by harnesses via release_tracked()
-    n_vals = s.count()  # materialize once; cumsum evaluates its subtree twice
+    # materialize once (cumsum evaluates its subtree twice); released by
+    # harnesses via release_tracked()
+    s, m = materialize(s)
+    track(s)
+    n_vals = m["count"]
     totals = s.agg(
         F.sum("c1").cast("bigint").alias("n1"), F.sum("c2").cast("bigint").alias("n2")
     )
@@ -444,8 +447,10 @@ def q_exact_median_global(spark, sf_dir):
         F.col("l_extendedprice").alias("v")
     )
     counts = li.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
-    counts = track(counts.cache())  # released by harnesses via release_tracked()
-    n_vals = counts.count()  # materializes the cache AND sizes the shuffle
+    # the count sizes the shuffle; released by harnesses via release_tracked()
+    counts, m = materialize(counts)
+    track(counts)
+    n_vals = m["count"]
     n = counts.agg(F.sum("c").cast("bigint").alias("n"))
     from yark_spark.operators.packing import sized_partitions
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from yark_spark.io import load_table
+from yark_spark.operators.release import materialize
 from yark_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -332,8 +333,8 @@ def q_triangle_count(spark, sf_dir):
         .filter(F.col("c") >= 2)
         .select("pa", "pb")
     )
-    e = e.persist()
-    n_edges = e.count()
+    e, m = materialize(e)
+    n_edges = m["count"]
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(
