@@ -12,6 +12,8 @@ an importable repo cwd (pandas-UDF workers resolve imports there):
     cd /tmp && python /root/repo/scripts/driver_sim.py [sf_dir] [key ...]
 
 Exit code 0 = every checked key matches (rows-only keys just run).
+Each key runs under its own Spark job group, and every ``--json`` row
+carries ``jobs``, the number of Spark jobs the key's run started.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
 
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
+    sc = spark.sparkContext
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -57,11 +60,13 @@ def main() -> int:
     window = [k for k in pool if not only or k in only]
     bad, rows_only = [], []
     timings: dict = {}
+    jobs: dict = {}
     results: dict = {}
     for key in window:
         import time as _time
 
         _t0 = _time.perf_counter()
+        sc.setJobGroup(key, key)
         try:
             a = qs[key](spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001 — report, don't abort the sweep
@@ -69,6 +74,10 @@ def main() -> int:
             bad.append(key)
             results[key] = {"status": "spark_error", "err": str(ex)[:200]}
             continue
+        finally:
+            jobs[key] = len(sc.statusTracker().getJobIdsForGroup(key))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         timings[key] = round(_time.perf_counter() - _t0, 2)
         # free any storage the key's operators tracked (graph checkpoints,
         # prefix-sum intermediates) so a 236-key sweep doesn't accumulate
@@ -141,6 +150,8 @@ def main() -> int:
         # across rounds without re-running on a matched box.
         from bench import calibration_multi_sec, calibration_sec
 
+        for key, row in results.items():
+            row["jobs"] = jobs[key]
         payload = {
             "calibration_sec": calibration_sec(),
             # round 16: the 32-process kernel too — single-thread alone

@@ -34,3 +34,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(name, fn)`` runs ``fn()`` under the job group ``name``
+    and returns ``(fn's result, number of Spark jobs it started)``."""
+    sc = spark.sparkContext
+
+    def run(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            out = fn()
+            jobs = sc.statusTracker().getJobIdsForGroup(name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(jobs)
+
+    return run

@@ -68,6 +68,39 @@ def test_deterministic(spark, curated):
     assert a == b
 
 
+def test_distributed_routes_give_same_rows_and_counts(spark, curated, monkeypatch):
+    """With the driver-local cap forced below every size, the cluster
+    stage runs the Boruvka contraction and the pack offsets run
+    partitioned_cumsum: rows and report counts match the default run."""
+    from yark_spark.operators import packing
+
+    corpus, out, report = curated
+    monkeypatch.setattr(packing, "LOCAL_MAX_ROWS", -1)
+    bench = load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < 5)
+    again, rep = curate(corpus, benchmark=bench.select("doc_id", "text"), config=CurationConfig())
+    cols = ["doc_id", "quality", "rep_ratio", "pack_bin"]
+    a = sorted(map(tuple, out.select(*cols).collect()))
+    b = sorted(map(tuple, again.select(*cols).collect()))
+    rep.unpersist()
+    assert a == b
+    assert rep.counts == report.counts
+
+
+def test_curate_pipeline_job_count(spark, sf_dir, count_jobs):
+    """Pin q_curate_pipeline's job count: it was 84 at this scale before
+    the driver-local cluster and prefix-sum routes, 31 after."""
+    from yark_spark.operators.release import release_tracked
+    from yark_spark.queries import QUERIES
+
+    rows, jobs = count_jobs(
+        "test_curate_pipeline_job_count",
+        lambda: QUERIES["q_curate_pipeline"](spark, sf_dir).collect(),
+    )
+    release_tracked()
+    assert rows
+    assert jobs <= 31, jobs
+
+
 def test_substring_filter_stage_drops_heavy_duplication(spark):
     """Optional stage 3.5 (round 7): with max_dup_span_frac set, a doc
     whose text is one long shared substring is dropped while distinct

@@ -1,17 +1,110 @@
 """Connected-component cluster resolution (operators/dedup.dedup_clusters)."""
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
+from yark_spark.operators import packing
 from yark_spark.operators.dedup import dedup_clusters, dedup_representatives
 
 
-def _clusters(spark, node_ids, edge_pairs):
-    nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
+def _clusters(spark, node_ids, edge_pairs, id_type="long"):
+    nodes = spark.createDataFrame([(i,) for i in node_ids], f"doc_id {id_type}")
     pairs = spark.createDataFrame(
-        edge_pairs or [(None, None)], "id_a long, id_b long"
+        edge_pairs or [(None, None)], f"id_a {id_type}, id_b {id_type}"
     ).filter(F.col("id_a").isNotNull())
     out = dedup_clusters(nodes, pairs, "doc_id")
     return {r.doc_id: r.cluster_id for r in out.collect()}, nodes, out
+
+
+@pytest.fixture(params=["local", "distributed"])
+def route(request, monkeypatch):
+    """Run a test through both dedup_clusters routes: the driver-side
+    union-find (default at test sizes) and the Boruvka contraction
+    (forced by a negative cap)."""
+    if request.param == "distributed":
+        monkeypatch.setattr(packing, "LOCAL_MAX_ROWS", -1)
+    return request.param
+
+
+def _bfs_labels(node_ids, edge_pairs):
+    """Reference: min id reachable from each node, by plain BFS."""
+    adj: dict = {}
+    for a, b in edge_pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for n in node_ids:
+        seen, todo = {n}, [n]
+        while todo:
+            for m in adj.get(todo.pop(), ()):
+                if m not in seen:
+                    seen.add(m)
+                    todo.append(m)
+        out[n] = min(seen)
+    return out
+
+
+def test_path_through_outside_endpoint_connects(spark, route):
+    """1 and 2 meet only through 9, which is not a node: 2's cluster is
+    1. The distributed route once cut such a path, because its
+    contraction dropped every edge with an unlabeled endpoint."""
+    got, _, _ = _clusters(spark, [1, 2], [(2, 9), (1, 9)])
+    assert got == {1: 1, 2: 1}
+
+
+def _random_graph(seed, n_nodes=300, id_space=320):
+    rng = random.Random(seed)
+    nodes = list(range(n_nodes))
+    pairs = [
+        (rng.randrange(id_space), rng.randrange(id_space))
+        for _ in range(rng.randrange(200, 600))
+    ]
+    pairs += [(a, a) for a, _ in pairs[:5]]  # self-loops
+    pairs += [(b, a) for a, b in pairs[:20]]  # reversed duplicates
+    pairs += pairs[20:30]  # exact duplicates
+    return nodes, pairs
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_routes_match_bfs_on_random_graphs(spark, route, seed):
+    """Self-loops, duplicate and reversed pairs, and endpoints outside
+    ``nodes`` (ids 300-319) — both routes give the BFS labels."""
+    nodes, pairs = _random_graph(seed)
+    got, _, _ = _clusters(spark, nodes, pairs)
+    assert got == _bfs_labels(nodes, pairs)
+
+
+def test_routes_match_bfs_on_string_ids(spark, route):
+    nodes, pairs = _random_graph(3, n_nodes=120, id_space=140)
+    key = "id{:03d}".format
+    nodes = [key(i) for i in nodes]
+    pairs = [(key(a), key(b)) for a, b in pairs]
+    got, _, _ = _clusters(spark, nodes, pairs, id_type="string")
+    assert got == _bfs_labels(nodes, pairs)
+
+
+def test_empty_pair_set_leaves_singletons(spark, route):
+    got, _, _ = _clusters(spark, [3, 1, 2], [])
+    assert got == {1: 1, 2: 2, 3: 3}
+
+
+def test_small_graph_job_count(spark, count_jobs):
+    """Pin the local route's job count: the pair-set build plus the
+    collect. The distributed route ran 24 jobs on this graph."""
+    nodes = spark.createDataFrame(
+        [(i,) for i in [1, 2, 3, 4, 10, 11, 20]], "doc_id long"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    )
+    got, jobs = count_jobs(
+        "test_small_graph_job_count",
+        lambda: dedup_clusters(nodes, pairs, "doc_id").collect(),
+    )
+    assert len(got) == 7
+    assert jobs <= 8, jobs
 
 
 def test_components_chain_and_singleton(spark):
@@ -72,6 +165,8 @@ def test_path_graph_levels_logarithmic(spark):
     labels = {r.doc_id: r.cluster_id for r in out.collect()}
     assert set(labels.values()) == {0}
     assert len(labels) == n
+    # stats= keeps the distributed route, whose depth it reports
+    assert stats["pointer_rounds"] > 0, stats
     # pointer doubling flattens the whole path inside level 1 (the parent
     # forest is the chain k -> k-1, depth n-1 -> ceil(log2) rounds); without
     # it the contraction needs n-1 LEVELS (the round-2 behavior)

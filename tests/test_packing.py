@@ -196,6 +196,35 @@ def test_partitioned_cumsum_multi_matches_chained_single(spark):
         assert got == exp, n
 
 
+def test_known_small_count_takes_window_route_with_same_sums(spark, count_jobs):
+    """Given ``n_rows`` at or under LOCAL_MAX_ROWS, the running sums come
+    from one lazy window over the narrow projection: the same values and
+    columns as the distributed plan (mixed signs, two sums, a null key),
+    every wide column kept, and no job until an action runs."""
+    import random
+
+    from yark_spark.operators.packing import partitioned_cumsum_multi
+
+    rng = random.Random(11)
+    ks = rng.sample(range(10_000), 400)
+    rows = [(k, rng.randint(-5, 9), rng.randint(0, 4), f"doc {k}") for k in ks]
+    rows.append((None, 3, 1, "no id"))
+    df = spark.createDataFrame(rows, "k long, v1 long, v2 long, text string")
+    dist = partitioned_cumsum_multi(df, ["k"], ["v1", "v2"], ["c1", "c2"], 4)
+    small, jobs = count_jobs(
+        "test_known_small_count_takes_window_route",
+        lambda: partitioned_cumsum_multi(
+            df, ["k"], ["v1", "v2"], ["c1", "c2"], n_rows=len(rows)
+        ),
+    )
+    assert jobs == 0
+    assert small.columns == dist.columns
+    assert "Window" in small._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(map(tuple, small.collect()), key=repr) == sorted(
+        map(tuple, dist.collect()), key=repr
+    )
+
+
 def test_shard_assignment_properties(spark):
     """Size-targeted binning (r11): shards are contiguous in order, and
     every shard except the last reaches the byte target before closing

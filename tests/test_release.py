@@ -36,6 +36,7 @@ LEAK_PRONE_KEYS = [
     "q_copurchase_rules",
     "q_curate_pipeline",
     "q_dsir_importance",  # r11: cached per-(doc,bucket) aggregate
+    "q_comments_tree",  # resolve_roots' per-level checkpoints
 ]
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yark_spark.operators.release import materialize
+from yark_spark.operators.release import materialize, release_now, track
 
 
 def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
@@ -24,6 +24,10 @@ def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
     comment_id. Terminates when no new rows resolve (convergence) or at
     max_depth (cycle guard — impossible under the reference's data model
     but cheap insurance against corrupt input).
+
+    Each level's checkpoints are freed as soon as the next level's exist;
+    the last level's are registered with ``release.track`` and back the
+    returned frame until ``release_tracked()`` runs.
     """
     base = comments.select("comment_id", "parent")
     resolved = base.filter(F.col("parent").isNull()).select(
@@ -34,6 +38,7 @@ def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
     pending = base.filter(F.col("parent").isNotNull())
 
     depth = 0
+    checkpointed = False  # resolved/pending are this function's checkpoints
     while depth < max_depth:
         depth += 1
         step = (
@@ -52,11 +57,18 @@ def resolve_roots(comments: DataFrame, max_depth: int = 20) -> DataFrame:
         # lineage compounds per level; truncating keeps the plan one level
         # deep (same driver-OOM guard as dedup_clusters — plans, not data,
         # are the risk at depth)
-        resolved, _ = materialize(resolved.unionByName(step), checkpoint=True)
-        pending, _ = materialize(
+        next_resolved, _ = materialize(resolved.unionByName(step), checkpoint=True)
+        next_pending, _ = materialize(
             pending.join(step.select("comment_id"), "comment_id", "left_anti"),
             checkpoint=True,
         )
+        if checkpointed:  # never free the caller's input
+            release_now(resolved)
+            release_now(pending)
+        resolved, pending, checkpointed = next_resolved, next_pending, True
+    if checkpointed:
+        track(resolved)
+        track(pending)
 
     # orphans (parent points at a missing comment — corrupt input) surface
     # with root_id NULL rather than disappearing

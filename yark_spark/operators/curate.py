@@ -8,15 +8,24 @@ features, redaction, gram building) fuses into the same scan under
 whole-stage codegen; the only shuffles are the ones the algorithms
 fundamentally need (content-hash dedup, LSH band join, cluster rounds,
 packing window). A CurationReport carries per-stage row counts computed
-from the same lazy graph, so observability costs one extra action, not one
-per stage.
+from the same lazy graph. The stage counts ride actions the pipeline runs
+anyway: each materialized frontier's count is its materializing action,
+and ``after_decontamination`` is an ``Observation`` on the decontaminated
+frame that the staged frontier's materialization fires.
+
+Small stages run small. The cluster stage resolves its near-dup graph on
+the driver when the pair count is at most ``packing.LOCAL_MAX_ROWS`` (see
+``dedup.dedup_clusters``), and the pack offsets get the staged frontier's
+known row count, with which ``packing.partitioned_cumsum`` picks its own
+route (one running-sum window over the narrow id/token-count projection
+at or under the cap, the range-partitioned prefix sum above it).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from yark_spark.functions.text import (
@@ -32,6 +41,7 @@ from yark_spark.operators.dedup import (
     dedup_representatives,
     fuzzy_dedup_pairs,
 )
+from yark_spark.operators.conf import observation_get
 from yark_spark.operators.packing import partitioned_cumsum
 from yark_spark.operators.release import materialize, track
 
@@ -132,8 +142,6 @@ def _curate_impl(
     # representative join) plus the stage counts would otherwise recompute
     # the window per action.
     fp = docs.withColumn("__fp", fingerprint(F.col(text_col)))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("__fp").orderBy(id_col)
     exact, m = materialize(
         fp.withColumn("__rn", F.row_number().over(w))
@@ -188,8 +196,12 @@ def _curate_impl(
     # 3. decontamination: drop docs overlapping the benchmark gram set
     # (broadcast array_intersect for small benchmarks, gram anti-join for
     # large suites — see operators/decontaminate)
+    # Counted by an Observation that the staged frontier's
+    # materialization below fires (or any earlier action over it): a
+    # count of its own would be one more job over the same rows.
+    decon_obs = decontaminated = None
     if benchmark is not None:
-        fuzzy = decontaminate(
+        decontaminated = decontaminate(
             fuzzy,
             benchmark,
             id_col=id_col,
@@ -197,7 +209,8 @@ def _curate_impl(
             n=cfg.decontaminate_ngram,
             mode=cfg.decontaminate_mode,
         )
-        report.counts["after_decontamination"] = fuzzy.count()
+        decon_obs = Observation()
+        fuzzy = decontaminated.observe(decon_obs, F.count(F.lit(1)).alias("n"))
 
     # 3.5 optional exact-substring span filter (Lee et al. 2022 shape):
     # drop docs whose duplicated-10-gram coverage exceeds the cap. Off by
@@ -245,9 +258,11 @@ def _curate_impl(
         )
 
     # 5. redact PII, then pack into training-sequence bins (id-ordered
-    # concatenation layout). The running token count is a DISTRIBUTED
-    # prefix sum (range partition → per-partition cumsum → broadcast
-    # offsets), replacing round 2's single-task unpartitioned window.
+    # concatenation layout). The running token count is
+    # packing.partitioned_cumsum given the counted staged size: a
+    # DISTRIBUTED prefix sum (range partition → per-partition cumsum →
+    # broadcast offsets) above packing.LOCAL_MAX_ROWS rows, one narrow
+    # running-sum window at or under it.
     # The staged frontier is persisted: partitioned_cumsum evaluates its
     # input twice (offsets pass + probe side), and without the cache that
     # re-runs the decontaminate→quality→redact subtree; the stage count
@@ -257,9 +272,13 @@ def _curate_impl(
     staged, m = materialize(redacted.withColumn("__ntok", n_tok))
     report.cached.append(staged)  # caller releases via report.unpersist()
     track(staged)  # ...or a harness via release_tracked()
+    if decon_obs is not None:
+        report.counts["after_decontamination"] = observation_get(
+            decon_obs, fallback=lambda: {"n": decontaminated.count()}
+        )["n"]
     report.counts["after_quality_filters"] = m["count"]
     curated = (
-        partitioned_cumsum(staged, [id_col], "__ntok", "__cum")
+        partitioned_cumsum(staged, [id_col], "__ntok", "__cum", n_rows=m["count"])
         .withColumn(
             "pack_bin",
             F.floor(

@@ -363,12 +363,26 @@ def dedup_clusters(
     max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: connected components by
-    iterative min-label propagation. Returns (id, cluster_id) for every
-    node in ``nodes`` (singletons cluster with themselves); cluster_id =
-    min id reachable through the pair graph.
+    """Resolve near-dup PAIRS into CLUSTERS: connected components.
+    Returns (id, cluster_id) for every node in ``nodes`` (singletons
+    cluster with themselves); cluster_id = min id reachable through the
+    pair graph. Pair endpoints outside ``nodes`` are transit nodes: a
+    path through one connects its ends, and one may be a node's
+    cluster_id, but none gets a row of its own.
 
-    Boruvka-style star contraction with POINTER DOUBLING, not per-round
+    Two routes give the same labels, the component min id. The pair set
+    is materialized and counted once. At or under
+    ``packing.LOCAL_MAX_ROWS`` pairs with no ``stats`` requested, the
+    pairs are collected over Arrow and resolved by an exact union-find
+    on the driver (:func:`_local_components`) — curate's near-dup graph
+    is tens of thousands of pairs, where the distributed route below
+    costs dozens of jobs at a ~0.1 s floor each. Above the cap, or when
+    ``stats`` is passed, the distributed route runs: ``stats`` reports
+    that route's contraction depth, which a union-find does not have
+    (bench.py's path stress records it).
+
+    Distributed route: Boruvka-style star contraction with POINTER
+    DOUBLING, not per-round
     propagation over the raw edge set: LSH near-dup graphs are dominated by
     big cliques, where a single min-neighbor pass already collapses every
     clique to its min id. Each level (1) labels every node with min(self,
@@ -380,7 +394,8 @@ def dedup_clusters(
     inside ONE level; (3) contracts the graph to distinct cross-label
     edges — tiny after flattening; (4) recurses on the contracted graph and
     composes. Levels needed = O(log n) on any graph; ``max_iter`` bounds
-    them.
+    them. It runs over ``nodes`` ∪ the pair endpoints, so the
+    contraction's inner joins never drop an edge for an unlabeled end.
 
     Frontiers are ``localCheckpoint``-ed: an iterative join's LOGICAL PLAN
     compounds per level (persist caches data, not the plan), so without
@@ -393,38 +408,95 @@ def dedup_clusters(
     path-graph stress in bench.py records both; the log-bound assertion
     lives in tests/test_dedup_clusters.py).
     """
+    from yark_spark.operators import packing
+    from yark_spark.operators.conf import scoped_shuffle_partitions
+
     ids = nodes.select(F.col(id_col).alias("id")).distinct()
-    # Materialize once: the top-level edge set is consumed twice
-    # (min-neighbor agg and the contraction join) — without it, an
-    # expensive upstream (the LSH pair join) would run once per
-    # consumer. Cached, not checkpointed (storage policy in
-    # operators/release).
+    # Materialize once, one direction: every route reads the pair set
+    # more than once (the distributed one through the symmetric view
+    # below), and the upstream LSH pair join must run once — a cached
+    # symmetric union would evaluate it once per direction. Cached, not
+    # checkpointed (storage policy in operators/release).
     edges, m = materialize(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     n_edges = m["count"]
-    if stats is not None:
-        stats["levels"] = 0
-    # Partition-count hygiene (round 11, the q_pagerank pattern): every
-    # level runs several shuffles (min-neighbor agg, pointer-double
-    # self-joins, contraction distinct) over a frontier that never
-    # exceeds the edge count — under a vanilla 200-partition session
-    # each was fanning ~500 rows into 200 near-empty tasks, the
-    # dominant cost of q_curate_pipeline's 17.8 s sf0.01 parity row.
-    # No-op at cluster scale (clamp never raises the conf);
-    # single-threaded-session assumption documented in operators/conf.
-    from yark_spark.operators.conf import scoped_shuffle_partitions
-    from yark_spark.operators.packing import sized_partitions
-
-    spark = nodes.sparkSession
-    with scoped_shuffle_partitions(spark, sized_partitions(spark, n_edges)):
-        out = _components(ids, edges, max_iter, stats)
+    if stats is None and n_edges <= packing.LOCAL_MAX_ROWS:
+        out = _local_components(ids, edges)
+    else:
+        if stats is not None:
+            stats["levels"] = 0
+        sym = edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        universe = ids.unionByName(sym.select(F.col("src").alias("id"))).distinct()
+        # Partition-count hygiene (round 11, the q_pagerank pattern): every
+        # level runs several shuffles (min-neighbor agg, pointer-double
+        # self-joins, contraction distinct) over a frontier that never
+        # exceeds the edge count — under a vanilla 200-partition session
+        # each was fanning ~500 rows into 200 near-empty tasks, the
+        # dominant cost of q_curate_pipeline's 17.8 s sf0.01 parity row.
+        # No-op at cluster scale (clamp never raises the conf);
+        # single-threaded-session assumption documented in operators/conf.
+        spark = nodes.sparkSession
+        with scoped_shuffle_partitions(
+            spark, packing.sized_partitions(spark, 2 * n_edges)
+        ):
+            out = ids.join(_components(universe, sym, max_iter, stats), "id")
     # out's frontiers are checkpointed (lineage cut), so the cached edge
     # set can be dropped immediately
     edges.unpersist()
     return out.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
+
+
+def _local_components(ids: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, label) for every row of ``ids`` from an exact union-find over
+    the collected ``edges`` (src, dst; one direction suffices). Ids are
+    ranked by value before the union-find, so a union that keeps the
+    smaller root index keeps the smaller id: every root is its
+    component's min id, the label the distributed route computes. The
+    result is ``ids`` left-joined to a broadcast (non-root id → root)
+    table; an id in no pair is its own label."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    from yark_spark.io import local_frame
+
+    tbl = edges.toArrow()
+    src = tbl.column("src").combine_chunks()
+    dst = tbl.column("dst").combine_chunks()
+    uniq = pc.unique(pa.concat_arrays([src, dst]))
+    uniq = uniq.take(pc.sort_indices(uniq))
+    parent = list(range(len(uniq)))
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(
+        pc.index_in(src, value_set=uniq).to_pylist(),
+        pc.index_in(dst, value_set=uniq).to_pylist(),
+    ):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = np.fromiter(map(find, range(len(parent))), dtype=np.int64, count=len(parent))
+    moved = np.flatnonzero(roots != np.arange(len(parent)))
+    id_type = edges.schema["src"].dataType
+    mapping = local_frame(
+        ids.sparkSession,
+        list(zip(uniq.take(moved).to_pylist(), uniq.take(roots[moved]).to_pylist())),
+        StructType([StructField("id", id_type), StructField("root", id_type)]),
+    )
+    return ids.join(F.broadcast(mapping), "id", "left").select(
+        "id", F.coalesce("root", "id").alias("label")
+    )
 
 
 def _pointer_double(
