@@ -73,9 +73,10 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-side ``rows`` (tuples in ``schema`` order; ``schema`` a
-    StructType or DDL string) as a JVM-side relation: built through an
-    Arrow table, which Spark turns into a ``LocalRelation`` below
+    """Driver-side ``rows`` (tuples in ``schema`` order, or a pyarrow
+    Table whose columns are; ``schema`` a StructType or DDL string) as a
+    JVM-side relation: built through an Arrow table, which Spark turns
+    into a ``LocalRelation`` below
     ``spark.sql.execution.arrow.localRelationThreshold`` and into a JVM
     RDD above it. ``spark.createDataFrame(list)`` instead builds a
     Python-pickled RDD whose every scan runs Python-worker tasks, and an
@@ -94,14 +95,18 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    arrays = []
-    for field, values, atype in zip(schema.fields, columns, arrow.types):
-        if isinstance(field.dataType, TimestampType):
-            # to UTC first: pyarrow drops the offset of a non-UTC tzinfo
-            values = [v if v is None else v.astimezone(datetime.timezone.utc) for v in values]
-        arrays.append(pa.array(list(values), type=atype))
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+    if isinstance(rows, pa.Table):
+        table = pa.Table.from_arrays(rows.columns, names=arrow.names).cast(arrow)
+    else:
+        columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        arrays = []
+        for field, values, atype in zip(schema.fields, columns, arrow.types):
+            if isinstance(field.dataType, TimestampType):
+                # to UTC first: pyarrow drops the offset of a non-UTC tzinfo
+                values = [v if v is None else v.astimezone(datetime.timezone.utc) for v in values]
+            arrays.append(pa.array(list(values), type=atype))
+        table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def read_csv_source(spark: SparkSession, path: str, schema=None) -> DataFrame:

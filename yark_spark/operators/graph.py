@@ -6,9 +6,22 @@ graph surface; this is part of the driver-mandated training-data-pipeline
 inventory (SURVEY.md §2.8) — e.g. ranking pages/documents by link
 structure before sampling a pretraining mix.
 
-Scale posture: the rank vector is (node, double) — tiny next to the edge
-list — and every iteration is one equi-join of edges against ranks plus a
-partial-agg groupBy on dst, shuffling on the same key each round. Lineage
+Two routes, chosen by the edge count that the shared edge prologue
+(:func:`_edge_tables`) materializes anyway. At or under
+``packing.LOCAL_MAX_ROWS`` edges the edge list is collected once over
+Arrow and the power iteration runs on the driver in numpy
+(:func:`_local_ranks`): a graph that fits in memory is ranked faster by
+one thread than by a chain of ~0.1 s jobs (McSherry et al., "Scalability!
+But at what COST?", HotOS 2015). Its formulas, initial vector, dangling
+share and L1 stopping rule are the distributed loop's, so only the
+summation order differs (within the last bits of a double) and the
+iteration count is the same. Above the cap the distributed route below
+runs.
+
+Distributed route. Scale posture: the rank vector is (node, double) —
+tiny next to the edge list — and every iteration is one equi-join of
+edges against ranks plus a partial-agg groupBy on dst, shuffling on the
+same key each round. Lineage
 is truncated with an eager localCheckpoint every ``checkpoint_every``
 iterations (the dedup_clusters pointer-doubling pattern — without it the
 plan doubles per iteration and the optimizer itself becomes the
@@ -18,8 +31,9 @@ L1-delta (and dangling-mass) aggregates are 1-row scalars — inherent to
 a convergence test, not a driver-side data loop.
 
 Both variants share one edge prologue (:func:`_edge_tables`) and one
-iteration loop (:func:`_iterate`); they differ only in the base frame
-the contributions join onto, the teleport term and the dangling share.
+iteration loop per route (:func:`_local_ranks`, :func:`_iterate`); they
+differ only in the start vector, the teleport term and the dangling
+share.
 """
 
 from __future__ import annotations
@@ -30,8 +44,8 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yark_spark.operators import packing
 from yark_spark.operators.conf import scoped_shuffle_partitions
-from yark_spark.operators.packing import sized_coalesce
 from yark_spark.operators.release import materialize, release_now, track
 
 
@@ -62,8 +76,18 @@ def pagerank(
     before return; the result is registered with
     ``yark_spark.operators.release`` — call ``.unpersist()`` (or
     ``release_tracked()`` from a harness) when done.
+
+    That is the distributed route, taken above ``packing.LOCAL_MAX_ROWS``
+    edges. At or under the cap the ranks come from the driver-side numpy
+    loop (:func:`_local_ranks`, same iterations) as an Arrow-built local
+    relation with nothing left cached. An empty edge list gives an empty
+    ``(node, pr)`` frame and 0 iterations on either route.
     """
-    with _edge_tables(edges) as (e, deg, nodes):
+    with _edge_tables(edges) as (e, deg, nodes, n_edges):
+        # an empty graph has no ranks to iterate: the local route returns
+        # its empty frame whatever the cap
+        if n_edges <= packing.LOCAL_MAX_ROWS or not n_edges:
+            return _local_ranks(e, None, damp, tol, max_iters, dangling)
         nodes, m = materialize(nodes, keyed=True)
         total = float(m["count"])  # inherent scalar: the |V| normalizer
         pr = nodes.select("node", F.lit(1.0 / total).alias("pr"))
@@ -103,7 +127,14 @@ def personalized_pagerank(
     subtree plus measurement ordering, not the reset-vector build, as
     the gap.
 
-    Same execution shape as ``pagerank``'s convergence mode: cached
+    Two routes, as in :func:`pagerank`: at or under
+    ``packing.LOCAL_MAX_ROWS`` edges ``reset`` is collected too and the
+    driver-side numpy loop (:func:`_local_ranks`) runs; above the cap the
+    distributed loop below. On either route a reset with no mass on
+    graph nodes (an empty edge list included) raises ``ValueError``
+    before the first iteration, with nothing left cached.
+
+    The distributed route has ``pagerank``'s convergence-mode shape: cached
     edge/degree/weight tables, per-iteration edge-equi-join + partial-agg,
     localCheckpoint rotation every ``checkpoint_every`` rounds, 1-row
     L1-delta probes. ``tol=0.0`` runs exactly ``max_iters`` iterations
@@ -112,7 +143,9 @@ def personalized_pagerank(
     ranks are materialized and tracked by ``operators.release`` —
     ``.unpersist()`` (or ``release_tracked()``) when done."""
     rcols = reset.columns
-    with _edge_tables(edges) as (e, deg, nodes):
+    with _edge_tables(edges) as (e, deg, nodes, n_edges):
+        if n_edges <= packing.LOCAL_MAX_ROWS:
+            return _local_ranks(e, reset, damp, tol, max_iters, dangling)
         r = reset.select(
             F.col(rcols[0]).alias("node"), F.col(rcols[1]).cast("double").alias("__rw")
         )
@@ -126,7 +159,7 @@ def personalized_pagerank(
             .cache()
         )
         try:
-            wsum = float(masked.agg(F.sum("__rw")).first()[0])
+            wsum = masked.agg(F.coalesce(F.sum("__rw"), F.lit(0.0))).first()[0]
             if wsum <= 0.0:
                 raise ValueError(
                     "personalized_pagerank: reset puts no mass on graph nodes"
@@ -145,12 +178,16 @@ def personalized_pagerank(
 
 
 @contextmanager
-def _edge_tables(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
-    """The edge prologue of both variants: yields ``(e, deg, nodes)`` —
-    the cached edge list (read through ``packing.sized_coalesce``), its
-    lazily cached out-degree table and the (lazy) node universe — inside
-    a shuffle width sized to the graph, and frees the edge cache and
-    ``deg`` on exit.
+def _edge_tables(
+    edges: DataFrame,
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, int]]:
+    """The edge prologue of both variants: yields ``(e, deg, nodes,
+    n_edges)`` — the cached edge list (read through
+    ``packing.sized_coalesce``), its lazily cached out-degree table, the
+    (lazy) node universe and the edge count that picks the route —
+    inside a shuffle width sized to the graph, and frees the edge cache
+    and ``deg`` on exit. The local route reads only ``e``; ``deg`` is
+    never filled there.
 
     The edge list and degree table feed every iteration in BOTH modes
     (VERDICT r9 next-round #2): in fixed-iteration mode each unrolled
@@ -169,7 +206,7 @@ def _edge_tables(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataF
     # restore the session conf on exit (single-threaded-session
     # assumption documented in operators/conf.py — ADVICE r10 low #1).
     # At cluster scale the clamp is a no-op.
-    e, p = sized_coalesce(cached, m["count"])
+    e, p = packing.sized_coalesce(cached, m["count"])
     with scoped_shuffle_partitions(spark, p):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).cache()
         nodes = (
@@ -178,10 +215,80 @@ def _edge_tables(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataF
             .distinct()
         )
         try:
-            yield e, deg, nodes
+            yield e, deg, nodes, m["count"]
         finally:
             cached.unpersist()
             deg.unpersist()
+
+
+def _local_ranks(
+    e: DataFrame,
+    reset: DataFrame | None,
+    damp: float,
+    tol: float,
+    max_iters: int,
+    dangling: bool,
+) -> tuple[DataFrame, int]:
+    """The small-graph route of both variants: ``(ranks, iterations_run)``
+    from one Arrow collect of the cached edges ``e`` and a numpy power
+    iteration on the driver. Nodes are indexed by ``pc.unique`` /
+    ``pc.index_in``, out-degree is a ``bincount`` of the source indices
+    and each round's in-mass one weighted ``bincount`` over the edges.
+    ``reset`` is None for :func:`pagerank` (uniform start, teleport
+    ``(1-d)/N``, dangling share ``dm/N``); for
+    :func:`personalized_pagerank` it is collected, normalized over the
+    graph's nodes and used as the start vector ``w``, teleport
+    ``(1-d)*w`` and dangling share ``dm*w``. The update, the dangling
+    mass and the L1 stopping rule are :func:`_iterate`'s term for term.
+    Returns a local relation ``(node, pr)`` with the edge id type."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from yark_spark.io import local_frame
+
+    tbl = e.toArrow()
+    src = tbl.column("src").combine_chunks()
+    dst = tbl.column("dst").combine_chunks()
+    uniq = pc.unique(pa.concat_arrays([src, dst]))
+    n = len(uniq)
+    si = pc.index_in(src, value_set=uniq).to_numpy()
+    di = pc.index_in(dst, value_set=uniq).to_numpy()
+    deg = np.bincount(si, minlength=n)
+    if reset is not None:
+        rcols = reset.columns
+        rt = reset.select(rcols[0], F.col(rcols[1]).cast("double")).toArrow()
+        at = pc.index_in(rt.column(0), value_set=uniq)
+        hit = pc.is_valid(at)
+        w = np.bincount(
+            at.filter(hit).to_numpy(),
+            weights=pc.fill_null(rt.column(1), 0.0).filter(hit).to_numpy(),
+            minlength=n,
+        )
+        wsum = w.sum()
+        if not wsum > 0.0:
+            raise ValueError("personalized_pagerank: reset puts no mass on graph nodes")
+        w = w / wsum
+        pr, teleport = w, (1 - damp) * w
+    elif n:
+        pr, teleport = np.full(n, 1.0 / n), (1 - damp) / n
+    else:
+        max_iters = 0
+        pr = np.zeros(0)
+    sink = deg == 0
+    iters_run = 0
+    for i in range(max_iters):
+        s = np.bincount(di, weights=pr[si] / deg[si], minlength=n)
+        if dangling:
+            dm = pr[sink].sum()
+            s = s + (dm / n if reset is None else dm * w)
+        new = teleport + damp * s
+        delta = np.abs(new - pr).sum()
+        pr, iters_run = new, i + 1
+        if tol > 0 and delta < tol:
+            break
+    schema = f"node {e.schema['src'].dataType.simpleString()}, pr double"
+    return local_frame(e.sparkSession, pa.table({"node": uniq, "pr": pr}), schema), iters_run
 
 
 def _iterate(

@@ -75,9 +75,13 @@ def q_pagerank_personalized(spark, sf_dir):
 
     Thin wrapper over ``operators/graph.personalized_pagerank`` at
     ``tol=0, max_iters=3`` (the fixed-iteration oracle-twin mode added
-    this round); the production convergence mode is pinned against a
-    numpy reference in tests/test_graph.py. The DuckDB oracle unrolls
-    the same three iterations with the reset distribution in the CTE.
+    this round). As in q_pagerank, the operator collects the edge list
+    and the seeds and iterates on the driver in numpy at or under
+    ``packing.LOCAL_MAX_ROWS`` edges, and runs the distributed loop
+    above the cap; both routes and the convergence mode are pinned
+    against a numpy reference in tests/test_graph.py. The DuckDB oracle
+    unrolls the same three iterations with the reset distribution in the
+    CTE.
     Both edge directions are emitted, so the dangling term is
     identically zero and the two engines agree without it."""
     from yark_spark.operators.graph import personalized_pagerank

@@ -284,13 +284,17 @@ def q_pagerank(spark, sf_dir):
     Round 9: this key is now a thin wrapper over the REAL operator —
     ``operators/graph.pagerank`` at ``tol=0, max_iters=3, dangling=False`` (the
     fixed-iteration oracle twin; the dangling-mass term is identically
-    zero here because both edge directions are emitted). The production
+    zero here because both edge directions are emitted). The edge list
+    is materialized and counted once; at or under
+    ``packing.LOCAL_MAX_ROWS`` edges (118,782 at sf0.01) it is collected
+    and the three iterations run on the driver in numpy, and above the
+    cap (sf0.1 and up) as one edge join and partial aggregate per
+    iteration with each iterate checkpointed. The production
     convergence mode (L1 tolerance, localCheckpoint rotation every 5
-    iterations, dangling redistribution) is pinned against a numpy
-    power-iteration reference in tests/test_graph.py. The DuckDB oracle
-    unrolls the same three iterations as CTE layers. Scale: the rank
-    vector is (node, double) — tiny next to edges — and the join
-    shuffles on the edge key both engines agree on."""
+    iterations on the distributed route, dangling redistribution) and
+    both routes are pinned against a numpy power-iteration reference in
+    tests/test_graph.py. The DuckDB oracle unrolls the same three
+    iterations as CTE layers."""
     from pyspark.sql import functions as F
 
     from yark_spark.operators.graph import pagerank
